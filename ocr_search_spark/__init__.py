@@ -15,16 +15,24 @@ an idiomatic Spark engine:
 * checkpoint/lineage + resume, salted/size-bucketed skew handling.
 
 Layout:
+    jobs        — the job CLI (``__main__`` is the spark-submit entry file)
+    pipeline    — bucketed, resumable extraction + postings build
+    sync        — one source-tree poll: diff, doc-replace, cascade delete
+    api, server — the GET /pages contract and its stdlib HTTP server
     schemas     — fixed StructType schemas for all engine tables
     session     — SparkSession factory with scale-appropriate conf
+    deploy      — package zip for ``spark-submit --py-files``
     textproc    — the deterministic text-processing SPEC + vectorized impl
     corpus      — Spark-native deterministic synthetic corpus generator
     golden      — independent pure-Python oracle (tests only)
     storage     — parquet-backed tables with MERGE/DELETE emulation
-    operators/  — extract, tokenize, search, correlate, dedup, similarity,
-                  textstats, maintenance
-    plans/      — checkpoint/lineage + resume
-    streaming/  — incremental (Trigger.AvailableNow) ingest
+    storage_snapshots, mview — snapshot table format, materialized views
+    sources, sources_cdc — source readers and change feeds
+    operators/  — extract, convert, tokenize, search, boolquery,
+                  maintenance, correlate, and the web/graph/join extras
+    streaming/  — incremental (Trigger.AvailableNow) ingest and maintenance
+    training/   — document codecs, glyph OCR, and corpus-preparation
+                  operators (dedup, similarity, textstats, tokenizers)
 """
 
 __version__ = "0.1.0"

@@ -655,7 +655,7 @@ def match_terms_bm25_grid(
     )
     pts = sorted(set((int(a), int(b)) for a, b in grid))
     # .limit(|grid|) is a no-op (exactly that many rows) that PROVES the
-    # broadcast side bounded to the plan auditor (PLANLINT.md)
+    # broadcast side bounded to the plan auditor (tools/plan_lint.py)
     gdf = spark.createDataFrame(pts, "k1_e3 long, b_e3 long").limit(len(pts))
     j = (
         matched.join(F.broadcast(widf), "term")

@@ -62,16 +62,32 @@ def run_config_hash(
     ).hexdigest()[:16]
 
 
+def _has_committed_files(spark: SparkSession, path: str) -> bool:
+    """True iff ``path`` directly holds a committed data file. A missing
+    dir, or one holding only ``_temporary`` / ``_SUCCESS`` / hidden
+    entries (a writer that died before its first commit), has none."""
+    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)
+    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
+    if not fs.exists(jpath):
+        return False
+    return any(
+        st.isFile() and not st.getPath().getName().startswith(("_", "."))
+        for st in fs.listStatus(jpath)
+    )
+
+
 def read_done_buckets(
     spark: SparkSession, out_dir: str, run_id: str, config_hash: str
 ) -> set[int]:
-    """Buckets already committed for (run_id, config_hash). Raises if the
-    run_id was previously checkpointed under a different config — resuming
-    it would mix incompatible bucketing schemes."""
-    try:
-        cp = spark.read.parquet(f"{out_dir}/{CHECKPOINT_DIR}")
-    except Exception:
+    """Buckets already committed for (run_id, config_hash). Empty only when
+    no checkpoint file has been committed yet; a checkpoint that exists but
+    cannot be read raises instead of silently re-extracting every bucket.
+    Raises if the run_id was previously checkpointed under a different
+    config — resuming it would mix incompatible bucketing schemes."""
+    cp_dir = f"{out_dir}/{CHECKPOINT_DIR}"
+    if not _has_committed_files(spark, cp_dir):
         return set()
+    cp = spark.read.parquet(cp_dir)
     rows = (
         cp.where((F.col("run_id") == run_id) & (F.col("status") == "done"))
         .select("partition_id", "config_hash")

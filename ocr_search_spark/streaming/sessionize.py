@@ -1,9 +1,9 @@
 """Custom stateful streaming operator: inactivity-gap sessionization via
 ``applyInPandasWithState`` (SURVEY §2.6 "custom stateful operators").
 
-Semantics (the streaming twin of the batch window-function version in
-``__spark_entry__.q_events_sessionize``): events of a user belong to one
-session while consecutive event times are within ``gap``; a session
+Semantics (the streaming twin of a batch window-function
+sessionization): events of a user belong to one session while
+consecutive event times are within ``gap``; a session
 closes when the watermark passes its last event + gap (event-time
 timeout), emitting (user_id, session_start, session_end, n_events,
 sum_value).

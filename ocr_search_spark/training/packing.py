@@ -381,7 +381,7 @@ def mixture_token_plan(
 
     Scale shape: ``weights`` is a program literal — it enters the plan
     as Range(1) + inline of a literal struct array (visibly literal,
-    see session.literal_df / PLANLINT.md); ``source_tokens`` is the
+    see session.literal_df / tools/plan_lint.py); ``source_tokens`` is the
     (n_sources)-row aggregate the caller computes with one hash agg.
     The weights-preserving left join therefore moves mixture-cardinality
     rows only, never corpus rows — no hint needed (Spark cannot

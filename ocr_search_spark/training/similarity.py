@@ -950,9 +950,8 @@ def ranking_recall(
 ) -> DataFrame:
     """Per-query recall of a candidate ranking against a ground-truth
     ranking: (query, n_truth, n_hit, recall_e6) — the evaluation half
-    of the ANN stack (COVERAGE.md reports recall@5 numbers measured
-    ad hoc; this makes the measurement a first-class, replayable
-    operator a pipeline can gate deployments on).
+    of the ANN stack, as a replayable operator a pipeline can gate
+    deployments on.
 
     Exact arithmetic: recall_e6 = n_hit·1e6 DIV n_truth. Every query in
     ``truth`` appears in the output (zero hits → recall 0).

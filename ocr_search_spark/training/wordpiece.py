@@ -25,9 +25,8 @@ by word.
 
 Every step is deterministic at any parallelism (longest match is a
 max, ties impossible since lengths are distinct integers), and the
-walk is exactly replayable as a DuckDB recursive CTE over the same
-best-match relation — the oracle in __spark_entry__.py does precisely
-that.
+walk is exactly replayable as a recursive CTE over the same
+best-match relation.
 """
 
 from __future__ import annotations

@@ -5,11 +5,13 @@ Properties:
 * completed buckets are skipped, not recomputed;
 * lineage rows describe committed data (counts match the table);
 * re-running a completed run is a no-op;
+* only a missing or never-committed checkpoint reads as "nothing done";
 * search history sink appends and reads back.
 """
 
 from __future__ import annotations
 
+import os
 import shutil
 
 import pytest
@@ -76,6 +78,45 @@ def test_resume_equals_cold_run(spark, corpus_df, out_dir, tmp_path):
     with pytest.raises(ValueError, match="different run config"):
         pipeline.run_extraction_job(
             spark, docs, out_dir, run_id="r1", n_buckets=n_buckets * 2
+        )
+
+
+def test_read_done_buckets_absent_checkpoint_is_empty(spark, out_dir):
+    assert pipeline.read_done_buckets(spark, out_dir, "r", "cfg") == set()
+
+
+def test_read_done_buckets_uncommitted_checkpoint_is_empty(spark, out_dir):
+    """A writer that died before its first commit leaves only staged
+    files under ``_temporary``: nothing is done yet. Once a checkpoint
+    file is committed, its buckets read back."""
+    cp = f"{out_dir}/{pipeline.CHECKPOINT_DIR}"
+    staged = f"{cp}/_temporary/0/_temporary/attempt_0"
+    os.makedirs(staged)
+    with open(f"{staged}/part-00000.snappy.parquet", "wb") as fh:
+        fh.write(b"half-written")
+    assert pipeline.read_done_buckets(spark, out_dir, "r", "cfg") == set()
+
+    spark.createDataFrame(
+        [("r", "cfg", 3, "done"), ("other", "cfg", 5, "done")],
+        "run_id string, config_hash string, partition_id int, status string",
+    ).write.mode("append").parquet(cp)
+    assert pipeline.read_done_buckets(spark, out_dir, "r", "cfg") == {3}
+
+
+def test_read_done_buckets_unreadable_checkpoint_raises(spark, corpus_df, out_dir):
+    """A committed checkpoint that cannot be read must fail the run, not
+    read as "no checkpoint" (which would re-extract every bucket and skip
+    the foreign-config guard)."""
+    cp = f"{out_dir}/{pipeline.CHECKPOINT_DIR}"
+    os.makedirs(cp)
+    with open(f"{cp}/part-00000-corrupt.snappy.parquet", "wb") as fh:
+        fh.write(b"not a parquet file")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        pipeline.read_done_buckets(spark, out_dir, "r", "cfg")
+    with pytest.raises(Exception, match="(?i)parquet"):
+        pipeline.run_extraction_job(
+            spark, corpus_df.select("doc_id", "spans"), out_dir, run_id="r",
+            n_buckets=4,
         )
 
 

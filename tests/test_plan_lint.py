@@ -1,7 +1,8 @@
-"""The plan-shape audit itself is load-bearing (PLANLINT.md's zero-
-violation claim is only as good as the walker), so pin its verdicts on
-constructed plans: every acceptance rule and every rejection rule gets
-a minimal physical plan that must keep classifying the same way."""
+"""The product plans carry no CartesianProduct and no unbounded
+BroadcastNestedLoopJoin; and since that verdict is only as good as the
+plan walker, its verdicts are pinned on constructed plans: every
+acceptance rule and every rejection rule gets a minimal physical plan
+that must keep classifying the same way."""
 
 from __future__ import annotations
 
@@ -12,7 +13,7 @@ from pyspark.sql import functions as F
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1] / "tools"))
 
-from plan_lint import _audit_bnlj  # noqa: E402
+from plan_lint import _audit_bnlj, audit, plan_string, product_plans  # noqa: E402
 
 from ocr_search_spark.session import literal_df  # noqa: E402
 
@@ -71,3 +72,18 @@ def test_keyed_aggregate_is_not_bounded(spark):
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet")
     per_key = docs.groupBy("lang").agg(F.count("*").alias("n"))
     assert _bnlj(docs.crossJoin(F.broadcast(per_key))) == (0, 1)
+
+
+def test_product_plans_have_no_cartesian_or_unbounded_bnlj(spark, tmp_path):
+    plans = product_plans(spark, str(tmp_path))
+    assert set(plans) == {
+        "term_postings[arrow]", "term_postings[columnar]", "match_terms",
+        "match_terms_fuzzy", "prefix_search", "boolean_search",
+        "merge_doc_batch",
+    }
+    for name, df in plans.items():
+        info = audit(df, plan_string(df))
+        assert info["cartesian"] == 0 and info["bnlj_bad"] == 0, (name, info)
+    # the fuzzy matcher's length-band join is the one BNLJ, and it is
+    # proven bounded (the broadcast side is the literal query terms)
+    assert _audit_bnlj(plans["match_terms_fuzzy"]) == (1, 0)

@@ -91,31 +91,13 @@ def test_custom_joins_avoid_nested_loop(spark):
     assert "CartesianProduct" not in p2
 
 
-def test_tpch_q5_broadcasts_dims(spark, sf_dir):
-    import __spark_entry__ as entry
-
-    p = plan_of(entry.q_tpch_q5(spark, sf_dir))
-    # every dimension (region, nation, supplier, customer at sf) joins
-    # without shuffling the fact side more than the one agg requires
-    assert p.count("BroadcastHashJoin") >= 3
-    assert "PushedFilters: [IsNotNull(r_name)" in p or "EqualTo(r_name,ASIA)" in p, (
-        "region filter must reach the parquet scan"
-    )
-
-
-def test_scan_pruning_extract(spark, sf_dir):
-    import __spark_entry__ as entry
-
-    p = plan_of(entry.q_cjk_postings(spark, sf_dir))
-    assert "ReadSchema: struct<doc_id:bigint>" in p, (
-        "generator queries must prune the documents scan to doc_id only"
-    )
-
-
 def test_dedup_lsh_no_cartesian(spark, sf_dir):
-    import __spark_entry__ as entry
+    from ocr_search_spark.training import dedup
 
-    p = plan_of(entry.q_dedup_minhash_lsh(spark, sf_dir))
+    sigs = dedup.minhash_signatures(
+        spark.read.parquet(f"{sf_dir}/documents.parquet"), k=3, num_hashes=16
+    )
+    p = plan_of(dedup.lsh_candidate_pairs(sigs, bands=4, rows_per_band=4))
     assert "CartesianProduct" not in p
     assert "BroadcastNestedLoopJoin" not in p
 

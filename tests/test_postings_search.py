@@ -389,6 +389,52 @@ def test_prefix_search_expansion_and_guard(spark):
         prefix_search(postings, "*")
 
 
+def _edit_distance(a: str, b: str) -> int:
+    prev = list(range(len(b) + 1))
+    for i, ca in enumerate(a, 1):
+        cur = [i]
+        for j, cb in enumerate(b, 1):
+            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
+        prev = cur
+    return prev[-1]
+
+
+def _fuzzy_brute_force(postings: dict, terms: list[str], k: int) -> list:
+    """max tf per doc over every golden posting whose term is within one
+    edit of a query term; score desc, doc_id asc, top k."""
+    near = {
+        t for t in {t for t, _ in postings}
+        if any(_edit_distance(t, q) <= 1 for q in terms)
+    }
+    best: dict[str, int] = {}
+    for (t, d), tf in postings.items():
+        if t in near:
+            best[d] = max(best.get(d, 0), tf)
+    return sorted(best.items(), key=lambda x: (-x[1], x[0]))[:k]
+
+
+FUZZY_QUERIES = [
+    ["tble"],               # deletion
+    ["tabler"],             # insertion
+    ["xable", "sprk"],      # first-letter substitution + deletion
+    ["merg", "quary"],      # several near terms each
+    ["機器學"],              # CJK term one char short
+    ["row"],                # exact hit plus neighbours (rows, now-like)
+    ["qqqqqq"],             # nothing within one edit
+    [],
+]
+
+
+@pytest.mark.parametrize("terms", FUZZY_QUERIES, ids=lambda t: "+".join(t) or "empty")
+@pytest.mark.parametrize("k", [3, 20])
+def test_match_terms_fuzzy_matches_brute_force(terms, k, postings_df, golden_postings):
+    got = [
+        (r["doc_id"], r["score"])
+        for r in search.match_terms_fuzzy(postings_df, terms, max_return=k).collect()
+    ]
+    assert got == _fuzzy_brute_force(golden_postings, terms, k), terms
+
+
 def test_anchor_boosted_postings(spark):
     import pandas as pd
     from pyspark.sql import functions as F

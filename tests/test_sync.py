@@ -233,3 +233,49 @@ def test_sync_bulk_driver_collects_stay_bounded(spark, tmp_path, monkeypatch):
     # every driver materialization is config-bounded: 3 status classes /
     # 32 bucket ids — never the 40-path change set
     assert max(sizes) < n_files, sizes
+
+
+
+def _diff_model(old: dict, new: dict) -> dict:
+    """Dict model of the reference's filesLibrary diff: a path only in the
+    listing is added, only in the library is deleted, and in both is
+    modified only when the listing's mtime is STRICTLY newer."""
+    out = {p: "added" for p in new.keys() - old.keys()}
+    out.update({p: "deleted" for p in old.keys() - new.keys()})
+    out.update({p: "modified" for p in old.keys() & new.keys() if new[p] > old[p]})
+    return out
+
+
+def test_diff_filelib_matches_dict_model(spark):
+    import random
+
+    from ocr_search_spark.operators.maintenance import diff_filelib
+
+    rng = random.Random(11)
+    old, new = {"same.pdf": 5, "older.pdf": 9, "newer.pdf": 3, "gone.pdf": 1}, {
+        "same.pdf": 5, "older.pdf": 8, "newer.pdf": 4, "fresh.pdf": 2,
+    }
+    for i in range(300):
+        p, t = f"dir{i % 7}/f{i}.pptx", rng.randrange(100)
+        kind = rng.choice(["old", "new", "same", "newer", "older"])
+        if kind != "new":
+            old[p] = t
+        if kind != "old":
+            new[p] = {"same": t, "newer": t + 1 + rng.randrange(5),
+                      "older": t - 1 - rng.randrange(5)}.get(kind, t)
+    schema = "path string, mtime long"
+    got = {
+        r["path"]: r["status"]
+        for r in diff_filelib(
+            spark.createDataFrame(list(old.items()), schema),
+            spark.createDataFrame(list(new.items()), schema),
+        ).collect()
+    }
+    want = _diff_model(old, new)
+    assert got == want
+    assert {k: got[k] for k in ("newer.pdf", "gone.pdf", "fresh.pdf")} == {
+        "newer.pdf": "modified", "gone.pdf": "deleted", "fresh.pdf": "added",
+    }
+    # unchanged and older-mtime paths are not changes
+    assert "same.pdf" not in got and "older.pdf" not in got
+    assert set(want.values()) == {"added", "deleted", "modified"}

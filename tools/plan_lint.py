@@ -1,15 +1,16 @@
-"""Global physical-plan lint over EVERY ``queries()`` entry.
+"""Physical-plan lint over the product's query and build plans.
 
-The correctness gate proves each entry's VALUES; this tool proves each
-entry's PLAN SHAPE scales. For every entry it builds the DataFrame at a
-small sf and inspects the physical plan (no collect) for the two
-operators that turn into corpus-squared work at 100 TB:
+For each plan the jobs run — the top-k matchers behind ``search`` and
+``serve`` (exact, fuzzy, prefix, boolean), the postings build over the
+arrow and columnar extraction paths, and one ``merge_doc_batch`` of the
+streaming/sync maintenance path — it builds the DataFrame over a small
+synthetic corpus and inspects the physical plan (no collect) for the two
+operators that turn into corpus-squared work at scale:
 
 * ``CartesianProduct``        — always a violation (O(N·M) rows moved);
 * ``BroadcastNestedLoopJoin`` — a violation unless the broadcast side
-  is PROVABLY input-size-independent. Instead of a hand whitelist, the
-  lint walks the BNLJ's build subtree and accepts it only when every
-  path bottoms out in
+  is PROVABLY input-size-independent. The lint walks the BNLJ's build
+  subtree and accepts it only when every path bottoms out in
 
     - an aggregate with ``keys=[]`` whose expressions are scalar
       (sum/count/avg/min/max …) — exactly one row, O(1) bytes. An
@@ -18,72 +19,27 @@ operators that turn into corpus-squared work at 100 TB:
     - driver-local literal data (``LocalTableScan``, ``OneRowRelation``,
       ``EmptyRelation``) — embedded in the program, cannot grow with
       the input tables;
-    - a literal ``Range`` of at most ``_RANGE_CAP`` rows (calibration
-      grids, probe lists).
+    - a literal ``Range`` of at most ``_RANGE_CAP`` rows.
 
   Anything that reaches a file/table scan un-aggregated (or via a
   collect_*) is a real violation: that broadcast ships O(corpus) bytes
-  to every task. The handful of justified exceptions live in WHITELIST
-  with a written proof.
+  to every task.
 
-It also records the shuffle-exchange count per entry so plan growth is
-visible across sessions (PLANLINT.md).
+It also prints the shuffle-exchange count per plan so plan growth shows.
 
-Usage: python tools/plan_lint.py [sf_dir] [name ...]
-Exit 1 on any non-whitelisted violation.
+Usage: python tools/plan_lint.py [name ...]
+Exit 1 on any violation.
 """
 
 from __future__ import annotations
 
 import re
 import sys
+import tempfile
 import time
 from pathlib import Path
 
 sys.path.insert(0, str(Path(__file__).resolve().parents[1]))
-
-# Entries allowed to contain an UNPROVEN BroadcastNestedLoopJoin, each
-# with the bounded-broadcast-side proof the walker cannot see. Keep this
-# list SHORT and justified.
-WHITELIST: dict[str, str] = {
-    "source_overlap": (
-        "broadcast side is the per-source shingle-set-size aggregate "
-        "(one row per SOURCE) feeding the src_a < src_b pair grid. "
-        "Source is a mixture dimension — tens of values, set by the "
-        "corpus recipe, independent of corpus ROW count — so the "
-        "dimension × dimension inequality join with one side broadcast "
-        "is exactly the right shape; the walker cannot see that the "
-        "group-by key is a dimension, not a content key."
-    ),
-    "nb_classify": (
-        "broadcast side is the trained Naive-Bayes model: one row per "
-        "label with scalar stats (priors + smoothing totals). Label "
-        "cardinality is the closed language-code set of the corpus — "
-        "a few hundred at most, independent of corpus ROW count — so "
-        "model × corpus with the model broadcast is exactly the right "
-        "100 TB shape; a limit() cap would risk silent truncation if "
-        "a new label appeared, which is worse than the unproven BNLJ."
-    ),
-    "nb_calibration": (
-        "same BNLJ as nb_classify (shared _nb_scored core): the "
-        "broadcast side is the trained NB model, one row per label "
-        "with scalar stats. Label cardinality is the closed "
-        "language-code set — independent of corpus ROW count — so "
-        "model × corpus with the model broadcast is the right shape; "
-        "the calibration suffix only adds a rn≤2 window and a "
-        "bins-sized aggregate on top."
-    ),
-    "chi_square_independence": (
-        "broadcast side is a contingency-table MARGINAL (one row per "
-        "level of a categorical dimension - source/lang here) feeding "
-        "the full r x c level grid, which must include EMPTY cells "
-        "(their R*C/N terms are real chi-square mass). Level "
-        "cardinality is a dimension property - tens of values, "
-        "independent of corpus ROW count - the same dimension-grid "
-        "shape as source_overlap; the walker cannot see that the "
-        "group-by key is a dimension, not a content key."
-    ),
-}
 
 _RANGE_CAP = 100_000  # literal Range rows accepted as "bounded"
 
@@ -175,85 +131,93 @@ def audit(df, plan: str) -> dict:
     }
 
 
-def main() -> int:
-    sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.001"
-    only = set(sys.argv[2:])
+def product_plans(spark, work_dir: str) -> dict:
+    """name -> DataFrame for every product plan the lint covers. Query
+    plans read a stored postings table, as ``jobs.py search``/``serve``
+    do; the merge plan is the one ``merge_doc_batch`` commits."""
+    from ocr_search_spark import corpus
+    from ocr_search_spark.operators.boolquery import boolean_search
+    from ocr_search_spark.operators.extract import extract_spans
+    from ocr_search_spark.operators.maintenance import doc_catalog
+    from ocr_search_spark.operators.search import (
+        match_terms,
+        match_terms_fuzzy,
+        prefix_search,
+    )
+    from ocr_search_spark.operators.tokenize import term_postings
+    from ocr_search_spark.streaming.index_maintain import (
+        merge_doc_batch,
+        postings_table,
+    )
 
-    import __spark_entry__ as entry
+    docs = corpus.synthesize(spark, 200, skew=True)
+    spans = docs.select("doc_id", "spans")
+    plans = {
+        f"term_postings[{impl}]": term_postings(
+            extract_spans(spans, impl=impl, skew_threshold=64).select("doc_id", "spans")
+        )
+        for impl in ("arrow", "columnar")
+    }
+    plans["term_postings[arrow]"].write.parquet(f"{work_dir}/postings")
+    doc_catalog(docs).write.parquet(f"{work_dir}/docs")
+    postings = spark.read.parquet(f"{work_dir}/postings")
+    catalog = spark.read.parquet(f"{work_dir}/docs")
+    plans["match_terms"] = match_terms(postings, ["table", "scan"], docs=catalog)
+    plans["match_terms_fuzzy"] = match_terms_fuzzy(postings, ["tble", "sprk"])
+    plans["prefix_search"] = prefix_search(postings, "merg*")
+    plans["boolean_search"] = boolean_search(
+        postings, "(table OR merge) AND NOT scan"
+    )
+
+    # merge_doc_batch commits through BucketedTable._commit_touched; record
+    # the frame it is handed, on this table instance only
+    table = postings_table(spark, f"{work_dir}/maintained", n_buckets=8)
+    merge_doc_batch(table, spans)
+    committed = []
+    commit = table._commit_touched
+
+    def record(touched, final):
+        committed.append(final)
+        commit(touched, final)
+
+    table._commit_touched = record
+    merge_doc_batch(table, spans.limit(20))
+    plans["merge_doc_batch"] = committed[0]
+    return plans
+
+
+def main() -> int:
+    only = set(sys.argv[1:])
+
     from ocr_search_spark.session import get_spark
 
     spark = get_spark("plan_lint", cores=8, shuffle_partitions=8)
 
-    rows, violations, errors = [], [], []
-    for name, fn in entry.queries().items():
-        if only and name not in only:
-            continue
-        t0 = time.time()
-        try:
-            df = fn(spark, sf_dir)
+    violations = []
+    with tempfile.TemporaryDirectory() as work_dir:
+        for name, df in product_plans(spark, work_dir).items():
+            if only and name not in only:
+                continue
+            t0 = time.time()
             info = audit(df, plan_string(df))
-        except Exception as exc:  # plan construction itself failed
-            errors.append(name)
-            print(f"ERR   {name}: {type(exc).__name__}: {exc}")
-            continue
-        verdict = "ok"
-        if info["cartesian"]:
-            verdict = "CARTESIAN"
-            violations.append(name)
-        elif info["bnlj_bad"] and name not in WHITELIST:
-            verdict = "BNLJ-UNBOUNDED"
-            violations.append(name)
-        elif info["bnlj_bad"]:
-            verdict = "bnlj-whitelisted"
-        elif info["bnlj_ok"]:
-            verdict = "bnlj-bounded"
-        rows.append((name, info, verdict))
-        print(
-            f"{verdict:>18}  {name}: shuffles={info['shuffles']} "
-            f"bhj={info['bhj']} smj={info['smj']} "
-            f"bnlj={info['bnlj_ok']}+{info['bnlj_bad']} "
-            f"({time.time() - t0:.1f}s)"
-        )
-
-    if not only:
-        lines = [
-            "# PLANLINT — physical-plan audit of every gated entry",
-            "",
-            f"Generated by `tools/plan_lint.py {sf_dir}`. Violations:"
-            f" **{len(violations)}**; plan-construction errors:"
-            f" **{len(errors)}**.",
-            "",
-            "Rule: no `CartesianProduct` anywhere. A",
-            "`BroadcastNestedLoopJoin` is accepted only when the lint's",
-            "plan-tree walker PROVES the broadcast side is",
-            "input-size-independent: every path in the build subtree ends",
-            "in an empty-keys scalar aggregate (one row, O(1) bytes — and",
-            "NOT a collect_list/collect_set of corpus data), driver-local",
-            "literal data, or a literal Range ≤ 100k rows. `BNLJ ok` /",
-            "`BNLJ bad` below are the proven / unproven counts; any `bad`",
-            "needs a fix or a written WHITELIST proof. Shuffle counts are",
-            "the per-entry exchange count in the initial physical plan",
-            "(AQE may coalesce at runtime).",
-            "",
-            "| entry | shuffles | BHJ | SMJ | BNLJ ok | BNLJ bad | verdict |",
-            "|---|---|---|---|---|---|---|",
-        ]
-        for name, info, verdict in rows:
-            lines.append(
-                f"| {name} | {info['shuffles']} | {info['bhj']} "
-                f"| {info['smj']} | {info['bnlj_ok']} | {info['bnlj_bad']} "
-                f"| {verdict} |"
+            verdict = "ok"
+            if info["cartesian"]:
+                verdict = "CARTESIAN"
+                violations.append(name)
+            elif info["bnlj_bad"]:
+                verdict = "BNLJ-UNBOUNDED"
+                violations.append(name)
+            elif info["bnlj_ok"]:
+                verdict = "bnlj-bounded"
+            print(
+                f"{verdict:>18}  {name}: shuffles={info['shuffles']} "
+                f"bhj={info['bhj']} smj={info['smj']} "
+                f"bnlj={info['bnlj_ok']}+{info['bnlj_bad']} "
+                f"({time.time() - t0:.1f}s)"
             )
-        if WHITELIST:
-            lines += ["", "## BNLJ whitelist", ""]
-            for k, v in WHITELIST.items():
-                lines.append(f"- `{k}` — {v}")
-        Path(__file__).resolve().parents[1].joinpath("PLANLINT.md").write_text(
-            "\n".join(lines) + "\n"
-        )
 
-    print("VIOLATIONS:", violations or "none", "ERRORS:", errors or "none")
-    return 1 if (violations or errors) else 0
+    print("VIOLATIONS:", violations or "none")
+    return 1 if violations else 0
 
 
 if __name__ == "__main__":
