@@ -6,7 +6,7 @@ an idiomatic Spark engine:
 
 * interleaved text+media documents as Parquet/Iceberg tables of
   ``(doc_id, spans: array<struct<kind,text,media_ref,offset>>)``;
-* one vectorized ``mapInPandas`` extraction stage (OCR-sim on media spans,
+* one vectorized ``mapInArrow`` extraction stage (OCR-sim on media spans,
   boilerplate strip on text spans) — no per-row Python anywhere;
 * tokenization as columnar expressions + one Arrow-batched pandas UDF for
   the CJK segmenter;

@@ -12,6 +12,7 @@ mechanism --py-files uses, so local[:] and cluster behave identically.
 
 from __future__ import annotations
 
+import hashlib
 import os
 import tempfile
 import zipfile
@@ -24,11 +25,20 @@ _SHIPPED: set[str] = set()
 
 
 def package_zip() -> str:
-    """Build (idempotently) a zip of this package for --py-files/addPyFile."""
-    out = os.path.join(tempfile.gettempdir(), "ocr_search_spark_pyfiles.zip")
+    """Build (idempotently) a zip of this package for --py-files/addPyFile.
+
+    The zip is keyed on a digest of the (relpath, size, mtime_ns) listing
+    of the package sources, so two checkouts never share one zip and an
+    added, edited or deleted module always yields a fresh one."""
     srcs = sorted(_PKG_DIR.rglob("*.py"))
-    latest = max(p.stat().st_mtime for p in srcs)
-    if os.path.exists(out) and os.path.getmtime(out) >= latest:
+    listing = hashlib.sha256()
+    for p in srcs:
+        st = p.stat()
+        listing.update(f"{p.relative_to(_PKG_DIR)}\0{st.st_size}\0{st.st_mtime_ns}\n".encode())
+    out = os.path.join(
+        tempfile.gettempdir(), f"ocr_search_spark_pyfiles-{listing.hexdigest()[:16]}.zip"
+    )
+    if os.path.exists(out):
         return out
     # Unique staging name (mkstemp) so concurrent drivers (bench + checker)
     # can never interleave writes into one .tmp; os.replace stays atomic.

@@ -11,7 +11,8 @@ or locally: ``python -m ocr_search_spark <job> …`` (the session factory
 ships the package itself via addPyFile — same mechanism).
 
 Jobs:
-  extract          resumable bucketed extraction + postings build
+  extract          resumable bucketed extraction (Arrow batches) +
+                   postings build
   maintain-stream  incremental postings MERGE from a document stream
   search           top-k query against a stored postings table
   serve            HTTP /pages + /pageImg façade over stored tables
@@ -21,13 +22,6 @@ Jobs:
                    standing file library, MERGE added/modified docs,
                    cascade-delete removed files' docs (the reference's
                    15-min DropboxSynchronizer loop, idempotent)
-  tokenizer-train  learn a subword vocabulary over a documents table
-                   (unigram hard-EM or BPE merges) and write it out
-  dedup            near-dup dedup pipeline: calibrated MinHash-LSH ->
-                   clusters -> one representative per cluster
-  snapshot         lakehouse maintenance on a SnapshotTable: history,
-                   bin-pack compact, snapshot expiry GC, merge-on-read
-                   delete materialization, OPTIMIZE ZORDER, rollback
 """
 
 from __future__ import annotations
@@ -50,7 +44,6 @@ def main(argv: list[str] | None = None) -> int:
     pe.add_argument("--out", required=True, help="warehouse output dir")
     pe.add_argument("--run-id", default=None)
     pe.add_argument("--n-buckets", type=int, default=32)
-    pe.add_argument("--impl", default="arrow", choices=["columnar", "pandas", "arrow"])
     pe.add_argument("--skew-threshold", type=int, default=64)
     pe.add_argument(
         "--source-format", default="spans", choices=["spans", "binary"],
@@ -60,15 +53,11 @@ def main(argv: list[str] | None = None) -> int:
     pe.add_argument("--skip-postings", action="store_true")
     _add_common(pe)
 
-    pm = sub.add_parser("maintain-stream", help="incremental postings/LM MERGE")
+    pm = sub.add_parser("maintain-stream", help="incremental postings MERGE")
     pm.add_argument("--input", required=True)
     pm.add_argument("--table", required=True)
     pm.add_argument("--checkpoint", required=True)
     pm.add_argument("--n-buckets", type=int, default=32)
-    pm.add_argument("--what", default="postings",
-                    choices=["postings", "kn", "kmv"],
-                    help="postings doc-replace MERGE | KN bigram partials "
-                         "| per-group KMV distinct sketches")
     _add_common(pm)
 
     ps = sub.add_parser("search", help="top-k query against stored postings")
@@ -84,58 +73,6 @@ def main(argv: list[str] | None = None) -> int:
     pv.add_argument("--port", type=int, default=7055)
     pv.add_argument("--host", default="127.0.0.1")
     _add_common(pv)
-
-    pt = sub.add_parser(
-        "tokenizer-train", help="learn a subword vocab (unigram-EM | bpe)"
-    )
-    pt.add_argument("--input", required=True, help="documents parquet dir")
-    pt.add_argument("--out", required=True, help="vocab parquet output dir")
-    pt.add_argument("--algo", default="unigram", choices=["unigram", "bpe"])
-    pt.add_argument("--vocab-size", type=int, default=150, help="multi-char pieces / merges")
-    pt.add_argument("--iters", type=int, default=2, help="unigram EM rounds")
-    _add_common(pt)
-
-    pd_ = sub.add_parser("dedup", help="near-dup dedup: keep one doc per cluster")
-    pd_.add_argument("--input", required=True, help="documents parquet dir")
-    pd_.add_argument("--out", required=True, help="kept-docs parquet output dir")
-    pd_.add_argument("--decisions", default=None, help="optional decisions parquet dir")
-    pd_.add_argument("--threshold", type=float, default=0.8)
-    pd_.add_argument("--num-hashes", type=int, default=16)
-    pd_.add_argument("--max-df", type=int, default=None)
-    _add_common(pd_)
-
-    pss = sub.add_parser(
-        "snapshot-stream",
-        help="exactly-once streaming into a SnapshotTable (append|retract)",
-    )
-    pss.add_argument("--input", required=True, help="source parquet dir")
-    pss.add_argument("--table", required=True, help="snapshot table root")
-    pss.add_argument("--checkpoint", required=True)
-    pss.add_argument("--mode", default="append", choices=["append", "retract"])
-    pss.add_argument("--key-schema", default="doc_id string",
-                     help="retract: DDL of the key files")
-    _add_common(pss)
-
-    pn = sub.add_parser(
-        "snapshot", help="SnapshotTable maintenance (lakehouse tier)"
-    )
-    pn.add_argument("--table", required=True, help="snapshot table root")
-    pn.add_argument(
-        "action",
-        choices=["history", "compact", "expire", "materialize", "zorder",
-                 "rollback", "maintain"],
-    )
-    pn.add_argument("--small-mb", type=int, default=32,
-                    help="compact: files below this are bin-packed")
-    pn.add_argument("--target-mb", type=int, default=128,
-                    help="compact: output file size target")
-    pn.add_argument("--keep-last", type=int, default=2,
-                    help="expire: snapshots to retain")
-    pn.add_argument("--cols", default=None,
-                    help="zorder: comma-separated cluster columns")
-    pn.add_argument("--n-files", type=int, default=64, help="zorder: output files")
-    pn.add_argument("--version", type=int, default=None, help="rollback target")
-    _add_common(pn)
 
     py = sub.add_parser("sync", help="one source-tree sync iteration")
     py.add_argument("--source", required=True, help="source documents dir")
@@ -160,7 +97,6 @@ def main(argv: list[str] | None = None) -> int:
             args.out,
             run_id=args.run_id,
             n_buckets=args.n_buckets,
-            impl=args.impl,
             skew_threshold=args.skew_threshold,
             source_format=args.source_format,
         )
@@ -168,29 +104,13 @@ def main(argv: list[str] | None = None) -> int:
             build_postings(spark, args.out)
         print(json.dumps(summary))
     elif args.job == "maintain-stream":
-        if args.what == "kmv":
-            from .streaming.sketch_maintain import stream_maintain_kmv
+        from .streaming.index_maintain import stream_maintain_postings
 
-            stream_maintain_kmv(
-                spark, args.input, args.table, args.checkpoint,
-                n_buckets=args.n_buckets,
-            )
-        elif args.what == "kn":
-            from .streaming.lm_maintain import stream_maintain_kn
-
-            stream_maintain_kn(
-                spark, args.input, args.table, args.checkpoint,
-                n_buckets=args.n_buckets,
-            )
-        else:
-            from .streaming.index_maintain import stream_maintain_postings
-
-            stream_maintain_postings(
-                spark, args.input, args.table, args.checkpoint,
-                n_buckets=args.n_buckets,
-            )
-        print(json.dumps({"job": "maintain-stream", "what": args.what,
-                          "table": args.table}))
+        stream_maintain_postings(
+            spark, args.input, args.table, args.checkpoint,
+            n_buckets=args.n_buckets,
+        )
+        print(json.dumps({"job": "maintain-stream", "table": args.table}))
     elif args.job == "search":
         from .operators.search import search
 
@@ -216,93 +136,6 @@ def main(argv: list[str] | None = None) -> int:
             srv._thread.join()
         except KeyboardInterrupt:
             srv.stop()
-    elif args.job == "tokenizer-train":
-        if args.algo == "unigram":
-            from .training.unigram_lm import train_unigram
-
-            vocab = train_unigram(
-                spark.read.parquet(args.input),
-                n_multi=args.vocab_size,
-                iters=args.iters,
-            )
-            vocab.write.mode("overwrite").parquet(args.out)
-            print(json.dumps({"job": "tokenizer-train", "algo": "unigram",
-                              "pieces": vocab.count(), "out": args.out}))
-        else:
-            from pyspark.sql import functions as F
-
-            from .training.bpe import learn_bpe_merges
-            from .training.unigram_lm import word_counts
-
-            wf = word_counts(spark.read.parquet(args.input), "text").select(
-                "word", F.col("wcnt").alias("freq")
-            )
-            merges = learn_bpe_merges(wf, n_merges=args.vocab_size)
-            merges.write.mode("overwrite").parquet(args.out)
-            print(json.dumps({"job": "tokenizer-train", "algo": "bpe",
-                              "merges": merges.count(), "out": args.out}))
-    elif args.job == "dedup":
-        from .training.dedup import dedup_corpus
-
-        docs = spark.read.parquet(args.input)
-        decisions, kept = dedup_corpus(
-            docs,
-            threshold=args.threshold,
-            num_hashes=args.num_hashes,
-            max_df=args.max_df,
-        )
-        if args.decisions:
-            decisions.write.mode("overwrite").parquet(args.decisions)
-        kept.write.mode("overwrite").parquet(args.out)
-        n_in, n_kept = docs.count(), spark.read.parquet(args.out).count()
-        print(json.dumps({"job": "dedup", "n_in": n_in, "n_kept": n_kept,
-                          "n_dropped": n_in - n_kept, "out": args.out}))
-    elif args.job == "snapshot-stream":
-        from .storage_snapshots import SnapshotTable
-        from .streaming import snapshot_sink
-
-        t = SnapshotTable(spark, args.table)
-        if args.mode == "append":
-            snapshot_sink.stream_append_snapshot(
-                spark, args.input, t, args.checkpoint
-            )
-        else:
-            snapshot_sink.stream_delete_snapshot(
-                spark, args.input, t, args.checkpoint,
-                key_schema=args.key_schema,
-            )
-        print(json.dumps({"job": "snapshot-stream", "mode": args.mode,
-                          "table": args.table,
-                          "version": t.current_version(),
-                          "rows": t.count()}))
-    elif args.job == "snapshot":
-        from .storage_snapshots import SnapshotTable
-
-        t = SnapshotTable(spark, args.table)
-        if args.action == "history":
-            out = {"history": t.history()}
-        elif args.action == "compact":
-            v = t.compact(small_bytes=args.small_mb << 20,
-                          target_bytes=args.target_mb << 20)
-            out = {"compacted_to": v}
-        elif args.action == "expire":
-            out = t.expire_snapshots(keep_last=args.keep_last)
-        elif args.action == "materialize":
-            out = {"materialized_to": t.materialize_deletes()}
-        elif args.action == "zorder":
-            if not args.cols:
-                ap.error("zorder requires --cols")
-            v = t.optimize_zorder(args.cols.split(","), n_files=args.n_files)
-            out = {"zordered_to": v}
-        elif args.action == "maintain":
-            out = t.maintain(small_bytes=args.small_mb << 20,
-                             target_bytes=args.target_mb << 20,
-                             keep_snapshots=args.keep_last)
-        else:  # rollback
-            if args.version is None:
-                ap.error("rollback requires --version")
-            out = {"rolled_back_to": t.rollback(args.version)}
-        print(json.dumps({"job": "snapshot", "action": args.action, **out}))
     elif args.job == "sync":
         from .sync import sync_once
 

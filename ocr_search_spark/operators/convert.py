@@ -190,51 +190,6 @@ def ocr_png_media(media: DataFrame) -> DataFrame:
     )
 
 
-OCR_CONF_SCHEMA = (
-    "media_ref string, n_lines long, n_glyphs long, n_exact long, "
-    "dist_sum long, error string"
-)
-
-
-def _ocr_conf_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    from ocr_search_spark.training.ocrglyph import ocr_page_scored
-    from ocr_search_spark.training.png import decode_png
-
-    for pdf_batch in batches:
-        rows = []
-        for ref, payload in zip(pdf_batch["media_ref"], pdf_batch["payload"]):
-            try:
-                arr = decode_png(bytes(payload))
-                lines, g, d, x = ocr_page_scored(
-                    arr[:, :, 0] if arr.ndim == 3 else arr
-                )
-                rows.append((ref, len(lines), g, x, d, None))
-            except Exception as exc:
-                rows.append((ref, None, None, None, None, str(exc)))
-        yield pd.DataFrame(
-            rows,
-            columns=[
-                "media_ref", "n_lines", "n_glyphs", "n_exact",
-                "dist_sum", "error",
-            ],
-        )
-
-
-def ocr_png_confidence(media: DataFrame) -> DataFrame:
-    """Per-page OCR CONFIDENCE over PNG payloads: (media_ref, n_lines,
-    n_glyphs, n_exact, dist_sum, error) — glyphs classified, glyphs
-    that hit a font template exactly, and the summed winning Hamming
-    distance. The quality gate an extraction pipeline applies before
-    trusting OCR text (Tesseract exposes the same signal as per-word
-    confidences): pages whose mean distance climbs are degraded scans —
-    route to review instead of the index. Same Arrow-batched
-    decode→recognize slot as :func:`ocr_png_media`; undecodable
-    payloads carry their error per row (X2)."""
-    return media.select("media_ref", "payload").mapInPandas(
-        _ocr_conf_iter, schema=OCR_CONF_SCHEMA
-    )
-
-
 def _render_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
     from ocr_search_spark.training.ocrglyph import render_page
     from ocr_search_spark.training.png import encode_png
@@ -320,7 +275,6 @@ def repartition_payload_bucketed(
     df: DataFrame,
     num_partitions: int,
     bucket_bounds: tuple[int, ...] = (4096, 65536, 1 << 20),
-    id_col: str = "doc_id",
 ) -> DataFrame:
     """Size-bucketed + salted repartition for BINARY payloads — the
     convert-stage twin of extract.repartition_size_bucketed (north rule:
@@ -338,7 +292,7 @@ def repartition_payload_bucketed(
     for i, b in enumerate(bucket_bounds):
         bucket = F.when(w >= b, F.lit(i + 1)).otherwise(bucket)
     out = df.withColumn("_pb", bucket).withColumn(
-        "_salt", F.pmod(F.xxhash64(id_col), F.lit(num_partitions))
+        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(num_partitions))
     )
     return out.repartitionByRange(num_partitions, "_pb", "_salt").drop("_pb", "_salt")
 

@@ -106,8 +106,7 @@ def incremental_correlations(
     changed_doc_ids: DataFrame,
     stored_corr: DataFrame,
     max_df_ratio: float | None = None,
-    return_parts: bool = False,
-) -> DataFrame | tuple[DataFrame, DataFrame, DataFrame]:
+) -> DataFrame:
     """Incremental view maintenance for the correlation table (S8/I8-I9):
     after a batch of documents changes (``changed_doc_ids`` — added,
     modified or deleted), recompute ONLY the pairs that can have changed
@@ -244,13 +243,6 @@ def incremental_correlations(
         )
         .select(*stored_corr.columns)
     )
-    if return_parts:
-        # (carried, recomputed, affected): lets a storage layer write
-        # ONLY the changed region — delete stored pairs touching an
-        # affected term, upsert the recomputed ones; carried rows are
-        # provably byte-identical and never rewritten (index_maintain's
-        # streaming correlation MERGE rides this)
-        return carried, recomputed, affected
     return carried.unionByName(recomputed)
 
 
@@ -260,16 +252,3 @@ def symmetric(corr: DataFrame) -> DataFrame:
         corr.select(F.col("term2").alias("term1"), F.col("term1").alias("term2"), "tcr")
     )
 
-
-def top_correlated(corr: DataFrame, k: int = 5) -> DataFrame:
-    """I10 (fixed): top-k correlated terms per term1 — the reference's
-    version mis-applies slice and would throw (DbInterface.class.js:411-425).
-    Window top-k instead of global sort."""
-    from pyspark.sql import Window as W
-
-    w = W.partitionBy("term1").orderBy(F.desc("tcr"), F.asc("term2"))
-    return (
-        corr.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .drop("rn")
-    )

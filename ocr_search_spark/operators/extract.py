@@ -14,17 +14,20 @@ Tokenizer.class.js:28-75) with one distributed pass over the interleaved
 * offset order → preserved per doc (the golden-fixture invariant,
                  PdfUtil.class.js:63-76)
 
-Two interchangeable implementations, tested for equality:
+Two batch implementations, each tested for span equality against
+``golden``:
 
-``impl='columnar'`` — pure Spark expressions via ``F.transform`` over the
-span array: zero shuffle, zero Python, whole-stage codegen. The fastest
-possible plan; used when the extraction functions are expressible as SQL.
-
-``impl='pandas'``   — one ``mapInPandas`` stage over Arrow batches: the
+``impl='arrow'``    — one ``mapInArrow`` stage over Arrow batches: the
 contract a real OCR / layout-parsing engine needs (BASELINE.json
 north_star: "vectorized pandas/Arrow UDF stage"). Per-batch failure is
 recorded in an ``error`` column instead of silently dropped
 (X2: PromiseUtil.const.js:20-38 swallowed rejections; we record them).
+The ``extract`` job runs this one.
+
+``impl='columnar'`` — pure Spark expressions via ``F.transform`` over the
+span array: zero shuffle, zero Python, whole-stage codegen. Used where
+the extraction functions are expressible as SQL (sync, stream
+maintenance, the serve set-up).
 
 Skew (SURVEY §4.2.1): ~1% mega-docs (100×-median span arrays). Row-weight
 skew is handled by (a) salted hash repartition on doc_id so mega-docs
@@ -36,8 +39,6 @@ order authority, so the regroup is exactly order-restoring (E6).
 """
 
 from __future__ import annotations
-
-from collections.abc import Iterator
 
 import pandas as pd
 from pyspark.sql import DataFrame
@@ -78,78 +79,12 @@ def extract_spans_columnar(documents: DataFrame) -> DataFrame:
     )
 
 
-def _extract_batch(pdf: pd.DataFrame) -> pd.DataFrame:
-    """Vectorized extraction of one Arrow batch.
-
-    Flattens all spans of the batch into one flat frame, applies the
-    vectorized text functions once per column (not per row), regroups in
-    original (row, offset) order.
-    """
-    import numpy as np
-
-    if len(pdf) == 0:
-        return pd.DataFrame({"doc_id": [], "spans": [], "error": []})
-    lens = pdf["spans"].map(len).to_numpy()
-    flat = pd.DataFrame(
-        [s for spans in pdf["spans"] for s in spans],
-        columns=["kind", "text", "media_ref", "offset"],
-    )
-    flat["row"] = np.repeat(np.arange(len(pdf)), lens)
-    flat["doc_id"] = np.repeat(pdf["doc_id"].to_numpy(), lens)
-
-    media = flat["kind"].eq("media")
-    out_text = strip_boilerplate_batch(flat["text"].where(~media, ""))
-    if media.any():
-        out_text.loc[media] = ocr_text_batch(flat.loc[media, "media_ref"])
-    out_ref = pd.Series("", index=flat.index, dtype=object)
-    if media.any():
-        out_ref.loc[media] = (
-            flat.loc[media, "doc_id"]
-            + "-"
-            + flat.loc[media, "offset"].astype(int).astype(str).str.zfill(MEDIA_REF_PAD)
-            + ".png"
-        )
-    flat = flat.assign(text=out_text, media_ref=out_ref)
-    flat = flat.sort_values(["row", "offset"], kind="stable")
-
-    recs = flat[["kind", "text", "media_ref", "offset"]].to_dict("records")
-    order = flat["row"].to_numpy()
-    # flat is (row, offset)-sorted, so appending in sequence rebuilds each
-    # row's span list in offset order even if the input spans were shuffled.
-    row_slices: list[list] = [[] for _ in range(len(pdf))]
-    for rec, r in zip(recs, order):
-        row_slices[int(r)].append(rec)
-    return pd.DataFrame(
-        {"doc_id": pdf["doc_id"].to_numpy(), "spans": row_slices, "error": None}
-    )
-
-
-def _extract_iter(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-    for pdf in batches:
-        try:
-            yield _extract_batch(pdf)
-        except Exception as exc:  # X3: degraded result, recorded not dropped
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "spans": [[] for _ in range(len(pdf))],
-                    "error": f"{type(exc).__name__}: {exc}",
-                }
-            )
-
-
-def extract_spans_pandas(documents: DataFrame) -> DataFrame:
-    """Arrow-batched mapInPandas extraction — the real-OCR-shaped stage."""
-    return documents.mapInPandas(_extract_iter, schema=EXTRACTED_WITH_ERRORS)
-
-
 def _extract_arrow_batch(batch):
     """Arrow-native extraction of one RecordBatch: the list<struct> spans
     column stays columnar end-to-end — ``ListArray.flatten()`` exposes the
     span fields as flat Arrow arrays (zero-copy C, no per-span Python
     objects), the vectorized text functions run once per flat column, and
-    the list is rebuilt with the original offsets. ~10× less Python
-    overhead than the dict-records mapInPandas path on fat span arrays."""
+    the list is rebuilt with the original offsets."""
     import numpy as np
     import pyarrow as pa
 
@@ -383,7 +318,7 @@ def repartition_size_bucketed(
 
 def extract_spans(
     documents: DataFrame,
-    impl: str = "pandas",
+    impl: str = "arrow",
     skew_threshold: int | None = 512,
     num_partitions: int | None = None,
 ) -> DataFrame:
@@ -392,11 +327,9 @@ def extract_spans(
     Returns (doc_id, spans, error)."""
     if num_partitions:
         documents = repartition_salted(documents, num_partitions)
-    batch_fn = {
-        "pandas": extract_spans_pandas,
-        "arrow": extract_spans_arrow,
-        "columnar": extract_spans_columnar,
-    }[impl]
+    batch_fn = {"arrow": extract_spans_arrow, "columnar": extract_spans_columnar}.get(impl)
+    if batch_fn is None:
+        raise ValueError(f"unknown impl {impl!r}")
     if skew_threshold is None:
         return batch_fn(documents)
     small = documents.where(F.size("spans") <= skew_threshold)

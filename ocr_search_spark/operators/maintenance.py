@@ -131,40 +131,6 @@ def delete_by_key(existing: DataFrame, doomed_keys: DataFrame, keys: list[str]) 
     )
 
 
-def delete_file(
-    docs: DataFrame,
-    postings: DataFrame,
-    extracted: DataFrame | None,
-    ori_file_paths: list[str] | DataFrame,
-) -> tuple[DataFrame, DataFrame, DataFrame | None]:
-    """I4 / §3.3 delete cascade: one set-oriented statement per table.
-
-    Reference: getFilePages → per-doc deleteMany on docs AND term_freqs
-    (DbInterface.class.js:109-118, :335-356). Here: resolve doomed doc_ids
-    once, anti-join each table."""
-    spark = docs.sparkSession
-    if isinstance(ori_file_paths, list):
-        paths_df = spark.createDataFrame([(p,) for p in ori_file_paths], "ori_file_path string")
-    else:
-        paths_df = ori_file_paths.select("ori_file_path")
-    doomed = docs.join(F.broadcast(paths_df), "ori_file_path").select("doc_id")
-    new_docs = delete_by_key(docs, doomed, ["doc_id"])
-    new_postings = delete_by_key(postings, doomed, ["doc_id"])
-    new_extracted = (
-        delete_by_key(extracted, doomed, ["doc_id"]) if extracted is not None else None
-    )
-    return new_docs, new_postings, new_extracted
-
-
-def symmetric_correlation_rows(corr: DataFrame) -> DataFrame:
-    """S8 (DbInterface.class.js:189-218): store both (t1,t2) and (t2,t1)."""
-    return corr.unionByName(
-        corr.select(
-            F.col("term2").alias("term1"), F.col("term1").alias("term2"), "tcr"
-        )
-    ).dropDuplicates(["term1", "term2"])
-
-
 def postings_varint_stats(postings: DataFrame) -> DataFrame:
     """Index-compression planning: per-term size of the posting list
     under delta + varint encoding (how Lucene/PFOR-class indexes store

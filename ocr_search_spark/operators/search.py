@@ -125,37 +125,6 @@ def search(
     return match_terms(postings, list(tf_dict.keys()), docs, max_return)
 
 
-def match_terms_batch(
-    postings: DataFrame,
-    query_terms: DataFrame,
-    max_return: int = DEFAULT_MAX_RETURN,
-) -> DataFrame:
-    """Batch search: score MANY queries in one job — (query_id, term)
-    rows in, per-query top-k (query_id, doc_id, score, rank) out.
-
-    The reference's API serves one query per HTTP call; at engine scale
-    (offline eval sets, query-log replay, training-pair mining) you score
-    millions of queries in one pass: broadcast the query-term table,
-    one semi-join + one (query_id, doc_id) aggregate, then a window
-    top-k per query. Same Q3 scoring semantics (max tf, doc_id
-    tie-break). Postings shuffle once on (query_id, doc_id) — never per
-    query. For query sets too big to broadcast, drop the broadcast hint
-    and let AQE pick a shuffle join on term."""
-    from pyspark.sql import Window as W
-
-    scored = (
-        postings.join(F.broadcast(query_terms.select("query_id", "term")), "term")
-        .groupBy("query_id", "doc_id")
-        .agg(F.max("tf").alias("score"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= max_return)
-        .select("query_id", "doc_id", "score", "rank")
-    )
-
-
 def match_terms_fuzzy(
     postings: DataFrame,
     terms: list[str],
@@ -207,45 +176,6 @@ def match_terms_fuzzy(
     )
 
 
-def match_terms_tfidf(
-    postings: DataFrame,
-    terms: list[str],
-    max_return: int = DEFAULT_MAX_RETURN,
-) -> DataFrame:
-    """TF-IDF ranked search — the natural upgrade over the reference's
-    raw max-tf scoring (TermMatcher.class.js:40-51), pinned for exact
-    cross-engine replay: idf is scaled to integer micros
-    (``floor(1e6 · ln(N/df))``) so per-doc scores are EXACT long sums —
-    no float-summation order sensitivity anywhere. df/N are computed
-    plan-side over the postings of the query terms only (one broadcast
-    semi-join; df = docs containing the term, N = corpus doc count)."""
-    spark = postings.sparkSession
-    if not terms:
-        terms = ["never-a-term"]
-    terms_df = literal_df(spark, sorted(set(terms)), "term")
-    matched = postings.join(F.broadcast(terms_df), "term")
-    dfreq = matched.groupBy("term").agg(F.countDistinct("doc_id").alias("_df"))
-    ndocs = postings.select(F.countDistinct("doc_id").alias("_n"))
-    weights = dfreq.crossJoin(F.broadcast(ndocs)).select(
-        "term",
-        F.floor(
-            F.lit(1_000_000.0) * F.log(F.col("_n").cast("double") / F.col("_df"))
-        )
-        .cast("long")
-        .alias("idf_micros"),
-    )
-    scored = (
-        matched.join(F.broadcast(weights), "term")
-        .groupBy("doc_id")
-        .agg(F.sum(F.col("tf").cast("long") * F.col("idf_micros")).alias("score"))
-    )
-    return (
-        scored.orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(max_return)
-        .select("doc_id", "score")
-    )
-
-
 def match_terms_bm25(
     postings: DataFrame,
     terms: list[str],
@@ -255,7 +185,7 @@ def match_terms_bm25(
 ) -> DataFrame:
     """BM25 ranked search (tf saturation + doc-length normalization) —
     the standard upgrade over raw-tf and plain tf-idf, pinned for exact
-    cross-engine replay like :func:`match_terms_tfidf`:
+    cross-engine replay:
 
         idf(t)  = ln((N − df + 0.5)/(df + 0.5) + 1)            (≥ 0)
         sat     = tf·(k1+1) / (tf + k1·(1 − b + b·dl/avgdl))
@@ -725,98 +655,6 @@ def ltr_features(
     )
 
 
-def match_terms_batch_bm25(
-    postings: DataFrame,
-    query_terms: DataFrame,
-    max_return: int = DEFAULT_MAX_RETURN,
-    k1: float = 1.2,
-    b: float = 0.75,
-) -> DataFrame:
-    """Batch BM25: ranked scoring of MANY queries in one job — the
-    composition of :func:`match_terms_batch` (broadcast (query_id, term)
-    table, one aggregate, per-query window top-k) with
-    :func:`match_terms_bm25`'s exact integer-micros weights. df/idf are
-    computed once per DISTINCT term (query-independent), so an eval-set
-    replay shares all corpus statistics across queries. Postings shuffle
-    once on (query_id, doc_id) — never per query."""
-    from pyspark.sql import Window as W
-
-    dl = postings.groupBy("doc_id").agg(F.sum("tf").cast("long").alias("dl"))
-    stats = dl.agg(
-        F.count("*").cast("long").alias("_n"),
-        (F.sum("dl").cast("double") / F.count("*")).alias("avgdl"),
-    )
-    terms_df = query_terms.select("term").distinct()
-    matched = postings.join(F.broadcast(terms_df), "term")
-    dfreq = matched.groupBy("term").agg(F.countDistinct("doc_id").alias("_df"))
-    widf = dfreq.crossJoin(F.broadcast(stats)).select(
-        "term",
-        F.log(
-            (F.col("_n").cast("double") - F.col("_df") + 0.5)
-            / (F.col("_df").cast("double") + 0.5)
-            + 1.0
-        ).alias("idf"),
-        "avgdl",
-    )
-    j = (
-        matched.join(F.broadcast(widf), "term")
-        .join(dl, "doc_id")
-        .join(F.broadcast(query_terms.select("query_id", "term")), "term")
-    )
-    tf = F.col("tf").cast("double")
-    sat = (tf * (k1 + 1.0)) / (
-        tf + k1 * (1.0 - b + b * F.col("dl").cast("double") / F.col("avgdl"))
-    )
-    w = F.floor(F.lit(1_000_000.0) * F.col("idf") * sat).cast("long")
-    scored = (
-        j.select("query_id", "doc_id", w.alias("w"))
-        .groupBy("query_id", "doc_id")
-        .agg(F.sum("w").alias("score"))
-    )
-    win = W.partitionBy("query_id").orderBy(F.desc("score"), F.asc("doc_id"))
-    return (
-        scored.withColumn("rank", F.row_number().over(win))
-        .where(F.col("rank") <= max_return)
-        .select("query_id", "doc_id", "score", "rank")
-    )
-
-
-def search_expanded(
-    postings: DataFrame,
-    correlations: DataFrame,
-    terms: list[str],
-    docs: DataFrame | None = None,
-    top_corr: int = 5,
-    max_return: int = DEFAULT_MAX_RETURN,
-) -> DataFrame:
-    """Q7 — the reference's *dead-code* query expansion
-    (TermMatcher.class.js:55-80), resurrected set-oriented: each query term
-    is expanded with its top-`top_corr` correlated terms; expanded hits are
-    scored ``tcr × tf``; original terms score ``tf`` (tcr=1)."""
-    from pyspark.sql import Window as W
-
-    spark = postings.sparkSession
-    terms_df = literal_df(spark, sorted(set(terms)), "term")
-    w = W.partitionBy("term1").orderBy(F.desc("tcr"), F.asc("term2"))
-    expansions = (
-        correlations.join(F.broadcast(terms_df), correlations.term1 == terms_df.term)
-        .withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= top_corr)
-        .select(F.col("term2").alias("term"), F.col("tcr").alias("weight"))
-    )
-    weighted = expansions.unionByName(
-        terms_df.select("term", F.lit(1.0).alias("weight"))
-    ).groupBy("term").agg(F.max("weight").alias("weight"))
-    scored = (
-        postings.join(F.broadcast(weighted), "term")
-        .groupBy("doc_id")
-        .agg(F.max(F.col("tf") * F.col("weight")).alias("score"))
-    )
-    if docs is not None:
-        scored = scored.join(docs, "doc_id")
-    return scored.orderBy(F.desc("score"), F.asc("doc_id")).limit(max_return)
-
-
 def phrase_search(
     pos_postings: DataFrame,
     phrase_terms: list[str],
@@ -1226,13 +1064,13 @@ def ranked_eval_metrics(
 ) -> DataFrame:
     """Graded-relevance evaluation of a ranked retrieval run: per-query
     nDCG@k, MRR, precision@k and recall, every metric an EXACT integer
-    in micro-units (the cross-engine contract shared with the BM25/
-    TF-IDF weights: ``L(n) = floor(1e6·ln(n))`` over integers, then
+    in micro-units (the cross-engine contract shared with the BM25
+    weights: ``L(n) = floor(1e6·ln(n))`` over integers, then
     BIGINT sums and BIGINT ``div`` throughout — no double division
     anywhere, so Spark and a SQL oracle agree bit-for-bit).
 
-    ``run`` is ``(query_id, doc_id, rank)`` (1-based, top-k per query —
-    the shape :func:`match_terms_batch_bm25` emits); ``qrels`` is
+    ``run`` is ``(query_id, doc_id, rank)`` (1-based, top-k per
+    query); ``qrels`` is
     ``(query_id, doc_id, rel)`` with integer grades ≥ 0 (0 = judged
     irrelevant, the TREC convention). Pinned metric definitions:
 
@@ -1556,8 +1394,8 @@ def match_terms_prf(
     ``fb_docs`` results are relevant, mine their most discriminative
     terms, and rescore with the expanded query. The classic recall
     lever when queries are short and the corpus vocabulary is wider
-    than the user's — and, unlike search_expanded (correlation
-    thesaurus), it adapts to THIS query's result neighborhood.
+    than the user's — and, unlike a correlation thesaurus, it adapts to
+    THIS query's result neighborhood.
 
     Pinned two-pass contract (every step exact or pinned-float so a
     SQL twin replays bit-for-bit):

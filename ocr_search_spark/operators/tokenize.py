@@ -25,11 +25,6 @@ from .. import textproc
 from ..textproc import cjk_chars_col, english_tokens_col, segment_cjk_batch
 
 
-@F.pandas_udf(T.ArrayType(T.StringType()))
-def _segment_cjk_udf(chars: pd.Series) -> pd.Series:
-    return segment_cjk_batch(chars)
-
-
 def _doc_text(extracted: DataFrame, text_col: str = "doc_text") -> DataFrame:
     """(doc_id, spans) → (doc_id, doc_text): span texts joined in offset
     order (spans are offset-ordered by the extraction invariant) — mirrors
@@ -38,21 +33,6 @@ def _doc_text(extracted: DataFrame, text_col: str = "doc_text") -> DataFrame:
         text = F.array_join(F.transform("spans", lambda s: s["text"]), " ")
         return extracted.select("doc_id", text.alias(text_col))
     return extracted
-
-
-def doc_terms(extracted: DataFrame, text_col: str = "doc_text") -> DataFrame:
-    """(doc_id, spans) → (doc_id, terms: array<string>).
-
-    NOTE: embeds the CJK pandas UDF as a column expression — fine for a
-    terminal projection, but do NOT feed this into explode/aggregate
-    directly (Catalyst inlines the projection into the Generate/Aggregate
-    node, where a Python UDF cannot be evaluated). The pipeline path is
-    :func:`term_postings`, which keeps the UDF in its own plan node.
-    """
-    df = _doc_text(extracted, text_col)
-    eng = english_tokens_col(F.col(text_col))
-    cjk = _segment_cjk_udf(cjk_chars_col(F.col(text_col)))
-    return df.select("doc_id", F.concat(eng, cjk).alias("terms"))
 
 
 def _cjk_term_rows(
@@ -219,15 +199,3 @@ def positional_postings(
         ),
     ).select("term", "doc_id", F.col("pos").cast("int").alias("pos"))
 
-
-def token_sequences(extracted: DataFrame, wordnet: bool = False) -> DataFrame:
-    """Forward index: (doc_id, tokens) with ``tokens`` the SAME filtered
-    English token sequence :func:`positional_postings` indexes — the
-    store snippet rendering reads back by position. At scale this is a
-    doc_id-keyed table read with point lookups (k rows per query), never
-    a corpus scan per query."""
-    dt = _doc_text(extracted)
-    return dt.select(
-        "doc_id",
-        english_tokens_col(F.col("doc_text"), wordnet=wordnet).alias("tokens"),
-    )

@@ -128,29 +128,16 @@ def run_extraction_job(
     (idempotent). Conversion errors flow into the lineage ``n_errors``
     exactly like extraction errors (X2).
 
-    ``source_format='warc'``: `documents` is (warc_id, payload) crawl
-    archives. The resume unit is the ARCHIVE (buckets hash warc_id,
-    not doc_id — half an archive cannot be skipped), and the whole
-    chain — record explode, charset decode, 200/text-html policy keep,
-    html_to_spans — runs inside the envelope, so resuming a crashed
-    run never re-decodes committed archives. Captures become documents
-    with ``doc_id = sha2(url)`` (content-addressed identity, the E7
-    rule applied to URLs; a URL captured in two archives yields two
-    rows — dedup is a downstream operator). Archive framing errors and
-    per-record decode errors land in lineage ``n_errors``.
-
     ``bucket_filter`` (tests/chaos only): optional predicate limiting
     which buckets this invocation processes — simulates a partial run.
     Returns a summary dict."""
-    if source_format not in ("spans", "binary", "warc"):
+    if source_format not in ("spans", "binary"):
         raise ValueError(f"unknown source_format {source_format!r}")
     run_id = run_id or uuid.uuid4().hex[:12]
     cfg = run_config_hash(n_buckets, impl, skew_threshold, source_format)
     done = read_done_buckets(spark, out_dir, run_id, cfg)
 
-    unit_col = "warc_id" if source_format == "warc" else "doc_id"
-    docs = documents.withColumn("bucket", bucket_col(F.col(unit_col), n_buckets))
-    todo = docs
+    todo = documents.withColumn("bucket", bucket_col(F.col("doc_id"), n_buckets))
     if done:
         todo = todo.where(~F.col("bucket").isin(*sorted(done)))
     if bucket_filter is not None:
@@ -160,48 +147,6 @@ def run_extraction_job(
         return {"run_id": run_id, "buckets_done": len(done), "buckets_processed": 0}
 
     convert_errors = None
-    doc_bucket = None
-    if source_format == "warc":
-        from .operators.convert import repartition_payload_bucketed
-        from .operators.warc import warc_responses
-        from .operators.webtext import html_to_spans
-
-        src = todo.select("warc_id", "payload")
-        if num_partitions:
-            # archives are the skew unit here: one mega-archive must not
-            # share an Arrow batch with thousands of small ones
-            src = repartition_payload_bucketed(
-                src, num_partitions, id_col="warc_id"
-            )
-        resp = warc_responses(src).withColumn(
-            "bucket", bucket_col(F.col("warc_id"), n_buckets)
-        )
-        resp = resp.withColumn(
-            "doc_id",
-            F.when(
-                F.col("url").isNotNull(), F.sha2(F.col("url"), 256)
-            ).otherwise(F.concat(F.lit("archive-error-"), F.col("warc_id"))),
-        )
-        ok = resp.where(
-            F.col("error").isNull()
-            & (F.col("status") == 200)
-            & F.col("content_type").startswith("text/html")
-        )
-        spans_df = html_to_spans(
-            ok.select("doc_id", F.col("text").alias("html"))
-        )
-        errs = resp.where(F.col("error").isNotNull()).select(
-            "doc_id", F.col("error").alias("convert_error")
-        )
-        empty = (
-            "CAST(array() AS array<struct<kind:string,text:string,"
-            "media_ref:string,offset:int>>)"
-        )
-        todo = spans_df.unionByName(
-            errs.select("doc_id", F.expr(empty).alias("spans"))
-        )
-        convert_errors = errs
-        doc_bucket = resp.select("doc_id", "bucket")
     if source_format == "binary":
         from .operators.convert import convert_to_spans, repartition_payload_bucketed
 
@@ -227,12 +172,7 @@ def run_extraction_job(
             .withColumn("error", F.coalesce("error", "convert_error"))
             .drop("convert_error")
         )
-    if doc_bucket is not None:
-        # warc mode: the bucket is the ARCHIVE's hash, not derivable
-        # from doc_id — re-attach it through the capture→archive map
-        ext = ext.join(doc_bucket, "doc_id")
-    else:
-        ext = ext.withColumn("bucket", bucket_col(F.col("doc_id"), n_buckets))
+    ext = ext.withColumn("bucket", bucket_col(F.col("doc_id"), n_buckets))
 
     # 1) data commit first (dynamic overwrite of only the touched buckets)
     with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")

@@ -21,7 +21,7 @@ import json
 import threading
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from pathlib import Path
-from urllib.parse import parse_qs, urlparse
+from urllib.parse import parse_qs, unquote, urlparse
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -80,7 +80,9 @@ class PagesServer:
                         return
                     self._send(200, out)
                 elif u.path.startswith("/pageImg/") and outer.png_root is not None:
-                    rel = u.path[len("/pageImg/") :]
+                    # decode like express.static: page images are named
+                    # after source files, so spaces and CJK are common
+                    rel = unquote(u.path[len("/pageImg/") :])
                     root = Path(outer.png_root).resolve()
                     target = (root / rel).resolve()
                     if root not in target.parents and target != root:

@@ -12,6 +12,25 @@ from pathlib import Path
 
 from pyspark.sql import SparkSession
 
+_DRIVER_MEM_CAP_GB = 24
+
+
+def driver_memory(phys_bytes: int | None = None) -> str:
+    """``spark.driver.memory`` for a session this factory launches:
+    ``SPARK_DRIVER_MEM`` when set, else ~40% of physical memory in whole
+    GiB (at least 1g, at most 24g). A fixed 24g heap outgrows a 15 GB
+    host, where the JVM grows until the kernel OOM-kills it."""
+    env = os.environ.get("SPARK_DRIVER_MEM")
+    if env:
+        return env
+    if phys_bytes is None:
+        try:
+            phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+        except (AttributeError, ValueError, OSError):
+            return f"{_DRIVER_MEM_CAP_GB}g"
+    gb = int(phys_bytes * 0.4) >> 30
+    return f"{min(max(gb, 1), _DRIVER_MEM_CAP_GB)}g"
+
 
 def get_spark(
     app_name: str = "ocr_search_spark",
@@ -69,7 +88,7 @@ def get_spark(
         # batch of mega-docs cannot blow executor memory (SURVEY §4.2.1).
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
         .config("spark.sql.files.maxPartitionBytes", "134217728")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEM", "24g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
     )

@@ -99,143 +99,3 @@ def stream_maintain_postings(
         q.awaitTermination()
     return q
 
-
-# ------------------------------------------------ correlations alongside
-
-
-def correlations_table(
-    spark: SparkSession, table_path: str, n_buckets: int = 32
-) -> BucketedTable:
-    return BucketedTable(
-        spark,
-        table_path,
-        keys=["term1", "term2"],
-        n_buckets=n_buckets,
-        bucket_keys=["term1"],
-    )
-
-
-def merge_doc_batch_with_corr(
-    post_table: BucketedTable,
-    corr_table: BucketedTable,
-    docs: DataFrame,
-    max_df_ratio: float | None = 0.3,
-) -> None:
-    """One micro-batch, TWO incrementally-maintained tables: the postings
-    doc-replace MERGE (:func:`merge_doc_batch`) plus an IVM update of the
-    standing correlation table — compute via
-    :func:`~ocr_search_spark.operators.correlate.incremental_correlations`
-    (only affected-term pairs recomputed) AND storage-incremental: stored
-    pairs touching an affected term are deleted, recomputed pairs
-    upserted, carried pairs never rewritten (their buckets stay
-    byte-identical). Cost per batch ∝ affected postings, independent of
-    index size — the reference's per-file "refresh correlations" intent
-    (DbInterface.class.js:163-180) made affordable."""
-    from ..operators.correlate import incremental_correlations, term_correlations
-
-    if docs.isEmpty():
-        return
-    had_posts = post_table.exists()
-    old = None
-    if had_posts:
-        # materialize BEFORE the merge rewrites the table's files — a
-        # lazy plan would re-read the overwritten buckets afterwards
-        old = post_table.read().localCheckpoint()
-    merge_doc_batch(post_table, docs)
-    new = post_table.read().cache()
-    if not had_posts or not corr_table.exists():
-        corr_table.init(term_correlations(new, max_df_ratio=max_df_ratio))
-        return
-    changed = docs.select("doc_id").distinct()
-    stored = corr_table.read()
-    _, recomputed, affected = incremental_correlations(
-        old, new, changed, stored, max_df_ratio=max_df_ratio, return_parts=True
-    )
-    recomputed = recomputed.cache()
-    aff = affected.cache()
-    doomed = (
-        stored.join(aff.withColumnsRenamed({"term": "term1"}), "term1")
-        .select("term1", "term2")
-        .unionByName(
-            stored.join(aff.withColumnsRenamed({"term": "term2"}), "term2")
-            .select("term1", "term2")
-        )
-        .distinct()
-        # reads the very files delete() is about to rewrite — sever the
-        # lineage first
-        .localCheckpoint()
-    )
-    corr_table.delete(doomed)
-    if not recomputed.isEmpty():
-        corr_table.upsert(recomputed)
-
-
-def stream_maintain_postings_and_correlations(
-    spark: SparkSession,
-    input_path: str,
-    postings_path: str,
-    correlations_path: str,
-    checkpoint_path: str,
-    n_buckets: int = 32,
-    max_df_ratio: float | None = 0.3,
-    await_termination: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """Document stream → postings MERGE + correlation IVM per micro-batch
-    (both sinks idempotent → exactly-once under the stream checkpoint)."""
-    post_table = postings_table(spark, postings_path, n_buckets)
-    corr_table = correlations_table(spark, correlations_path, n_buckets)
-    reader = spark.readStream.schema(DOCUMENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-    q = (
-        src.writeStream.foreachBatch(
-            lambda batch_df, _bid: merge_doc_batch_with_corr(
-                post_table, corr_table, batch_df, max_df_ratio
-            )
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
-
-
-def stream_maintain_postings_from_snapshot(
-    spark: SparkSession,
-    snapshot_root: str,
-    table_path: str,
-    checkpoint_path: str,
-    n_buckets: int = 32,
-    await_termination: bool = True,
-):
-    """The closed lakehouse loop: documents land in a SnapshotTable
-    (batch commits, the exactly-once streaming sink, WAP publishes —
-    any writer) and the standing postings index FOLLOWS THE MANIFEST
-    CHANGELOG via the ``snapshot_cdc`` source (sources_cdc.py) — no
-    directory listing, no modification-time heuristics, and maintenance
-    churn (compaction, zorder, MOR materialization) never re-feeds the
-    index because the source skips rewrite commits by construction."""
-    from .. import sources_cdc
-
-    sources_cdc.register(spark)
-    table = postings_table(spark, table_path, n_buckets)
-    src = (
-        spark.readStream.format(sources_cdc.FORMAT_NAME)
-        .option("path", snapshot_root)
-        .load()
-    )
-    q = (
-        src.writeStream.foreachBatch(
-            lambda batch_df, _batch_id: merge_doc_batch(table, batch_df)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q

@@ -271,9 +271,8 @@ def stream_warc_archives(
     archive explodes to response records (operators.warc), the
     200/text-html policy keep + html_to_spans run inside the same
     micro-batch plan, and the span table appends. Capture identity is
-    ``doc_id = sha2(url)`` — the same rule as the batch envelope
-    (pipeline.run_extraction_job source_format='warc'), so a corpus can
-    mix batch backfill with streaming tail ingestion and agree on keys.
+    ``doc_id = sha2(url)`` (content-addressed URL identity), so a batch
+    backfill keyed the same way agrees with the streamed tail on keys.
     Archive framing failures append an error row (X2), never crash the
     stream."""
     from ..operators.warc import warc_responses

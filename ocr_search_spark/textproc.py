@@ -6,7 +6,7 @@ E1-E15, §7.0 decisions) so three independent implementations can agree:
 1. Spark columnar expressions (here, ``*_col`` builders) — the fast path:
    whole-stage-codegen'd, JVM-side, zero Python in the hot loop;
 2. vectorized pandas batch functions (here, ``*_batch``) — the Arrow path
-   used by the ``mapInPandas`` extraction stage, where a *real* OCR /
+   used by the ``mapInArrow`` extraction stage, where a *real* OCR /
    layout-parsing engine would slot in;
 3. a pure-Python golden oracle (``golden.py``, tests only) written
    independently against the same spec.
@@ -357,7 +357,7 @@ def cjk_chars_col(text: Column) -> Column:
 
 
 # ------------------------------------------------- vectorized pandas batch
-# Used by the mapInPandas extraction stage (the slot where a real OCR /
+# Used by the mapInArrow extraction stage (the slot where a real OCR /
 # layout engine plugs in). All operations are pandas .str vectorized —
 # no per-row Python loops.
 

@@ -252,10 +252,6 @@ def _classify_scored(seg: np.ndarray) -> tuple[str, int]:
     return chars[i], int(d[i])
 
 
-def _classify(seg: np.ndarray) -> str:
-    return _classify_scored(seg)[0]
-
-
 def ocr_line(mask: np.ndarray) -> str:
     """(7, W) binary ink mask → recognized text with word spacing."""
     return ocr_line_scored(mask)[0]

@@ -166,6 +166,38 @@ def test_http_server_end_to_end(spark, tiny_index, tmp_path):
         assert get(base + "/pageImg/../secret.txt")[0] == 404
 
 
+def test_page_img_percent_decodes_names_and_keeps_root(tmp_path):
+    """/pageImg/ percent-decodes the path like express.static, so page
+    images named after files with spaces or CJK characters resolve;
+    encoded traversal still lands outside the root and is refused. No
+    Spark: the static route never touches the tables."""
+    import http.client
+
+    from ocr_search_spark.server import PagesServer
+
+    png = tmp_path / "png"
+    png.mkdir()
+    (png / "a b.png").write_bytes(b"space")
+    (png / "頁.png").write_bytes(b"cjk")
+    (tmp_path / "secret.txt").write_bytes(b"secret")
+
+    def get(port, raw_path):
+        conn = http.client.HTTPConnection("127.0.0.1", port, timeout=30)
+        try:
+            conn.request("GET", raw_path)
+            r = conn.getresponse()
+            return r.status, r.read()
+        finally:
+            conn.close()
+
+    with PagesServer(None, None, None, png_root=str(png)) as srv:
+        assert get(srv.port, "/pageImg/a%20b.png") == (200, b"space")
+        assert get(srv.port, "/pageImg/%E9%A0%81.png") == (200, b"cjk")
+        assert get(srv.port, "/pageImg/%2e%2e/secret.txt")[0] == 404
+        assert get(srv.port, "/pageImg/..%2fsecret.txt")[0] == 404
+        assert get(srv.port, "/pageImg/%2E%2E%2Fsecret.txt")[0] == 404
+
+
 def test_search_pages_boolean_mode(spark, tiny_index):
     postings, docs = tiny_index
     # richer index: add a second term so AND/NOT bite

@@ -26,19 +26,17 @@ def _expected(golden_extracted):
     }
 
 
-@pytest.mark.parametrize("impl", ["columnar", "pandas", "arrow", "exploded", "combined"])
+@pytest.mark.parametrize("impl", ["columnar", "arrow", "exploded", "combined"])
 def test_extract_golden_equality(impl, corpus_df, golden_extracted):
     docs = corpus_df.select("doc_id", "spans")
     if impl == "columnar":
         out = extract.extract_spans_columnar(docs)
-    elif impl == "pandas":
-        out = extract.extract_spans_pandas(docs)
     elif impl == "arrow":
         out = extract.extract_spans_arrow(docs)
     elif impl == "exploded":
         out = extract.extract_spans_exploded(docs)
     else:
-        out = extract.extract_spans(docs, impl="pandas", skew_threshold=64, num_partitions=8)
+        out = extract.extract_spans(docs, impl="arrow", skew_threshold=64, num_partitions=8)
     got = _spans_of(out)
     exp = _expected(golden_extracted)
     assert set(got) == set(exp)
@@ -57,7 +55,6 @@ def test_extract_handles_unordered_spans(spark, corpus_df, golden_extracted):
         ).alias("spans"),
     )
     impls = {
-        "pandas": extract.extract_spans_pandas,
         "arrow": extract.extract_spans_arrow,
         "exploded": extract.extract_spans_exploded,
     }
@@ -80,11 +77,54 @@ def test_extract_error_column_contract(spark):
     from ocr_search_spark.schemas import DOCUMENTS
 
     df = spark.createDataFrame(rows, DOCUMENTS)
-    out = extract.extract_spans_pandas(df).collect()
+    out = extract.extract_spans_arrow(df).collect()
     by_id = {r["doc_id"]: r for r in out}
     assert by_id["d1"]["error"] is None
     assert by_id["d1"]["spans"][0]["text"] == ""
     assert by_id["d2"]["spans"] == []
+
+
+def test_extract_arrow_failed_batch_keeps_rows_with_error(monkeypatch):
+    """X3: when a batch raises, every doc_id of that batch survives with
+    empty spans and an error ``Type: message``; other batches are
+    unaffected. Driver-side, no Spark."""
+    import pyarrow as pa
+
+    span_t = pa.struct([("kind", pa.string()), ("text", pa.string()),
+                        ("media_ref", pa.string()), ("offset", pa.int32())])
+    spans = [[{"kind": "text", "text": "hello", "media_ref": "", "offset": 0}],
+             [], [{"kind": "text", "text": "x", "media_ref": "", "offset": 0}]]
+    good = pa.RecordBatch.from_arrays(
+        [pa.array(["ok1"]), pa.array(spans[:1], type=pa.list_(span_t))],
+        ["doc_id", "spans"])
+    bad = pa.RecordBatch.from_arrays(
+        [pa.array(["d1", "d2", "d3"]), pa.array(spans, type=pa.list_(span_t))],
+        ["doc_id", "spans"])
+
+    real = extract._extract_arrow_batch
+
+    def flaky(batch):
+        if batch.num_rows == 3:
+            raise RuntimeError("ocr engine died")
+        return real(batch)
+
+    monkeypatch.setattr(extract, "_extract_arrow_batch", flaky)
+    ok_out, bad_out = list(extract._extract_arrow_iter([good, bad]))
+
+    assert ok_out.column("error").to_pylist() == [None]
+    assert ok_out.column("spans").to_pylist()[0][0]["text"] == "hello"
+    assert bad_out.schema.names == ["doc_id", "spans", "error"]
+    assert bad_out.schema.field("spans").type == pa.list_(span_t)
+    assert bad_out.column("doc_id").to_pylist() == ["d1", "d2", "d3"]
+    assert bad_out.column("spans").to_pylist() == [[], [], []]
+    assert bad_out.column("error").to_pylist() == ["RuntimeError: ocr engine died"] * 3
+
+
+def test_extract_spans_rejects_unknown_impl():
+    """Only the arrow and columnar batch paths exist; the impl is checked
+    before the plan is built."""
+    with pytest.raises(ValueError, match="pandas"):
+        extract.extract_spans(None, impl="pandas")
 
 
 def test_skew_tail_present(corpus_df):

@@ -396,163 +396,11 @@ def test_spark_submit_py_files_end_to_end(corpus_df, tmp_path):
     assert summary["buckets_processed"] == 2
 
 
-def test_warc_source_pipeline_resume(spark, out_dir, tmp_path):
-    """source_format='warc': archive explode + charset decode +
-    html_to_spans run INSIDE the bucket-checkpoint envelope with the
-    ARCHIVE as the resume unit; partial run + resume == cold run; a
-    misframed archive lands in lineage n_errors."""
-    from ocr_search_spark.training.warcmini import encode_warc_file
-
-    def _arc(a, n_pages):
-        caps = []
-        for j in range(n_pages):
-            body = (
-                f"<html><body><p>archive {a} page {j} holds plenty of "
-                f"perfectly ordinary words here</p></body></html>"
-            ).encode()
-            caps.append(
-                {
-                    "record_id": f"{a}-{j}",
-                    "url": f"http://w{a}.com/p{j}",
-                    "status": 200,
-                    "reason": "OK",
-                    "content_type": "text/html; charset=utf-8",
-                    "body": body,
-                }
-            )
-        # one non-html capture per archive: policy-dropped, NOT an error
-        caps.append(
-            {
-                "record_id": f"{a}-bin",
-                "url": f"http://w{a}.com/x.bin",
-                "status": 200,
-                "reason": "OK",
-                "content_type": "application/octet-stream",
-                "body": b"\x00\x01",
-            }
-        )
-        return encode_warc_file(caps, filename=f"a{a}.warc")
-
-    rows = [(f"arc{a:02d}", bytearray(_arc(a, 3))) for a in range(12)]
-    rows.append(("arcbad", bytearray(_arc(99, 1)[:-9])))  # framing cut
-    docs = spark.createDataFrame(rows, "warc_id string, payload binary")
-
-    cold_dir = str(tmp_path / "cold_warc")
-    pipeline.run_extraction_job(
-        spark, docs, cold_dir, run_id="w", n_buckets=8, source_format="warc"
-    )
-    r1 = pipeline.run_extraction_job(
-        spark, docs, out_dir, run_id="w", n_buckets=8,
-        source_format="warc", bucket_filter=lambda b: b < 4,
-    )
-    assert 0 < r1["buckets_processed"] < 8
-    r2 = pipeline.run_extraction_job(
-        spark, docs, out_dir, run_id="w", n_buckets=8, source_format="warc"
-    )
-    assert r2["buckets_done"] == r1["buckets_processed"]
-    # 13 archives need not occupy all 8 buckets — resume must finish
-    # exactly the occupied remainder
-    occupied = (
-        docs.select(pipeline.bucket_col(F.col("warc_id"), 8).alias("b"))
-        .distinct()
-        .count()
-    )
-    assert r1["buckets_processed"] + r2["buckets_processed"] == occupied
-
-    cold = spark.read.parquet(f"{cold_dir}/{pipeline.EXTRACTED_DIR}")
-    warm = spark.read.parquet(f"{out_dir}/{pipeline.EXTRACTED_DIR}")
-    assert sorted(map(tuple, _flat(cold).collect())) == sorted(
-        map(tuple, _flat(warm).collect())
-    )
-    # 12 good archives x 3 html pages + 1 archive-error row
-    assert cold.count() == 37
-    err = cold.where(cold.error.isNotNull()).collect()
-    assert len(err) == 1 and err[0].doc_id == "archive-error-arcbad"
-    cp = spark.read.parquet(f"{out_dir}/{pipeline.CHECKPOINT_DIR}")
-    assert cp.agg({"n_errors": "sum"}).collect()[0][0] == 1
-    assert cp.agg({"n_docs": "sum"}).collect()[0][0] == 37
-
-
-def test_warc_source_search_end_to_end(spark, out_dir):
-    from ocr_search_spark.training.warcmini import encode_warc_file
-
-    caps = [
-        {
-            "record_id": 1,
-            "url": "http://q.com/hit",
-            "status": 200,
-            "reason": "OK",
-            "content_type": "text/html; charset=utf-8",
-            "body": b"<html><body><p>the rare xylophone orchestra "
-            b"rehearsal happened yesterday evening</p></body></html>",
-        },
-        {
-            "record_id": 2,
-            "url": "http://q.com/miss",
-            "status": 200,
-            "reason": "OK",
-            "content_type": "text/html; charset=utf-8",
-            "body": b"<html><body><p>everyday ordinary content with "
-            b"nothing special inside at all</p></body></html>",
-        },
-    ]
-    docs = spark.createDataFrame(
-        [("a0", bytearray(encode_warc_file(caps)))], "warc_id string, payload binary"
-    )
-    pipeline.run_extraction_job(
-        spark, docs, out_dir, run_id="ws", n_buckets=4, source_format="warc"
-    )
-    pipeline.build_postings(spark, out_dir)
-    post = spark.read.parquet(f"{out_dir}/{pipeline.POSTINGS_DIR}")
-    from ocr_search_spark.operators.search import match_terms
-
-    hits = match_terms(post, ["xylophone"]).collect()
-    import hashlib
-
-    want = hashlib.sha256(b"http://q.com/hit").hexdigest()
-    assert [h.doc_id for h in hits] == [want]
-
-
-def test_warc_source_with_size_bucketed_batching(spark, out_dir, tmp_path):
-    """num_partitions in warc mode routes archives through the
-    size-bucketed salted repartition; results are identical to the
-    unbatched run."""
-    from ocr_search_spark.training.warcmini import encode_warc_file
-
-    rows = []
-    for a in range(6):
-        n = 1 if a < 5 else 40  # one archive dwarfs the others
-        caps = [
-            {
-                "record_id": f"{a}-{j}",
-                "url": f"http://s{a}.com/p{j}",
-                "status": 200,
-                "reason": "OK",
-                "content_type": "text/html; charset=utf-8",
-                "body": (
-                    f"<html><body><p>archive {a} page {j} plenty of plain "
-                    f"ordinary words right here</p></body></html>"
-                ).encode(),
-            }
-            for j in range(n)
-        ]
-        rows.append((f"arc{a}", bytearray(encode_warc_file(caps))))
-    docs = spark.createDataFrame(rows, "warc_id string, payload binary")
-
-    plain_dir = str(tmp_path / "plain")
-    pipeline.run_extraction_job(
-        spark, docs, plain_dir, run_id="w", n_buckets=4, source_format="warc"
-    )
-    pipeline.run_extraction_job(
-        spark, docs, out_dir, run_id="w", n_buckets=4, source_format="warc",
-        num_partitions=4,
-    )
-    a = spark.read.parquet(f"{plain_dir}/{pipeline.EXTRACTED_DIR}")
-    b = spark.read.parquet(f"{out_dir}/{pipeline.EXTRACTED_DIR}")
-    assert sorted(map(tuple, _flat(a).collect())) == sorted(
-        map(tuple, _flat(b).collect())
-    )
-    assert b.count() == 45
+def test_run_extraction_job_rejects_unknown_source_format(tmp_path):
+    """Only span and binary sources exist; the format is checked before
+    any Spark work."""
+    with pytest.raises(ValueError, match="warc"):
+        pipeline.run_extraction_job(None, None, str(tmp_path), source_format="warc")
 
 
 def test_snapshot_table_source_extraction(spark, corpus_df, tmp_path):

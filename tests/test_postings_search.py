@@ -13,7 +13,7 @@ from ocr_search_spark.operators import extract, search, tokenize
 @pytest.fixture(scope="module")
 def postings_df(corpus_df, spark):
     ext = extract.extract_spans(
-        corpus_df.select("doc_id", "spans"), impl="pandas", skew_threshold=64
+        corpus_df.select("doc_id", "spans"), impl="arrow", skew_threshold=64
     ).drop("error")
     return tokenize.term_postings(ext).cache()
 

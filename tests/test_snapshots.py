@@ -417,14 +417,11 @@ def test_optimize_zorder_content_identical_and_prunes_both_cols(spark, tmp_path)
         t.optimize_zorder(["k", "ck"])
 
 
-def test_jobs_cli_snapshot_maintenance(spark, tmp_path, capsys):
-    """The lakehouse maintenance CLI: history → materialize (MOR) →
-    zorder → compact → expire, each printing its JSON summary.
-    (In-process smoke; the cluster path differs only by --py-files.)"""
-    import json
-
-    from ocr_search_spark import jobs
-
+def test_jobs_cli_snapshot_maintenance(spark, tmp_path):
+    """The lakehouse maintenance sequence: history → materialize (MOR) →
+    zorder → compact → expire, each on a fresh handle of the table root.
+    Formerly driven through a CLI subcommand; now the SnapshotTable
+    methods it wrapped."""
     root = str(tmp_path / "snap")
     t = SnapshotTable(spark, root)
     t.create(
@@ -435,17 +432,15 @@ def test_jobs_cli_snapshot_maintenance(spark, tmp_path, capsys):
     )
     t.delete_mor(spark.createDataFrame([(5,)], "k long"))
 
-    def run(*argv):
-        rc = jobs.main(["snapshot", *argv, "--table", root])
-        assert rc == 0
-        return json.loads(capsys.readouterr().out.strip().splitlines()[-1])
+    def table():
+        return SnapshotTable(spark, root)
 
-    hist = run("history")
-    assert [h["operation"] for h in hist["history"]] == ["delete-mor", "create"]
-    assert run("materialize")["materialized_to"] == 3
-    assert run("zorder", "--cols", "k,ck", "--n-files", "4")["zordered_to"] == 4
-    assert run("compact", "--small-mb", "512")["compacted_to"] == 5
-    gc = run("expire", "--keep-last", "1")
+    hist = table().history()
+    assert [h["operation"] for h in hist] == ["delete-mor", "create"]
+    assert table().materialize_deletes() == 3
+    assert table().optimize_zorder(["k", "ck"], n_files=4) == 4
+    assert table().compact(small_bytes=512 << 20, target_bytes=128 << 20) == 5
+    gc = table().expire_snapshots(keep_last=1)
     assert gc["manifests"] == 4 and gc["files"] > 0
     assert spark.read.parquet(*[
         f"{root}/{f}" for f in t._manifest(5)["files"]
@@ -658,30 +653,28 @@ def test_optimize_zorder_incremental_tail_only(spark, tmp_path):
     assert t.count() == 1536
 
 
-def test_jobs_cli_snapshot_stream_append_and_retract(spark, tmp_path, capsys):
-    import json
-
-    from ocr_search_spark import corpus, jobs
+def test_jobs_cli_snapshot_stream_append_and_retract(spark, tmp_path):
+    """Exactly-once streaming into a SnapshotTable: an append stream,
+    then a retraction stream of keys. Formerly driven through a CLI
+    subcommand; now the snapshot_sink calls it wrapped."""
+    from ocr_search_spark import corpus
+    from ocr_search_spark.streaming import snapshot_sink
 
     docs = corpus.documents_table(spark, 40, skew=False)
     src = str(tmp_path / "src")
     docs.repartition(2).write.parquet(src)
     root = str(tmp_path / "tbl")
-    rc = jobs.main(["snapshot-stream", "--input", src, "--table", root,
-                    "--checkpoint", str(tmp_path / "ck_a")])
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["rows"] == 40 and out["mode"] == "append"
+    t = SnapshotTable(spark, root)
+    snapshot_sink.stream_append_snapshot(spark, src, t, str(tmp_path / "ck_a"))
+    assert t.count() == 40
 
     keys = docs.limit(7).select("doc_id")
     kdir = str(tmp_path / "keys")
     keys.write.parquet(kdir)
-    rc = jobs.main(["snapshot-stream", "--mode", "retract", "--input", kdir,
-                    "--table", root, "--checkpoint", str(tmp_path / "ck_r"),
-                    "--key-schema", "doc_id string"])
-    assert rc == 0
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert out["rows"] == 33
+    snapshot_sink.stream_delete_snapshot(
+        spark, kdir, t, str(tmp_path / "ck_r"), key_schema="doc_id string"
+    )
+    assert SnapshotTable(spark, root).count() == 33
 
 
 def test_incremental_zorder_survives_expired_history(spark, tmp_path):

@@ -86,41 +86,6 @@ def test_cdc_source_refuses_expired_gap(spark, tmp_path):
     assert len(parts) >= 1
 
 
-def test_cdc_source_drives_postings_maintenance(spark, tmp_path, corpus_df):
-    """Snapshot changelog -> incremental postings MERGE: after two
-    append waves plus maintenance churn, the standing BucketedTable
-    must equal a from-scratch batch rebuild over the snapshot's rows."""
-    from ocr_search_spark.operators.extract import extract_spans_columnar
-    from ocr_search_spark.operators.tokenize import term_postings
-    from ocr_search_spark.streaming.index_maintain import (
-        postings_table,
-        stream_maintain_postings_from_snapshot,
-    )
-
-    sources_cdc.register(spark)
-    docs = corpus_df.select("doc_id", "spans").limit(60).cache()
-    half = docs.limit(30)
-    rest = docs.subtract(half)
-    root = str(tmp_path / "docs_tbl")
-    t = SnapshotTable(spark, root)
-    t.create(half.repartition(2))
-    pt_path, ckpt = str(tmp_path / "postings"), str(tmp_path / "ck")
-    stream_maintain_postings_from_snapshot(spark, root, pt_path, ckpt, n_buckets=4)
-
-    # churn + second wave
-    t.compact(small_bytes=1 << 30, target_bytes=1 << 40)
-    t.append(rest)
-    stream_maintain_postings_from_snapshot(spark, root, pt_path, ckpt, n_buckets=4)
-
-    maintained = postings_table(spark, pt_path, 4).read()
-    rebuilt = term_postings(
-        extract_spans_columnar(t.read()).select("doc_id", "spans")
-    )
-    a = sorted(map(tuple, maintained.select("term", "doc_id", "tf").collect()))
-    b = sorted(map(tuple, rebuilt.select("term", "doc_id", "tf").collect()))
-    assert a == b and len(a) > 0
-
-
 def test_batch_reader_time_travel_and_guards(spark, tmp_path):
     from pyspark.sql import types as T
 

@@ -337,70 +337,6 @@ def test_stream_maintain_zero_term_doc_version(spark, dirs, tmp_path):
     assert table.read().where(F.col("doc_id") == vid).count() == 0
 
 
-def test_stream_maintain_correlations_ivm(spark, dirs, tmp_path):
-    """Streaming correlation IVM: after each micro-batch the standing
-    correlation table equals a from-scratch term_correlations over the
-    final postings, AND buckets holding only carried pairs stay
-    byte-identical across a batch that doesn't affect them."""
-    from tests.test_storage import _by_bucket, _file_state
-
-    from ocr_search_spark.operators.correlate import term_correlations
-    from ocr_search_spark.streaming import index_maintain as IM
-
-    post_path = str(tmp_path / "post_tbl")
-    corr_path = str(tmp_path / "corr_tbl")
-    n_buckets = 16
-
-    def doc(i, text):
-        return (f"doc{i}", [("text", text, "", 0)])
-
-    schema = (
-        "doc_id string, spans array<struct<kind:string,text:string,"
-        "media_ref:string,offset:int>>"
-    )
-    # two disjoint vocabulary islands: A-pairs must be carried untouched
-    # when only B-docs change
-    # each term's df stays ≤ 3 (guard keeps everything at 0.3·12 = 3.6)
-    batch1 = [doc(i, f"anch{i} anch{(i + 1) % 6} apple{i % 2}") for i in range(6)]
-    batch1 += [
-        doc(i, f"zeb{i - 6} zeb{(i - 5) % 6} zulu{i % 2}") for i in range(6, 12)
-    ]
-    spark.createDataFrame(batch1, schema).repartition(1).write.mode("append").parquet(
-        dirs["in"]
-    )
-    IM.stream_maintain_postings_and_correlations(
-        spark, dirs["in"], post_path, corr_path, dirs["ckpt"], n_buckets=n_buckets
-    )
-    post_t = IM.postings_table(spark, post_path, n_buckets)
-    corr_t = IM.correlations_table(spark, corr_path, n_buckets)
-    full1 = term_correlations(post_t.read(), max_df_ratio=0.3)
-    got1 = corr_t.read()
-    assert got1.exceptAll(full1).count() == 0
-    assert full1.exceptAll(got1).count() == 0
-    assert got1.count() > 0
-
-    # batch 2: new versions for two B-island docs only
-    batch2 = [doc(8, "zeb2 zulu0 zulu0 fresh"), doc(9, "zeb3 fresh")]
-    spark.createDataFrame(batch2, schema).repartition(1).write.mode("append").parquet(
-        dirs["in"]
-    )
-    before = _by_bucket(_file_state(corr_path))
-    IM.stream_maintain_postings_and_correlations(
-        spark, dirs["in"], post_path, corr_path, dirs["ckpt"], n_buckets=n_buckets
-    )
-    after = _by_bucket(_file_state(corr_path))
-
-    full2 = term_correlations(post_t.read(), max_df_ratio=0.3)
-    got2 = corr_t.read()
-    assert got2.exceptAll(full2).count() == 0
-    assert full2.exceptAll(got2).count() == 0
-
-    # the A island (anchor*/apple pairs) is unaffected: its term1 buckets
-    # must be byte-identical — prove at least one bucket carried over
-    carried_buckets = [b for b in before if before[b] == after.get(b)]
-    assert carried_buckets, (before.keys(), after.keys())
-
-
 def test_session_window_exact_gap_boundary(spark):
     """Spark's session_window MERGES two events exactly gapDuration
     apart (an event starting at the previous window's end extends it);

@@ -94,29 +94,28 @@ def test_sync_add_modify_delete_idempotent(spark, tmp_path):
     assert got.where(F.col("doc_id").isin(f2_ids)).count() == 0
 
 
-def test_cli_tokenizer_train_both_algos(spark, tmp_path, capsys, monkeypatch):
-    import json
+def test_cli_tokenizer_train_both_algos(spark, tmp_path):
+    """Subword vocab training over a documents table, both algorithms
+    (unigram hard-EM pieces and BPE merges), written out and read back.
+    Formerly driven through a CLI subcommand; now the library calls."""
+    from ocr_search_spark.training.bpe import learn_bpe_merges
+    from ocr_search_spark.training.unigram_lm import train_unigram, word_counts
 
-    import ocr_search_spark.jobs as jobs
-    import ocr_search_spark.session as session
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(40)
     src = str(tmp_path / "docs")
     docs.write.parquet(src)
 
-    rc = jobs.main(["tokenizer-train", "--input", src,
-                    "--out", str(tmp_path / "uni"), "--vocab-size", "30",
-                    "--iters", "1"])
-    out1 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rc == 0 and out1["algo"] == "unigram" and out1["pieces"] > 0
+    vocab = train_unigram(spark.read.parquet(src), n_multi=30, iters=1)
+    vocab.write.mode("overwrite").parquet(str(tmp_path / "uni"))
+    assert vocab.count() > 0
     assert spark.read.parquet(str(tmp_path / "uni")).columns == ["piece", "cnt", "score_e6"]
 
-    rc = jobs.main(["tokenizer-train", "--input", src,
-                    "--out", str(tmp_path / "bpe"), "--algo", "bpe",
-                    "--vocab-size", "5"])
-    out2 = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rc == 0 and out2["algo"] == "bpe" and out2["merges"] > 0
+    wf = word_counts(spark.read.parquet(src), "text").select(
+        "word", F.col("wcnt").alias("freq")
+    )
+    merges = learn_bpe_merges(wf, n_merges=5)
+    merges.write.mode("overwrite").parquet(str(tmp_path / "bpe"))
+    assert merges.count() > 0
 
 
 def test_sync_bulk_scan_path_equals_per_file(spark, tmp_path, monkeypatch):

@@ -1268,23 +1268,24 @@ def test_dedup_corpus_pipeline_keeps_longest_per_cluster(spark):
     assert sorted(r["doc_id"] for r in kept.collect()) == [2, 4]
 
 
-def test_cli_dedup_subprocess(spark, tmp_path, capsys, monkeypatch):
-    import json
+def test_cli_dedup_subprocess(spark, tmp_path):
+    """The near-dup dedup pipeline over a documents table with a planted
+    near-dup: kept docs and decisions written out and read back.
+    Formerly driven through a CLI subcommand; now the library call."""
+    from ocr_search_spark.training.dedup import dedup_corpus
 
-    import ocr_search_spark.jobs as jobs
-    import ocr_search_spark.session as session
-
-    monkeypatch.setattr(session, "get_spark", lambda *a, **k: spark)
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(50)
     # plant two exact-ish near-dups of doc 0
     extra = docs.limit(1).selectExpr("doc_id + 1000 AS doc_id", "text",
                                      "lang", "source", "n_chars")
     src = str(tmp_path / "docs")
     docs.unionByName(extra).write.parquet(src)
-    rc = jobs.main(["dedup", "--input", src, "--out", str(tmp_path / "kept"),
-                    "--decisions", str(tmp_path / "dec"), "--threshold", "0.7"])
-    out = json.loads(capsys.readouterr().out.strip().splitlines()[-1])
-    assert rc == 0 and out["n_in"] == 51 and out["n_dropped"] >= 1
+    inp = spark.read.parquet(src)
+    decisions, kept = dedup_corpus(inp, threshold=0.7)
+    decisions.write.parquet(str(tmp_path / "dec"))
+    kept.write.parquet(str(tmp_path / "kept"))
+    n_in, n_kept = inp.count(), spark.read.parquet(str(tmp_path / "kept")).count()
+    assert n_in == 51 and n_in - n_kept >= 1
     dec = spark.read.parquet(str(tmp_path / "dec"))
     assert set(dec.columns) == {"id", "cluster_id", "kept_id", "keep"}
 

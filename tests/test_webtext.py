@@ -209,7 +209,7 @@ def test_html_to_spans_interleaves_and_feeds_the_pipeline(spark):
     assert "chrome.png" not in str(got)  # link-farm image dropped
     assert r["spans"][0]["text"].startswith("The searchable")
     # the span array rides the REAL pipeline end-to-end
-    ext = extract.extract_spans(html_to_spans(df), impl="pandas")
+    ext = extract.extract_spans(html_to_spans(df), impl="arrow")
     post = tokenize.term_postings(ext.drop("error"))
     hits = search.search(spark, post, "searchable")
     assert hits.count() == 1
