@@ -35,9 +35,7 @@ def _doc_text(extracted: DataFrame, text_col: str = "doc_text") -> DataFrame:
     return extracted
 
 
-def _cjk_term_rows(
-    doc_text: DataFrame, text_col: str, cjk_mode: str = "fmm"
-) -> DataFrame:
+def _cjk_term_rows(doc_text: DataFrame, text_col: str) -> DataFrame:
     """CJK branch as a mapInPandas stage: (doc_id, cjk_chars) → one row per
     segmented term. mapInPandas is a plan-level node (ArrowEvalPython
     cannot be inlined into Generate/Aggregate the way an expression-level
@@ -51,16 +49,13 @@ def _cjk_term_rows(
     chars_df = doc_text.select(
         "doc_id", cjk_chars_col(F.col(text_col)).alias("cjk_chars")
     )
-    seg_batch = (
-        textproc.segment_cjk_search_batch if cjk_mode == "search" else segment_cjk_batch
-    )
 
     def seg_iter(batches):
         for pdf in batches:
             pdf = pdf[pdf["cjk_chars"].str.len() > 0]
             if len(pdf) == 0:
                 continue
-            segs = seg_batch(pdf["cjk_chars"])
+            segs = segment_cjk_batch(pdf["cjk_chars"])
             lens = segs.map(len)
             if lens.sum() == 0:
                 continue
@@ -83,32 +78,19 @@ def _cjk_term_rows(
     )
 
 
-def term_postings(
-    extracted: DataFrame,
-    cjk_mode: str = "fmm",
-    wordnet: bool = False,
-    nltk_stop: bool = False,
-) -> DataFrame:
+def term_postings(extracted: DataFrame) -> DataFrame:
     """Build the inverted index: (term, doc_id, tf).
 
     English branch: pure columnar expressions → explode (all JVM-side,
     whole-stage codegen). CJK branch: mapInPandas segmentation over only
     the docs that contain CJK chars. Union → hash aggregate with map-side
     partial aggregation (the per-doc TF dict of tokenize_and_stem.py:55-66
-    falls out of the final aggregate for free).
-
-    ``cjk_mode``: 'fmm' (plain forward max-match) or 'search' (jieba
-    cut_for_search-style overlapping sub-word emission)."""
+    falls out of the final aggregate for free)."""
     dt = _doc_text(extracted)
     eng_rows = dt.select(
-        "doc_id",
-        F.explode(
-            english_tokens_col(
-                F.col("doc_text"), wordnet=wordnet, nltk_stop=nltk_stop
-            )
-        ).alias("term"),
+        "doc_id", F.explode(english_tokens_col(F.col("doc_text"))).alias("term")
     )
-    all_rows = eng_rows.unionByName(_cjk_term_rows(dt, "doc_text", cjk_mode))
+    all_rows = eng_rows.unionByName(_cjk_term_rows(dt, "doc_text"))
     return all_rows.groupBy("term", "doc_id").agg(
         F.count("*").cast("int").alias("tf")
     )

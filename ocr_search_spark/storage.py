@@ -107,10 +107,14 @@ class BucketedTable:
     ) -> None:
         """Write the post-merge rows of the touched buckets: dynamic
         overwrite for buckets with rows, FS-drop for buckets the merge
-        emptied. ``final`` must already carry BUCKET_COL. Cached for the
-        duration so the lineage executes once (the nonempty probe and the
-        write would otherwise both run it)."""
-        final = final.cache()
+        emptied. ``final`` must already carry BUCKET_COL. It is
+        hash-partitioned on BUCKET_COL first, so every bucket's rows sit
+        in one task and each rewritten bucket is one file, whatever
+        shuffle the merge planned (a shuffled anti-join would otherwise
+        scatter a bucket over up to shuffle-partitions files). Cached for
+        the duration so the lineage executes once (the nonempty probe and
+        the write would otherwise both run it)."""
+        final = final.repartition(len(touched), F.col(BUCKET_COL)).cache()
         try:
             nonempty = {
                 r[BUCKET_COL]
@@ -225,13 +229,15 @@ class BucketedTable:
     def init(self, df: DataFrame) -> None:
         """Full initial load. The table dir is removed first: a dynamic
         overwrite alone would leave stale bucket dirs from a previous
-        load (it only replaces partitions present in the new data)."""
+        load (it only replaces partitions present in the new data). The
+        meta is written before the data, so a load that dies mid-write
+        leaves a table that reads as empty rather than one that fails."""
         root = self._fs_path(self.path)
         fs = self._fs(root)
         if fs.exists(root):
             fs.delete(root, True)
-        self._overwrite_buckets(df.withColumn(BUCKET_COL, self._bucket()))
         self._write_meta(df.schema)
+        self._overwrite_buckets(df.withColumn(BUCKET_COL, self._bucket()))
 
     def read(self) -> DataFrame:
         raw = self._read_raw()
@@ -267,12 +273,14 @@ class BucketedTable:
         set need not overlap its old one.
 
         Pass ``groups`` explicitly when a group's new version can be
-        EMPTY (a re-processed doc with no tokens): it then has no update
-        rows, so deriving groups from ``updates`` alone would leave its
-        stale rows in place. Requires ``bucket_keys ⊆ group_keys``;
-        rewrites only the touched buckets, FS-drops any the replace
-        empties. Idempotent: re-applying the same batch reproduces the
-        same table state. The table must exist (``init`` first)."""
+        EMPTY (a re-processed doc with no tokens, a deleted file): it
+        then has no update rows, so deriving groups from ``updates``
+        alone would leave its stale rows in place. Requires
+        ``bucket_keys ⊆ group_keys``; rewrites only the touched buckets,
+        FS-drops any the replace empties. Idempotent: re-applying the
+        same batch reproduces the same table state. An absent table is
+        created from ``updates`` with the layout and meta of ``init``;
+        an empty ``groups`` writes nothing, so it creates nothing."""
         self._check_meta()
         if not set(self.bucket_keys) <= set(group_keys):
             raise ValueError(
@@ -286,6 +294,9 @@ class BucketedTable:
         touched = self._touched_buckets(groups)
         if not touched:
             return []
+        if not self.exists():
+            self.init(updates)
+            return touched
         raw = self._read_raw()
         cols = [c for c in raw.columns if c != BUCKET_COL]
         current = raw.where(F.col(BUCKET_COL).isin(touched)).select(cols)
@@ -306,10 +317,9 @@ class BucketedTable:
         plain-parquet analogue of Delta/Iceberg ``OPTIMIZE``: the
         fragmentation probe lists per-bucket files through the FS API
         (driver cost ∝ n_buckets), only over-budget buckets are read,
-        and the rewrite hash-partitions on the bucket column so each
-        bucket lands in exactly one task → one file, committed with the
-        same pruned dynamic overwrite as every other mutation.  Returns
-        the compacted bucket ids."""
+        and the rewrite is committed like every other mutation: one task
+        and one file per bucket, pruned dynamic overwrite.  Returns the
+        compacted bucket ids."""
         self._check_meta()
         root = self._fs_path(self.path)
         fs = self._fs(root)
@@ -330,15 +340,12 @@ class BucketedTable:
         if not fragmented:
             return []
         rows = self._read_raw().where(F.col(BUCKET_COL).isin(fragmented))
-        # hash-repartition on the bucket column: every bucket's rows in
-        # exactly one task, so dynamic overwrite emits one file per dir.
-        # Committed via _commit_touched (not a bare dynamic overwrite):
-        # a fragmented bucket whose files hold ZERO rows would never
-        # appear in the written data, so dynamic overwrite would leave
-        # its stale files behind — _commit_touched FS-drops it instead.
-        self._commit_touched(
-            fragmented, rows.repartition(len(fragmented), F.col(BUCKET_COL))
-        )
+        # _commit_touched writes one file per bucket. It is used rather
+        # than a bare dynamic overwrite because a fragmented bucket whose
+        # files hold ZERO rows would never appear in the written data, so
+        # dynamic overwrite would leave its stale files behind —
+        # _commit_touched FS-drops it instead.
+        self._commit_touched(fragmented, rows)
         return sorted(fragmented)
 
     def delete(self, doomed_keys: DataFrame) -> list[int]:

@@ -43,11 +43,14 @@ def postings_table(
     )
 
 
-def merge_doc_batch(table: BucketedTable, docs: DataFrame) -> None:
+def merge_doc_batch(
+    table: BucketedTable, docs: DataFrame, drop: DataFrame | None = None
+) -> None:
     """Extract + tokenize one batch of (latest-version) documents and
-    doc-replace them into the standing postings table."""
-    if docs.isEmpty():
-        return
+    doc-replace them into the postings table, in one ``replace_group``
+    (which creates the table on the first batch). ``drop`` holds more
+    doc_ids whose postings go with no new version: the pages of files
+    ``sync`` deleted, or a modified file no longer holds."""
     # Last version wins within a batch: two files in one batch can both
     # carry a doc_id; keep the max spans tuple deterministically (the
     # file stream gives no order — at scale carry an explicit version
@@ -59,15 +62,13 @@ def merge_doc_batch(table: BucketedTable, docs: DataFrame) -> None:
     )
     ext = extract_spans_columnar(latest)
     posts = term_postings(ext.select("doc_id", "spans"))
-    if not table.exists():
-        table.init(posts)
-    else:
-        # groups = the batch's doc_ids, NOT the postings' doc_ids: a doc
-        # whose new version tokenizes to ZERO terms produces no posting
-        # rows, but its old postings must still be dropped
-        table.replace_group(
-            posts, group_keys=["doc_id"], groups=latest.select("doc_id")
-        )
+    # groups = the batch's doc_ids, NOT the postings' doc_ids: a doc
+    # whose new version tokenizes to ZERO terms produces no posting
+    # rows, but its old postings must still be dropped
+    groups = latest.select("doc_id")
+    if drop is not None:
+        groups = groups.unionByName(drop.select("doc_id"))
+    table.replace_group(posts, group_keys=["doc_id"], groups=groups)
 
 
 def stream_maintain_postings(

@@ -445,10 +445,6 @@ def segment_cjk_search(chars: str) -> list[str]:
     return out
 
 
-def segment_cjk_search_batch(chars: pd.Series) -> pd.Series:
-    return chars.fillna("").map(segment_cjk_search)
-
-
 # -------------------------------------------- density-based main content
 # Readability/boilerpipe-style block classification (north_rule: "HTML
 # boilerplate strip … DOM heuristics"), pinned so Spark and the DuckDB

@@ -79,7 +79,7 @@ def test_product_plans_have_no_cartesian_or_unbounded_bnlj(spark, tmp_path):
     assert set(plans) == {
         "term_postings[arrow]", "term_postings[columnar]", "match_terms",
         "match_terms_fuzzy", "prefix_search", "boolean_search",
-        "merge_doc_batch",
+        "merge_doc_batch", "sync_postings", "sync_membership", "sync_filelib",
     }
     for name, df in plans.items():
         info = audit(df, plan_string(df))

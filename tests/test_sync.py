@@ -5,11 +5,14 @@ from __future__ import annotations
 
 import os
 
+import pyarrow.parquet as pq
+import pytest
 from pyspark.sql import functions as F
 
 from ocr_search_spark import corpus, sync
 from ocr_search_spark.operators.extract import extract_spans_columnar
 from ocr_search_spark.operators.tokenize import term_postings
+from ocr_search_spark.storage import BucketedTable
 from tests.test_storage import _file_state
 
 
@@ -278,3 +281,148 @@ def test_diff_filelib_matches_dict_model(spark):
     # unchanged and older-mtime paths are not changes
     assert "same.pdf" not in got and "older.pdf" not in got
     assert set(want.values()) == {"added", "deleted", "modified"}
+
+
+# ------------------------------------------------- doc-replace per poll
+
+_T0_NS = 1_700_000_000 * 10**9
+_POLL_BUCKETS = 8
+
+
+def _put(source: str, name: str, tbl, ns: int) -> None:
+    """Write ``tbl`` as the source file ``name`` with mtime ``ns``."""
+    path = os.path.join(source, name)
+    pq.write_table(tbl, path)
+    os.utime(path, ns=(ns, ns))
+
+
+def _pairs(df, *cols) -> set:
+    return {tuple(r) for r in df.select(*cols).collect()}
+
+
+def _assert_matches_source(spark, source: str, wh: str) -> None:
+    """postings = a fresh term_postings build over the current files,
+    membership = their (path, doc_id) pairs, filelib = the listing."""
+    posts = sync.postings_table(spark, f"{wh}/postings", _POLL_BUCKETS).read()
+    want = term_postings(
+        extract_spans_columnar(spark.read.parquet(source).select("doc_id", "spans"))
+    )
+    assert posts.exceptAll(want).count() == 0 and want.exceptAll(posts).count() == 0
+    names = sorted(os.listdir(source))
+    held = {
+        (n, d)
+        for n in names
+        for d in pq.read_table(os.path.join(source, n), columns=["doc_id"])
+        .column("doc_id").to_pylist()
+    }
+    mem = sync.membership_table(spark, f"{wh}/membership").read()
+    assert _pairs(mem, "path", "doc_id") == held
+    lib = sync.filelib_table(spark, f"{wh}/filelib").read()
+    listing = {(n, os.stat(os.path.join(source, n)).st_mtime_ns) for n in names}
+    assert _pairs(lib, "path", "mtime") == listing
+
+
+def _cold_tree(spark, tmp_path):
+    """f0..f3 of 8 docs each, cold-synced; returns (source, wh, docs)
+    where docs holds 48 docs: 0-31 in the files, 32-47 spare."""
+    source, wh = str(tmp_path / "source"), str(tmp_path / "wh")
+    os.makedirs(source)
+    docs = corpus.documents_table(spark, 48, skew=False).orderBy("doc_id").toArrow()
+    assert docs.num_rows == 48
+    for i in range(4):
+        _put(source, f"f{i}.parquet", docs.slice(8 * i, 8), _T0_NS)
+    assert sync.sync_once(spark, source, wh, _POLL_BUCKETS) == {
+        "added": 4, "modified": 0, "deleted": 0,
+    }
+    return source, wh, docs
+
+
+def test_sync_dropped_page_leaves_postings_and_file_delete_cascades(spark, tmp_path):
+    """A modified file that no longer holds a page takes that page's
+    postings with it in the same poll; deleting the file later leaves no
+    postings for any page it ever held."""
+    source, wh, docs = _cold_tree(spark, tmp_path)
+    posts = sync.postings_table(spark, f"{wh}/postings", _POLL_BUCKETS)
+    f1_ids = docs.slice(8, 8).column("doc_id").to_pylist()
+    dropped = f1_ids[-1]
+    assert posts.read().where(F.col("doc_id") == dropped).count() > 0
+
+    _put(source, "f1.parquet", docs.slice(8, 7), _T0_NS + 10**9)
+    assert sync.sync_once(spark, source, wh, _POLL_BUCKETS) == {
+        "added": 0, "modified": 1, "deleted": 0,
+    }
+    assert posts.read().where(F.col("doc_id") == dropped).count() == 0
+    _assert_matches_source(spark, source, wh)
+
+    os.remove(os.path.join(source, "f1.parquet"))
+    assert sync.sync_once(spark, source, wh, _POLL_BUCKETS) == {
+        "added": 0, "modified": 0, "deleted": 1,
+    }
+    assert posts.read().where(F.col("doc_id").isin(f1_ids)).count() == 0
+    _assert_matches_source(spark, source, wh)
+
+
+def test_sync_sees_rewrite_within_the_listed_second(spark, tmp_path):
+    """Two writes of one file whose mtimes fall in the same second: the
+    second is a modification (the filelib keeps nanoseconds)."""
+    source, wh = str(tmp_path / "source"), str(tmp_path / "wh")
+    os.makedirs(source)
+    docs = corpus.documents_table(spark, 8, skew=False).orderBy("doc_id").toArrow()
+    _put(source, "f.parquet", docs.slice(0, 4), _T0_NS + 100_000_000)
+    assert sync.sync_once(spark, source, wh, _POLL_BUCKETS) == {
+        "added": 1, "modified": 0, "deleted": 0,
+    }
+    _put(source, "f.parquet", docs.slice(4, 4), _T0_NS + 600_000_000)
+    assert sync.sync_once(spark, source, wh, _POLL_BUCKETS) == {
+        "added": 0, "modified": 1, "deleted": 0,
+    }
+    _assert_matches_source(spark, source, wh)
+
+
+@pytest.mark.parametrize("k", [1, 2, 3])
+def test_sync_crash_at_kth_write_converges_on_next_poll(spark, tmp_path, monkeypatch, k):
+    """A mixed poll (an add, a modify, a modify that drops a page, a
+    delete) dies at its k-th table write; one clean poll then leaves all
+    three tables equal to the source. Every poll mutates through exactly
+    three replace_group calls, postings → membership → filelib, and
+    never through upsert or delete."""
+    source, wh, docs = _cold_tree(spark, tmp_path)
+    mixed = {"added": 1, "modified": 2, "deleted": 1}
+    f0_new = docs.slice(0, 8).set_column(1, "spans", docs.slice(32, 8).column("spans"))
+    _put(source, "f0.parquet", f0_new, _T0_NS + 10**9)
+    _put(source, "f1.parquet", docs.slice(8, 5), _T0_NS + 10**9)
+    os.remove(os.path.join(source, "f2.parquet"))
+    _put(source, "f4.parquet", docs.slice(40, 8), _T0_NS + 10**9)
+
+    writes, other = [], []
+    crash_at = [k]
+    replace_group = BucketedTable.replace_group
+
+    def counted_replace_group(self, *args, **kwargs):
+        writes.append(os.path.basename(self.path))
+        if len(writes) == crash_at[0]:
+            raise RuntimeError("injected crash")
+        return replace_group(self, *args, **kwargs)
+
+    def forbidden(name):
+        real = getattr(BucketedTable, name)
+
+        def call(self, *args, **kwargs):
+            other.append(name)
+            return real(self, *args, **kwargs)
+
+        return call
+
+    monkeypatch.setattr(BucketedTable, "replace_group", counted_replace_group)
+    monkeypatch.setattr(BucketedTable, "upsert", forbidden("upsert"))
+    monkeypatch.setattr(BucketedTable, "delete", forbidden("delete"))
+
+    with pytest.raises(RuntimeError, match="injected crash"):
+        sync.sync_once(spark, source, wh, _POLL_BUCKETS)
+    assert writes == ["postings", "membership", "filelib"][:k]
+
+    writes.clear()
+    crash_at[0] = 0
+    assert sync.sync_once(spark, source, wh, _POLL_BUCKETS) == mixed
+    assert writes == ["postings", "membership", "filelib"] and other == []
+    _assert_matches_source(spark, source, wh)

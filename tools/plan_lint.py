@@ -2,10 +2,12 @@
 
 For each plan the jobs run — the top-k matchers behind ``search`` and
 ``serve`` (exact, fuzzy, prefix, boolean), the postings build over the
-arrow and columnar extraction paths, and one ``merge_doc_batch`` of the
-streaming/sync maintenance path — it builds the DataFrame over a small
-synthetic corpus and inspects the physical plan (no collect) for the two
-operators that turn into corpus-squared work at scale:
+arrow and columnar extraction paths, one ``merge_doc_batch`` of the
+streaming maintenance path, and the postings, membership and file
+library frames one ``sync_once`` poll commits — it builds the DataFrame
+over a small synthetic corpus and inspects the physical plan (no
+collect) for the two operators that turn into corpus-squared work at
+scale:
 
 * ``CartesianProduct``        — always a violation (O(N·M) rows moved);
 * ``BroadcastNestedLoopJoin`` — a violation unless the broadcast side
@@ -33,6 +35,7 @@ Exit 1 on any violation.
 
 from __future__ import annotations
 
+import os
 import re
 import sys
 import tempfile
@@ -183,7 +186,48 @@ def product_plans(spark, work_dir: str) -> dict:
     table._commit_touched = record
     merge_doc_batch(table, spans.limit(20))
     plans["merge_doc_batch"] = committed[0]
+    plans.update(_sync_plans(spark, spans, work_dir))
     return plans
+
+
+def _sync_plans(spark, spans, work_dir: str) -> dict:
+    """sync_postings / sync_membership / sync_filelib: the frames one mixed
+    ``sync_once`` poll (a file added, one deleted, one modified to drop a
+    page) hands to ``BucketedTable._commit_touched``, once per table."""
+    import pyarrow.parquet as pq
+
+    from ocr_search_spark import sync
+    from ocr_search_spark.storage import BucketedTable
+
+    source, warehouse = f"{work_dir}/source", f"{work_dir}/warehouse"
+    os.makedirs(source)
+    rows = spans.limit(40).toArrow()
+
+    def put(name: str, tbl, mtime_ns: int) -> None:
+        pq.write_table(tbl, f"{source}/{name}")
+        os.utime(f"{source}/{name}", ns=(mtime_ns, mtime_ns))
+
+    t0 = 1_700_000_000 * 10**9
+    for i in range(3):
+        put(f"f{i}.parquet", rows.slice(10 * i, 10), t0)
+    sync.sync_once(spark, source, warehouse, n_buckets=8)
+    put("f0.parquet", rows.slice(0, 9), t0 + 1)
+    os.remove(f"{source}/f1.parquet")
+    put("f3.parquet", rows.slice(30, 10), t0)
+
+    committed = {}
+    commit = BucketedTable._commit_touched
+
+    def record(table, touched, final):
+        committed[f"sync_{os.path.basename(table.path)}"] = final
+        commit(table, touched, final)
+
+    BucketedTable._commit_touched = record
+    try:
+        sync.sync_once(spark, source, warehouse, n_buckets=8)
+    finally:
+        BucketedTable._commit_touched = commit
+    return committed
 
 
 def main() -> int:
