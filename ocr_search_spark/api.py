@@ -1,4 +1,4 @@
-"""Serving-layer semantics: the GET /pages contract and path conversion.
+"""Serving-layer semantics: the GET /pages contract.
 
 The engine proper ends at DataFrames; this module pins the thin API
 behaviors of the reference so a front-end can swap backends without
@@ -11,13 +11,6 @@ seeing different validation or response shapes:
   '0', '007', '3.5' are 400s, exactly as there), engine errors wrapped
   as 500, response shaped ``{pageList: [{oriFilePath, pageIdx,
   imgPath}]}`` sliced to maxReturn.
-* path conversion — PathConvert
-  (/root/reference/src/util/PathConvert.const.js:10-134): the
-  pptx/docx → pdf → pngDir triplet mapping. Driver-side functions
-  mirror the JS first-occurrence ``String.replace`` exactly; the
-  columnar variant pins the saner anchored semantics (dir prefix at
-  start, extension at end) — identical on every path the reference can
-  actually produce, and safe for degenerate names like ``a.pdf.pdf``.
 """
 
 from __future__ import annotations
@@ -28,13 +21,6 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from .operators.search import DEFAULT_MAX_RETURN, search
-
-# AppConfig.const.js:4-9
-DATA_DIR = "data"
-PPTX_DIR = f"{DATA_DIR}/pptx"
-DOCX_DIR = f"{DATA_DIR}/docx"
-PDF_DIR = f"{DATA_DIR}/pdf"
-PNG_DIR = f"{DATA_DIR}/png"
 
 _MAX_RETURN_RE = re.compile(r"^[1-9]\d*$")  # ApiHandler.const.js:23
 
@@ -53,7 +39,6 @@ def search_pages(
     postings: DataFrame,
     docs: DataFrame,
     params: dict,
-    history_sink=None,
     pos_postings: DataFrame | None = None,
 ) -> dict:
     """The GET /pages handler, param dict in → response dict out.
@@ -126,10 +111,7 @@ def search_pages(
                 .select("ori_file_path", "page_idx", "img_path")
             )
         else:
-            hits = search(
-                spark, postings, query, docs=docs, max_return=k,
-                history_sink=history_sink,
-            )
+            hits = search(spark, postings, query, docs=docs, max_return=k)
         rows = hits.collect()
     except ApiError:
         raise
@@ -145,69 +127,3 @@ def search_pages(
             for r in rows
         ]
     }
-
-
-# ------------------------------------------------------------ PathConvert
-# Driver-side: byte-faithful to the JS (String.replace = first occurrence).
-
-
-def _rep1(s: str, old: str, new: str) -> str:
-    return s.replace(old, new, 1)
-
-
-def pptx_to_pdf(p: str) -> str:
-    return _rep1(_rep1(p, PPTX_DIR, PDF_DIR), ".pptx", ".pdf")
-
-
-def pptx_to_png_dir(p: str) -> str:
-    return _rep1(_rep1(p, PPTX_DIR, PNG_DIR), ".pptx", "")
-
-
-def docx_to_pdf(p: str) -> str:
-    return _rep1(_rep1(p, DOCX_DIR, PDF_DIR), ".docx", ".pdf")
-
-
-def docx_to_png_dir(p: str) -> str:
-    return _rep1(_rep1(p, DOCX_DIR, PNG_DIR), ".docx", "")
-
-
-def pdf_to_pptx(p: str) -> str:
-    return _rep1(_rep1(p, PDF_DIR, PPTX_DIR), ".pdf", ".pptx")
-
-
-def pdf_to_docx(p: str) -> str:
-    return _rep1(_rep1(p, PDF_DIR, DOCX_DIR), ".pdf", ".docx")
-
-
-def pdf_to_png_dir(p: str) -> str:
-    return _rep1(_rep1(p, PDF_DIR, PNG_DIR), ".pdf", "")
-
-
-def png_dir_to_pptx(p: str) -> str:
-    return _rep1(p, PNG_DIR, PPTX_DIR) + ".pptx"
-
-
-def png_dir_to_docx(p: str) -> str:
-    return _rep1(p, PNG_DIR, DOCX_DIR) + ".docx"
-
-
-def png_dir_to_pdf(p: str) -> str:
-    return _rep1(p, PNG_DIR, PDF_DIR) + ".pdf"
-
-
-# Columnar: anchored (dir prefix at start, extension at end) — identical
-# to the JS on every real path, immune to repeated substrings.
-
-_DIR_RE = {d: "^" + re.escape(d) for d in (PPTX_DIR, DOCX_DIR, PDF_DIR, PNG_DIR)}
-
-
-def convert_path_col(
-    col: F.Column, src_dir: str, dst_dir: str, src_ext: str | None, dst_ext: str
-) -> F.Column:
-    """Columnar triplet mapping: swap the leading data dir, swap the
-    trailing extension (``src_ext=None`` = append ``dst_ext``, the
-    pngDir→* direction)."""
-    out = F.regexp_replace(col, _DIR_RE[src_dir], dst_dir)
-    if src_ext is None:
-        return F.concat(out, F.lit(dst_ext))
-    return F.regexp_replace(out, re.escape(src_ext) + "$", dst_ext.replace("$", r"\$"))

@@ -13,7 +13,6 @@ ships the package itself via addPyFile — same mechanism).
 Jobs:
   extract          resumable bucketed extraction (Arrow batches) +
                    postings build
-  maintain-stream  incremental postings MERGE from a document stream
   search           top-k query against a stored postings table
   serve            HTTP /pages + /pageImg façade over stored tables
                    (the reference's runserver.script.js equivalent,
@@ -52,13 +51,6 @@ def main(argv: list[str] | None = None) -> int:
     )
     pe.add_argument("--skip-postings", action="store_true")
     _add_common(pe)
-
-    pm = sub.add_parser("maintain-stream", help="incremental postings MERGE")
-    pm.add_argument("--input", required=True)
-    pm.add_argument("--table", required=True)
-    pm.add_argument("--checkpoint", required=True)
-    pm.add_argument("--n-buckets", type=int, default=32)
-    _add_common(pm)
 
     ps = sub.add_parser("search", help="top-k query against stored postings")
     ps.add_argument("--postings", required=True, help="postings parquet dir")
@@ -103,14 +95,6 @@ def main(argv: list[str] | None = None) -> int:
         if not args.skip_postings:
             build_postings(spark, args.out)
         print(json.dumps(summary))
-    elif args.job == "maintain-stream":
-        from .streaming.index_maintain import stream_maintain_postings
-
-        stream_maintain_postings(
-            spark, args.input, args.table, args.checkpoint,
-            n_buckets=args.n_buckets,
-        )
-        print(json.dumps({"job": "maintain-stream", "table": args.table}))
     elif args.job == "search":
         from .operators.search import search
 

@@ -59,8 +59,8 @@ def team_draft_interleave(
     Kurup/Joachims CIKM'08), the standard online A/B ranker comparison:
     merge two systems' ranked lists into one result list where each
     slot is owned by team 'A' or 'B'; clicks on a team's slots credit
-    that team, and per-query credit feeds a paired test (this repo's
-    ``sign_test``). Deterministic variant: the published coin flip on
+    that team, and per-query credit feeds a paired test (e.g. a sign
+    test). Deterministic variant: the published coin flip on
     picking order is pinned to ``a_first_on_tie`` (default: even
     ``query_col`` → A first) — reproducibility over randomization, with
     debiasing recovered across the query population by the parity
@@ -146,9 +146,9 @@ def interleave_credit(
     interleaving experiment: each click on an interleaved slot credits
     the team that contributed it; per query the team with more credited
     clicks wins ('A' / 'B' / 'tie', ties including the no-click case).
-    The winner column is exactly the paired-comparison input
-    ``sign_test`` consumes — interleave → credit → sign test is the
-    complete online-experiment readout, every stage oracle-gated.
+    The winner column is exactly the input a paired sign test
+    consumes — interleave → credit → sign test is the complete
+    online-experiment readout.
 
     ``clicks`` carries (query_col, slot_col) rows; clicks on slots the
     draft never filled simply match nothing. Queries with no clicks

@@ -68,10 +68,12 @@ def _cjk_term_rows(doc_text: DataFrame, text_col: str) -> DataFrame:
                 }
             )
 
+    # doc_id keeps its input type (string or int64), so the union with
+    # the English rows lines up
     return chars_df.mapInPandas(
         seg_iter, schema=T.StructType(
             [
-                T.StructField("doc_id", T.StringType(), False),
+                T.StructField("doc_id", chars_df.schema["doc_id"].dataType, False),
                 T.StructField("term", T.StringType(), False),
             ]
         )

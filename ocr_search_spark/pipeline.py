@@ -234,23 +234,3 @@ def build_postings(spark: SparkSession, out_dir: str) -> None:
         f"{out_dir}/{POSTINGS_DIR}"
     )
 
-
-class HistorySink:
-    """S9/Q6 search-history append sink
-    (/root/reference/src/DbInterface/DbInterface.class.js:477-496)."""
-
-    def __init__(self, spark: SparkSession, path: str):
-        self.spark = spark
-        self.path = path
-
-    def log(self, term_freq_dict: dict[str, int], query: str) -> None:
-        df = self.spark.createDataFrame(
-            [(term_freq_dict, query)],
-            "search_terms map<string,int>, search_query string",
-        ).select(
-            F.current_timestamp().alias("time"), "search_terms", "search_query"
-        )
-        df.write.mode("append").parquet(self.path)
-
-    def read(self) -> DataFrame:
-        return self.spark.read.parquet(self.path)

@@ -40,7 +40,6 @@ class PagesServer:
         host: str = "127.0.0.1",
         port: int = 0,
         png_root: str | None = None,
-        history_sink=None,
     ):
         outer = self
 
@@ -69,11 +68,7 @@ class PagesServer:
                         params["mode"] = q["mode"][0]
                     try:
                         out = api.search_pages(
-                            outer.spark,
-                            outer.postings,
-                            outer.docs,
-                            params,
-                            history_sink=outer.history_sink,
+                            outer.spark, outer.postings, outer.docs, params
                         )
                     except api.ApiError as err:
                         self._send(err.status, {"message": err.message})
@@ -103,7 +98,6 @@ class PagesServer:
         self.postings = postings
         self.docs = docs
         self.png_root = png_root
-        self.history_sink = history_sink
         self._srv = ThreadingHTTPServer((host, port), Handler)
         self._thread: threading.Thread | None = None
 

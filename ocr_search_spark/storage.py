@@ -231,13 +231,19 @@ class BucketedTable:
         overwrite alone would leave stale bucket dirs from a previous
         load (it only replaces partitions present in the new data). The
         meta is written before the data, so a load that dies mid-write
-        leaves a table that reads as empty rather than one that fails."""
+        leaves a table that reads as empty rather than one that fails.
+        Rows are hash-partitioned on BUCKET_COL first, as in
+        ``_commit_touched``, so each bucket is written as one file."""
         root = self._fs_path(self.path)
         fs = self._fs(root)
         if fs.exists(root):
             fs.delete(root, True)
         self._write_meta(df.schema)
-        self._overwrite_buckets(df.withColumn(BUCKET_COL, self._bucket()))
+        self._overwrite_buckets(
+            df.withColumn(BUCKET_COL, self._bucket()).repartition(
+                self.n_buckets, F.col(BUCKET_COL)
+            )
+        )
 
     def read(self) -> DataFrame:
         raw = self._read_raw()

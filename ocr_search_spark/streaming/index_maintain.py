@@ -1,20 +1,15 @@
-"""Incremental inverted-index maintenance from a document stream.
+"""Incremental inverted-index maintenance for ``sync``.
 
 The reference re-tokenizes a changed file and fires one Mongo upsert per
 (doc, term) (DbInterface.class.js:366-381) — doc-level replace semantics,
 row-at-a-time. Here the same semantics run as one set-oriented MERGE per
-micro-batch: each arriving document version is extracted + tokenized and
-REPLACES its previous postings in a standing
+sync poll: each changed document is extracted + tokenized and REPLACES
+its previous postings in a standing
 :class:`~ocr_search_spark.storage.BucketedTable` bucketed by ``doc_id``
-(merge key ``(term, doc_id)``), so a batch touching k documents rewrites
-only those documents' buckets — never the index.
-
-Exactly-once composition:
-* source side — the file-stream checkpoint guarantees each input file is
-  processed by exactly one committed batch;
-* sink side — ``replace_group`` is idempotent (re-applying a replayed
-  batch reproduces identical table state), which is precisely the
-  foreachBatch contract ("must be idempotent for exactly-once").
+(merge key ``(term, doc_id)``), so a poll touching k documents rewrites
+only those documents' buckets — never the index. ``replace_group`` is
+idempotent (re-applying a batch reproduces identical table state), so a
+poll that dies after this write converges when the next poll repeats it.
 
 At 10^12-doc scale the same code runs with n_buckets in the thousands;
 per-batch cost is O(batch docs / n_buckets × bucket size), independent
@@ -27,7 +22,6 @@ from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.extract import extract_spans_columnar
 from ..operators.tokenize import term_postings
-from ..schemas import DOCUMENTS
 from ..storage import BucketedTable
 
 
@@ -53,7 +47,7 @@ def merge_doc_batch(
     ``sync`` deleted, or a modified file no longer holds."""
     # Last version wins within a batch: two files in one batch can both
     # carry a doc_id; keep the max spans tuple deterministically (the
-    # file stream gives no order — at scale carry an explicit version
+    # source files give no order — at scale carry an explicit version
     # column and max_by it instead).
     latest = (
         docs.groupBy("doc_id")
@@ -69,34 +63,4 @@ def merge_doc_batch(
     if drop is not None:
         groups = groups.unionByName(drop.select("doc_id"))
     table.replace_group(posts, group_keys=["doc_id"], groups=groups)
-
-
-def stream_maintain_postings(
-    spark: SparkSession,
-    input_path: str,
-    table_path: str,
-    checkpoint_path: str,
-    n_buckets: int = 32,
-    await_termination: bool = True,
-    max_files_per_trigger: int | None = None,
-):
-    """documents parquet dir (growing; re-appearing doc_ids are updated
-    versions) → standing postings BucketedTable, incrementally maintained
-    one MERGE per micro-batch (Trigger.AvailableNow)."""
-    table = postings_table(spark, table_path, n_buckets)
-    reader = spark.readStream.schema(DOCUMENTS)
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    src = reader.parquet(input_path)
-    q = (
-        src.writeStream.foreachBatch(
-            lambda batch_df, _batch_id: merge_doc_batch(table, batch_df)
-        )
-        .option("checkpointLocation", checkpoint_path)
-        .trigger(availableNow=True)
-        .start()
-    )
-    if await_termination:
-        q.awaitTermination()
-    return q
 

@@ -1,13 +1,11 @@
-"""Serving-layer contract tests: /pages validation + PathConvert parity.
+"""Serving-layer contract tests: /pages validation and the HTTP server.
 
-Mirrors /root/reference/src/ApiServer/ApiHandler.const.js:19-46 and
-src/util/PathConvert.const.js:10-134.
+Mirrors the reference's src/ApiServer/ApiHandler.const.js:19-46.
 """
 
 from __future__ import annotations
 
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_search_spark import api
 
@@ -70,49 +68,6 @@ def test_search_pages_engine_error_is_500(spark, tiny_index):
     broken = spark.createDataFrame([("table", "doc0")], "term string, doc_id string")
     e = _err(spark, broken, docs, {"searchTerm": "table"})
     assert (e.status, e.message) == (500, "internal server error")
-
-
-def test_path_convert_parity():
-    # JS String.replace first-occurrence semantics, byte-for-byte
-    assert api.pptx_to_pdf("data/pptx/a/b.pptx") == "data/pdf/a/b.pdf"
-    assert api.pptx_to_png_dir("data/pptx/a/b.pptx") == "data/png/a/b"
-    assert api.docx_to_pdf("data/docx/x.docx") == "data/pdf/x.pdf"
-    assert api.docx_to_png_dir("data/docx/x.docx") == "data/png/x"
-    assert api.pdf_to_pptx("data/pdf/a/b.pdf") == "data/pptx/a/b.pptx"
-    assert api.pdf_to_docx("data/pdf/a/b.pdf") == "data/docx/a/b.docx"
-    assert api.pdf_to_png_dir("data/pdf/a/b.pdf") == "data/png/a/b"
-    assert api.png_dir_to_pptx("data/png/a/b") == "data/pptx/a/b.pptx"
-    assert api.png_dir_to_docx("data/png/a/b") == "data/docx/a/b.docx"
-    assert api.png_dir_to_pdf("data/png/a/b") == "data/pdf/a/b.pdf"
-    # round trip
-    p = "data/pptx/deck/slide deck 1.pptx"
-    assert api.png_dir_to_pptx(api.pptx_to_png_dir(p)) == p
-
-
-def test_path_convert_columnar(spark):
-    df = spark.createDataFrame(
-        [("data/pdf/a/b.pdf",), ("data/pdf/c.pdf",)], "p string"
-    )
-    got = [
-        (r["pdf2png"], r["pdf2pptx"])
-        for r in df.select(
-            api.convert_path_col(F.col("p"), api.PDF_DIR, api.PNG_DIR, ".pdf", "")
-            .alias("pdf2png"),
-            api.convert_path_col(F.col("p"), api.PDF_DIR, api.PPTX_DIR, ".pdf", ".pptx")
-            .alias("pdf2pptx"),
-        ).collect()
-    ]
-    assert got == [
-        ("data/png/a/b", "data/pptx/a/b.pptx"),
-        ("data/png/c", "data/pptx/c.pptx"),
-    ]
-    # anchored: repeated substrings in the middle are untouched
-    weird = spark.createDataFrame([("data/pdf/data/pdf/x.pdf.pdf",)], "p string")
-    r = weird.select(
-        api.convert_path_col(F.col("p"), api.PDF_DIR, api.PNG_DIR, ".pdf", "")
-        .alias("o")
-    ).collect()[0]["o"]
-    assert r == "data/png/data/pdf/x.pdf"
 
 
 def test_http_server_end_to_end(spark, tiny_index, tmp_path):

@@ -5,8 +5,7 @@ Properties:
 * completed buckets are skipped, not recomputed;
 * lineage rows describe committed data (counts match the table);
 * re-running a completed run is a no-op;
-* only a missing or never-committed checkpoint reads as "nothing done";
-* search history sink appends and reads back.
+* only a missing or never-committed checkpoint reads as "nothing done".
 """
 
 from __future__ import annotations
@@ -144,7 +143,7 @@ def test_lineage_matches_committed_data(spark, corpus_df, out_dir):
     assert cp.agg(F.sum("n_errors")).collect()[0][0] == 0
 
 
-def test_postings_build_and_history(spark, corpus_df, out_dir, tmp_path):
+def test_postings_build_and_history(spark, corpus_df, out_dir):
     docs = corpus_df.select("doc_id", "spans").limit(60)
     pipeline.run_extraction_job(spark, docs, out_dir, run_id="p", n_buckets=2)
     pipeline.build_postings(spark, out_dir)
@@ -154,14 +153,7 @@ def test_postings_build_and_history(spark, corpus_df, out_dir, tmp_path):
 
     from ocr_search_spark.operators.search import search
 
-    sink = pipeline.HistorySink(spark, str(tmp_path / "history"))
-    search(spark, postings, "tables merged", history_sink=sink).collect()
-    hist = sink.read().collect()
-    assert len(hist) == 1
-    assert hist[0]["search_query"] == "tables merged"
-    # lemmatizer spec: 'tables'→'table' (N3), 'merged'→'merg' (V2) — the
-    # same mapping applies to documents, so search stays self-consistent
-    assert hist[0]["search_terms"] == {"table": 1, "merg": 1}
+    search(spark, postings, "tables merged").collect()
 
 
 def test_incremental_update_equals_full_rebuild(spark, corpus_df):

@@ -23,6 +23,26 @@ def test_postings_match_golden(postings_df, golden_postings):
     assert got == golden_postings
 
 
+def test_postings_int64_doc_id_with_cjk(spark):
+    """An int64 doc_id survives the CJK branch: the postings equal the
+    string-doc_id build with doc_id cast back."""
+    texts = [(1, "機器學習 merged tables"), (2, "plain english only"), (3, "中文")]
+    span = "array<struct<kind:string,text:string,media_ref:string,offset:int>>"
+    rows = [(i, [("text", t, "", 0)]) for i, t in texts]
+    as_long = spark.createDataFrame(rows, f"doc_id long, spans {span}")
+    as_str = spark.createDataFrame(
+        [(str(i), sp) for i, sp in rows], f"doc_id string, spans {span}"
+    )
+    got = tokenize.term_postings(as_long)
+    assert got.schema["doc_id"].dataType.simpleString() == "bigint"
+    want = tokenize.term_postings(as_str).withColumn(
+        "doc_id", F.col("doc_id").cast("long")
+    )
+    got_rows = sorted(tuple(r) for r in got.collect())
+    assert got_rows == sorted(tuple(r) for r in want.collect())
+    assert any(doc == 1 and not term.isascii() for term, doc, _ in got_rows)
+
+
 def test_posting_tf_sums_equal_token_counts(postings_df, golden_extracted):
     """sum(tf) per doc == token count of the doc's extracted text."""
     got = {
@@ -252,124 +272,6 @@ def test_postings_varint_stats_vs_python(spark):
     assert got["alpha"][1] < got["alpha"][2]
 
 
-def test_maxscore_equals_bm25_and_prunes(spark):
-    import pyspark.sql.functions as F
-    from ocr_search_spark.operators.search import (
-        match_terms_bm25,
-        match_terms_maxscore,
-        _bm25_rows,
-    )
-
-    # skewed postings: 'rare' carries huge tf in few docs, 'common' tiny
-    # tf everywhere -> 'common' should fall below the champion floor
-    rows = (
-        [(f"d{i}", "common", 1) for i in range(200)]
-        + [(f"d{i}", "rare", 9) for i in range(8)]
-        + [(f"d{i}", "mid", 3) for i in range(0, 60, 2)]
-    )
-    posts = spark.createDataFrame(rows, "doc_id string, term string, tf int")
-    terms = ["common", "rare", "mid"]
-    for k in (5, 8, 300):
-        got = [tuple(r) for r in match_terms_maxscore(posts, terms, max_return=k).collect()]
-        want = [tuple(r) for r in match_terms_bm25(posts, terms, max_return=k).collect()]
-        assert got == want, k
-    # the pruning is real for small k: 'common' is non-essential
-    w = _bm25_rows(posts, terms, 1.2, 0.75)
-    ubs = {r["term"]: r["ub"] for r in w.groupBy("term").agg(F.max("w").alias("ub")).collect()}
-    champ = sorted(
-        (r["mw"] for r in w.groupBy("doc_id").agg(F.max("w").alias("mw")).collect()),
-        reverse=True,
-    )
-    assert ubs["common"] < champ[4]  # below the k=5 floor -> prunable
-
-
-def test_proximity_search_scoring_and_edges(spark):
-    import pytest
-    from ocr_search_spark.operators.search import proximity_search
-
-    pos = spark.createDataFrame(
-        [
-            ("a", "d1", 0), ("b", "d1", 1), ("c", "d1", 2),     # tight
-            ("a", "d2", 0), ("b", "d2", 10), ("c", "d2", 11),   # loose first pair
-            ("a", "d3", 0), ("b", "d3", 1),                      # missing c
-        ],
-        "term string, doc_id string, pos int",
-    )
-    out = {r["doc_id"]: r["score"] for r in proximity_search(pos, ["a", "b", "c"]).collect()}
-    assert "d3" not in out                       # must contain ALL terms
-    assert out["d1"] == 500_000 + 500_000        # both pairs adjacent
-    assert out["d2"] == 1_000_000 // 11 + 500_000
-    # single-term degrades to match count
-    one = {r["doc_id"]: r["score"] for r in proximity_search(pos, ["a"]).collect()}
-    assert one == {"d1": 1_000_000, "d2": 1_000_000, "d3": 1_000_000}
-    with pytest.raises(ValueError):
-        proximity_search(pos, ["a", "a"])
-    assert proximity_search(pos, []).count() == 0
-
-
-# ------------------------------------------------------------ substring
-
-
-def test_trigram_substring_search(spark):
-    from ocr_search_spark.operators.search import substring_search, trigram_index
-
-    docs = spark.createDataFrame(
-        [
-            ("d1", "the Nebula spins; nebular clouds"),
-            ("d2", "nothing relevant here"),
-            ("d3", "NEBULA"),
-            ("d4", "neb ula split across tokens"),
-        ],
-        "doc_id string, doc_text string",
-    )
-    idx = trigram_index(docs).cache()
-    got = [
-        (r["doc_id"], r["n_matches"])
-        for r in substring_search(idx, docs, "ebul").collect()
-    ]
-    # d1 matches twice (nebula + nebular), d3 once (case-folded);
-    # d4's trigrams are broken by the space -> no candidate, no match
-    assert got == [("d1", 2), ("d3", 1)]
-    # result-transparency: identical to the brute contains scan
-    brute = sorted(
-        (r["doc_id"],)
-        for r in docs.where(
-            F.instr(F.lower("doc_text"), "ebul") > 0
-        ).collect()
-    )
-    assert sorted((g[0],) for g in got) == brute
-
-
-def test_substring_short_needle_falls_back_to_scan(spark):
-    from ocr_search_spark.operators.search import substring_search, trigram_index
-
-    docs = spark.createDataFrame(
-        [("d1", "xy appears: xy xy"), ("d2", "zz only")],
-        "doc_id string, doc_text string",
-    )
-    idx = trigram_index(docs)
-    got = [
-        (r["doc_id"], r["n_matches"])
-        for r in substring_search(idx, docs, "xy").collect()
-    ]
-    assert got == [("d1", 3)]
-
-
-def test_substring_needle_guards(spark):
-    import pytest as _pytest
-
-    from ocr_search_spark.operators.search import substring_search, trigram_index
-
-    docs = spark.createDataFrame(
-        [("d1", "abc")], "doc_id string, doc_text string"
-    )
-    idx = trigram_index(docs)
-    with _pytest.raises(ValueError):
-        substring_search(idx, docs, "")
-    with _pytest.raises(ValueError):
-        substring_search(idx, docs, "o'neil")
-
-
 def test_prefix_search_expansion_and_guard(spark):
     from ocr_search_spark.operators.search import prefix_search
 
@@ -433,43 +335,6 @@ def test_match_terms_fuzzy_matches_brute_force(terms, k, postings_df, golden_pos
         for r in search.match_terms_fuzzy(postings_df, terms, max_return=k).collect()
     ]
     assert got == _fuzzy_brute_force(golden_postings, terms, k), terms
-
-
-def test_anchor_boosted_postings(spark):
-    import pandas as pd
-    from pyspark.sql import functions as F
-
-    from ocr_search_spark.operators.search import (
-        anchor_boosted_postings,
-        match_terms,
-    )
-
-    postings = spark.createDataFrame(
-        pd.DataFrame(
-            {
-                "term": ["table", "table", "fast"],
-                "doc_id": ["d1", "d2", "d1"],
-                "tf": [5, 1, 2],
-            }
-        )
-    )
-    # two anchors point at d2; their text tokenizes through the SAME
-    # chain as document text (lowercase + lemma + stopword filter)
-    anchors = spark.createDataFrame(
-        pd.DataFrame(
-            {"doc_id": ["d2", "d2"], "anchor": ["Fast Tables", "fast tables"]}
-        )
-    )
-    boosted = anchor_boosted_postings(postings, anchors, weight=3)
-    got = {(r.term, r.doc_id): r.tf for r in boosted.collect()}
-    # "tables" lemmatizes to the content key "table": d2 gains 2*3 on
-    # top of its content tf=1; "fast" gains 6 as a new posting for d2
-    assert got[("table", "d2")] == 7
-    assert got[("fast", "d2")] == 6
-    assert got[("table", "d1")] == 5 and got[("fast", "d1")] == 2
-    # the boost flips the ranking for a "table"-term query
-    top = match_terms(boosted, ["table"], max_return=2).collect()
-    assert [(r.doc_id, r.score) for r in top] == [("d2", 7), ("d1", 5)]
 
 
 def test_incremental_correlations_guard_flip_fuzz(spark):

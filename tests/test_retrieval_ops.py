@@ -1,107 +1,18 @@
-"""Session-7 operators: RRF fusion, champion-list pruning, MaxSim
-late interaction, deletion-blocked edit-distance self-join — each
-verified against an independent brute-force/pure-Python replay."""
+"""Similarity operators: MaxSim late interaction, deletion-blocked
+edit-distance self-join, ranking recall and the single-partition guard
+of the IVF quantizer — each verified against an independent
+brute-force/pure-Python replay."""
 
 from __future__ import annotations
 
 import itertools
 
 import numpy as np
-import pytest
 
 from pyspark.sql import functions as F
 
-from ocr_search_spark.operators.search import (
-    champion_lists,
-    match_terms,
-    match_terms_champion,
-    rrf_fuse,
-)
 from ocr_search_spark.operators.simjoin import edit1_pairs
 from ocr_search_spark.training.similarity import maxsim_topk
-
-
-# ------------------------------------------------------------------ RRF
-
-
-def test_rrf_fuse_matches_pure_python(spark):
-    r1 = spark.createDataFrame(
-        [(f"d{i}", i + 1) for i in range(10)], "doc_id string, rank long"
-    )
-    # second ranker: reversed order, overlapping on half the docs
-    r2 = spark.createDataFrame(
-        [(f"d{i}", 10 - i) for i in range(5, 15)], "doc_id string, rank long"
-    )
-    got = {
-        r["doc_id"]: (r["score"], r["n_rankers"], r["rank"])
-        for r in rrf_fuse([r1, r2], k=60, max_return=100).collect()
-    }
-    exp: dict[str, int] = {}
-    for d, rk in [(f"d{i}", i + 1) for i in range(10)] + [
-        (f"d{i}", 10 - i) for i in range(5, 15)
-    ]:
-        exp[d] = exp.get(d, 0) + 1_000_000 // (60 + rk)
-    order = sorted(exp, key=lambda d: (-exp[d], d))
-    for pos, d in enumerate(order, start=1):
-        n = 2 if d in {f"d{i}" for i in range(5, 10)} else 1
-        assert got[d] == (exp[d], n, pos)
-
-
-def test_rrf_requires_input(spark):
-    with pytest.raises(ValueError):
-        rrf_fuse([])
-
-
-# ------------------------------------------------------- champion lists
-
-
-@pytest.fixture(scope="module")
-def tiny_postings(spark):
-    rows = [
-        (t, f"doc{d:02d}", (d * 7 + len(t) * 3) % 9 + 1)
-        for t in ["alpha", "beta", "gamma"]
-        for d in range(30)
-    ]
-    return spark.createDataFrame(rows, "term string, doc_id string, tf long").cache()
-
-
-def test_champion_lists_keep_top_m_by_impact(tiny_postings):
-    m = 5
-    champ = champion_lists(tiny_postings, m=m)
-    rows = champ.collect()
-    per_term: dict[str, list] = {}
-    for r in rows:
-        per_term.setdefault(r["term"], []).append((r["tf"], r["doc_id"]))
-    full = tiny_postings.collect()
-    for t, kept in per_term.items():
-        assert len(kept) == m
-        allp = sorted(
-            ((r["tf"], r["doc_id"]) for r in full if r["term"] == t),
-            key=lambda x: (-x[0], x[1]),
-        )
-        assert sorted(kept, key=lambda x: (-x[0], x[1])) == allp[:m]
-
-
-def test_champion_retrieval_equals_exhaustive_when_m_covers(tiny_postings):
-    # m >= docs per term -> champion pruning is lossless: identical to Q2-Q5
-    exact = match_terms(tiny_postings, ["alpha", "gamma"], max_return=10).collect()
-    pruned = match_terms_champion(
-        tiny_postings, ["alpha", "gamma"], m=30, max_return=10
-    ).collect()
-    assert [(r["doc_id"], r["score"]) for r in exact] == [
-        (r["doc_id"], r["score"]) for r in pruned
-    ]
-
-
-def test_champion_retrieval_is_subset_scored_exactly(tiny_postings):
-    # tight m: every returned (doc, score) must carry the EXACT max-tf
-    # score (phase 2 rescoring), even though the candidate set is pruned
-    full = {
-        (r["doc_id"],): r["score"]
-        for r in match_terms(tiny_postings, ["alpha"], max_return=1000).collect()
-    }
-    for r in match_terms_champion(tiny_postings, ["alpha"], m=3, max_return=10).collect():
-        assert full[(r["doc_id"],)] == r["score"]
 
 
 # -------------------------------------------------------------- MaxSim
@@ -187,700 +98,13 @@ def test_ranking_recall_exact_counts(spark):
     assert out[2]["n_hit"] == 0 and out[2]["recall_e6"] == 0
 
 
-# ------------------------------------------------------------- snippets
-
-
-def _snip_fixture(spark):
-    from ocr_search_spark.operators.search import snippet_search
-
-    pos = spark.createDataFrame(
-        [
-            ("alpha", "d1", 0), ("beta", "d1", 2), ("gamma", "d1", 3),
-            ("alpha", "d1", 20),
-            ("alpha", "d2", 5),
-            ("beta", "d3", 1),
-        ],
-        "term string, doc_id string, pos int",
-    )
-    toks = spark.createDataFrame(
-        [
-            ("d1", [f"t{i}" for i in range(30)]),
-            ("d2", [f"u{i}" for i in range(10)]),
-            ("d3", ["a", "b", "c"]),
-        ],
-        "doc_id string, tokens array<string>",
-    )
-    return snippet_search, pos, toks
-
-
-def test_snippet_best_window_and_ranking(spark):
-    snippet_search, pos, toks = _snip_fixture(spark)
-    rows = snippet_search(pos, toks, ["alpha", "beta", "gamma"], width=5).collect()
-    assert [r["doc_id"] for r in rows] == ["d1", "d2", "d3"]
-    d1 = rows[0]
-    # window [0,5) covers alpha@0, beta@2, gamma@3 -> 3 distinct terms
-    assert (d1["start"], d1["n_terms"], d1["n_hits"]) == (0, 3, 3)
-    assert d1["snippet"] == "t0 t1 t2 t3 t4"
-    # clamp at the token-array tail
-    assert rows[2]["snippet"] == "b c"
-
-
-def test_snippet_tie_prefers_more_hits_then_earliest(spark):
-    from ocr_search_spark.operators.search import snippet_search
-
-    # two 1-term windows; the one with 2 hits (pos 10,11) must win over
-    # the earlier single-hit window only on n_hits — then, among equal
-    # (n_terms, n_hits), the EARLIEST start wins.
-    pos = spark.createDataFrame(
-        [("x", "d", 0), ("x", "d", 10), ("x", "d", 11)],
-        "term string, doc_id string, pos int",
-    )
-    toks = spark.createDataFrame(
-        [("d", [f"w{i}" for i in range(16)])], "doc_id string, tokens array<string>"
-    )
-    row = snippet_search(pos, toks, ["x"], width=4).collect()[0]
-    assert (row["start"], row["n_terms"], row["n_hits"]) == (10, 1, 2)
-    # equal-score tie -> earliest
-    pos2 = spark.createDataFrame(
-        [("x", "d", 3), ("x", "d", 9)], "term string, doc_id string, pos int"
-    )
-    row2 = snippet_search(pos2, toks, ["x"], width=4).collect()[0]
-    assert row2["start"] == 3
-
-
-def test_snippet_empty_terms_and_max_return(spark):
-    snippet_search, pos, toks = _snip_fixture(spark)
-    assert snippet_search(pos, toks, [], width=5).count() == 0
-    got = snippet_search(pos, toks, ["alpha", "beta"], width=5, max_return=1).collect()
-    assert len(got) == 1 and got[0]["doc_id"] == "d1"
-
-
-def test_ranked_eval_metrics_hand_computed(spark):
-    from math import floor, log
-
-    from ocr_search_spark.operators.search import ranked_eval_metrics
-
-    # q0: ranks 1..3 with rels 3, 0, 1; one unretrieved relevant (rel 2)
-    run = spark.createDataFrame(
-        [(0, "a", 1), (0, "b", 2), (0, "c", 3), (1, "a", 1), (1, "b", 2)],
-        "query_id int, doc_id string, rank int",
-    )
-    qrels = spark.createDataFrame(
-        [(0, "a", 3), (0, "c", 1), (0, "z", 2), (0, "b", 0), (1, "b", 0)],
-        "query_id int, doc_id string, rel int",
-    )
-    rows = {r.query_id: r for r in ranked_eval_metrics(run, qrels, k=10).collect()}
-
-    def G(r):
-        return 10**12 // floor(1e6 * log(r + 1))
-
-    dcg = 7 * G(1) + 1 * G(3)
-    idcg = 7 * G(1) + 3 * G(2) + 1 * G(3)  # ideal order: rel 3, 2, 1
-    q0 = rows[0]
-    assert q0.dcg_micro == dcg
-    assert q0.idcg_micro == idcg
-    assert q0.ndcg_micro == (1_000_000 * dcg) // idcg
-    assert q0.mrr_micro == 1_000_000  # first relevant at rank 1
-    assert q0.p_at_k_micro == (1_000_000 * 2) // 10  # 2 of top-10 relevant
-    assert q0.recall_micro == (1_000_000 * 2) // 3  # 2 of 3 relevant found
-    assert q0.n_rel == 3
-
-    # q1: judged but nothing relevant -> all zeros
-    q1 = rows[1]
-    assert (
-        q1.dcg_micro, q1.idcg_micro, q1.ndcg_micro, q1.mrr_micro,
-        q1.p_at_k_micro, q1.recall_micro, q1.n_rel,
-    ) == (0, 0, 0, 0, 0, 0, 0)
-
-
-def test_ranked_eval_metrics_k_cap_and_validation(spark):
-    import pytest as _pytest
-
-    from ocr_search_spark.operators.search import ranked_eval_metrics
-
-    run = spark.createDataFrame(
-        [(0, "a", 1), (0, "b", 2)], "query_id int, doc_id string, rank int"
-    )
-    qrels = spark.createDataFrame(
-        [(0, "b", 2)], "query_id int, doc_id string, rel int"
-    )
-    # k=1 drops the rank-2 hit from BOTH dcg and the ideal cap
-    r = ranked_eval_metrics(run, qrels, k=1).collect()[0]
-    assert r.dcg_micro == 0 and r.idcg_micro > 0 and r.ndcg_micro == 0
-    assert r.mrr_micro == 0 and r.p_at_k_micro == 0
-    assert r.n_rel == 1
-    with _pytest.raises(ValueError):
-        ranked_eval_metrics(run, qrels, k=0)
-
-
-def test_hard_negative_triplets_round_robin(spark):
-    from ocr_search_spark.operators.search import hard_negative_triplets
-
-    run = spark.createDataFrame(
-        [(0, f"d{r}", r) for r in range(1, 7)],
-        "query_id int, doc_id string, rank int",
-    )
-    # d2 and d5 judged relevant; d3 judged irrelevant; rest unjudged
-    qrels = spark.createDataFrame(
-        [(0, "d2", 2), (0, "d5", 1), (0, "d3", 0)],
-        "query_id int, doc_id string, rel int",
-    )
-    out = hard_negative_triplets(run, qrels, negs_per_pos=2).collect()
-    # negatives in rank order: d1, d3, d4, d6 (d2/d5 excluded as rel>0);
-    # positives ordered rel DESC: d2 (#0), d5 (#1); round-robin:
-    # d1->d2, d3->d5, d4->d2, d6->d5
-    got = {(r.pos_doc, r.neg_doc): r.neg_rank for r in out}
-    assert got == {
-        ("d2", "d1"): 1, ("d5", "d3"): 3, ("d2", "d4"): 4, ("d5", "d6"): 6
-    }
-
-
-def test_hard_negative_triplets_caps_and_validation(spark):
-    import pytest as _pytest
-
-    from ocr_search_spark.operators.search import hard_negative_triplets
-
-    run = spark.createDataFrame(
-        [(0, f"d{r}", r) for r in range(1, 11)],
-        "query_id int, doc_id string, rank int",
-    )
-    qrels = spark.createDataFrame(
-        [(0, "d1", 1)], "query_id int, doc_id string, rel int"
-    )
-    out = hard_negative_triplets(run, qrels, negs_per_pos=3).collect()
-    # one positive, cap 3 negatives: ranks 2,3,4
-    assert sorted(r.neg_rank for r in out) == [2, 3, 4]
-    assert all(r.pos_doc == "d1" for r in out)
-    with _pytest.raises(ValueError):
-        hard_negative_triplets(run, qrels, negs_per_pos=0)
-
-
-def test_hard_negative_triplets_no_positives_empty(spark):
-    from ocr_search_spark.operators.search import hard_negative_triplets
-
-    run = spark.createDataFrame(
-        [(0, "d1", 1)], "query_id int, doc_id string, rank int"
-    )
-    qrels = spark.createDataFrame(
-        [(0, "d1", 0)], "query_id int, doc_id string, rel int"
-    )
-    assert hard_negative_triplets(run, qrels).count() == 0
-
-
-# ------------------------------------------------------------ BM25F
-
-
-def _bm25f_py(rows, terms, fields, k1=1.2):
-    """Bit-exact float replay of match_terms_bm25f (same IEEE op order)."""
-    import math
-
-    names = [f for f, _, _ in fields]
-    rows = [r for r in rows if r[1] in names]
-    flen = {}
-    for d, f, t, tf in rows:
-        flen.setdefault(d, {}).setdefault(f, 0)
-        flen[d][f] += tf
-    n = len(flen)
-    avg = {}
-    for f in names:
-        lens = [v[f] for v in flen.values() if f in v]
-        avg[f] = float(sum(lens)) / float(len(lens)) if lens else None
-    docs_with = {}
-    tfw = {}
-    for d, f, t, tf in rows:
-        if t in terms:
-            docs_with.setdefault(t, set()).add(d)
-            tfw.setdefault((d, t), {}).setdefault(f, 0)
-            tfw[(d, t)][f] += tf
-    idf = {
-        t: math.log((float(n) - len(ds) + 0.5) / (float(len(ds)) + 0.5) + 1.0)
-        for t, ds in docs_with.items()
-    }
-    scores = {}
-    for (d, t), per in tfw.items():
-        tft = 0.0
-        for f, w, b in fields:
-            if f in per:
-                tft = tft + (
-                    float(w) * float(per[f])
-                    / ((1.0 - float(b)) + float(b) * float(flen[d][f]) / avg[f])
-                )
-        w_int = math.floor(1_000_000.0 * idf[t] * tft / (float(k1) + tft))
-        scores[d] = scores.get(d, 0) + int(w_int)
-    return scores
-
-
-def _fielded_corpus(spark):
-    import random
-
-    rng = random.Random(7)
-    vocab = ["alpha", "beta", "gamma", "delta", "epsilon", "zeta"]
-    rows = []
-    for d in range(30):
-        for f, lo, hi in (("title", 1, 3), ("body", 5, 15)):
-            if f == "title" and d % 5 == 0:
-                continue  # some docs have no title
-            counts = {}
-            for _ in range(rng.randint(lo, hi)):
-                counts[rng.choice(vocab)] = counts.get(rng.choice(vocab), 0) + 1
-            for t, tf in counts.items():
-                rows.append((f"d{d}", f, t, tf))
-    return rows
-
-
-def test_bm25f_matches_python_replay(spark):
-    from ocr_search_spark.operators.search import match_terms_bm25f
-
-    rows = _fielded_corpus(spark)
-    fields = [("title", 2.5, 0.6), ("body", 1.0, 0.75)]
-    terms = ["alpha", "gamma", "zeta"]
-    fp = spark.createDataFrame(rows, "doc_id string, field string, term string, tf long")
-    got = {
-        r["doc_id"]: r["score"]
-        for r in match_terms_bm25f(fp, terms, fields, max_return=1000).collect()
-    }
-    assert got == _bm25f_py(rows, set(terms), fields)
-
-
-def test_bm25f_title_outranks_body(spark):
-    """Same tf, same lengths: the boosted title hit must score higher."""
-    from ocr_search_spark.operators.search import match_terms_bm25f
-
-    rows = [
-        ("dt", "title", "q", 1), ("dt", "body", "x", 10),
-        ("db", "title", "x", 1), ("db", "body", "q", 1),
-        ("db", "body", "x", 9),
-    ]
-    fp = spark.createDataFrame(rows, "doc_id string, field string, term string, tf long")
-    out = {
-        r["doc_id"]: r["score"]
-        for r in match_terms_bm25f(
-            fp, ["q"], [("title", 3.0, 0.5), ("body", 1.0, 0.75)]
-        ).collect()
-    }
-    assert out["dt"] > out["db"] > 0
-
-
-def test_bm25f_partition_invariance(spark):
-    from ocr_search_spark.operators.search import match_terms_bm25f
-
-    rows = _fielded_corpus(spark)
-    fields = [("title", 2.5, 0.6), ("body", 1.0, 0.75)]
-    fp = spark.createDataFrame(rows, "doc_id string, field string, term string, tf long")
-    a = sorted(map(tuple, match_terms_bm25f(fp, ["alpha", "beta"], fields, 1000).collect()))
-    b = sorted(
-        map(
-            tuple,
-            match_terms_bm25f(
-                fp.repartition(13), ["alpha", "beta"], fields, 1000
-            ).collect(),
-        )
-    )
-    assert a == b
-
-
-def test_bm25f_unknown_field_rows_ignored(spark):
-    from ocr_search_spark.operators.search import match_terms_bm25f
-
-    rows = [("d1", "body", "q", 2), ("d1", "anchor", "q", 50)]
-    fp = spark.createDataFrame(rows, "doc_id string, field string, term string, tf long")
-    only_body = match_terms_bm25f(fp, ["q"], [("body", 1.0, 0.75)]).collect()
-    both = match_terms_bm25f(
-        fp, ["q"], [("body", 1.0, 0.75), ("anchor", 0.5, 0.0)]
-    ).collect()
-    assert only_body[0]["score"] < both[0]["score"]
-
-
-def test_bm25f_validation(spark):
-    import pytest as _pytest
-
-    from ocr_search_spark.operators.search import match_terms_bm25f
-
-    fp = spark.createDataFrame(
-        [("d", "body", "q", 1)], "doc_id string, field string, term string, tf long"
-    )
-    with _pytest.raises(ValueError):
-        match_terms_bm25f(fp, ["q"], [])
-    with _pytest.raises(ValueError):
-        match_terms_bm25f(fp, ["q"], [("b", 1.0, 0.5), ("b", 2.0, 0.5)])
-    with _pytest.raises(ValueError):
-        match_terms_bm25f(fp, ["q"], [("b", 0.0, 0.5)])
-    with _pytest.raises(ValueError):
-        match_terms_bm25f(fp, ["q"], [("b", 1.0, 1.5)])
-    with _pytest.raises(ValueError):
-        match_terms_bm25f(fp, ["q"], [("b", 1.0, 0.5)], k1=0.0)
-
-
-# ------------------------------------------------------------ PRF
-
-
-def _prf_postings(spark):
-    rows = []
-    # docs 0-4: alpha + beta together (feedback neighborhood)
-    for d in range(5):
-        rows += [(f"d{d}", "alpha", 3), (f"d{d}", "beta", 2), (f"d{d}", "filler", 1)]
-    # doc 5: beta only — invisible to the bare query, PRF should find it
-    rows += [("d5", "beta", 5), ("d5", "other", 1)]
-    # background docs diluting df
-    for d in range(6, 30):
-        rows += [(f"d{d}", f"bg{d % 7}", 2), (f"d{d}", "noise", 1)]
-    return spark.createDataFrame(rows, "doc_id string, term string, tf long")
-
-
-def test_prf_zero_expansion_equals_bm25(spark):
-    from ocr_search_spark.operators.search import match_terms_bm25, match_terms_prf
-
-    p = _prf_postings(spark)
-    a = sorted(map(tuple, match_terms_bm25(p, ["alpha"], max_return=100).collect()))
-    b = sorted(map(tuple, match_terms_prf(p, ["alpha"], fb_terms=0, max_return=100).collect()))
-    assert a == b
-
-
-def test_prf_expansion_recalls_unqueried_doc(spark):
-    from ocr_search_spark.operators.search import match_terms_bm25, match_terms_prf
-
-    p = _prf_postings(spark)
-    plain = {r["doc_id"] for r in match_terms_bm25(p, ["alpha"], max_return=100).collect()}
-    prf = {r["doc_id"] for r in match_terms_prf(p, ["alpha"], fb_docs=5, fb_terms=2, max_return=100).collect()}
-    assert "d5" not in plain
-    assert "d5" in prf
-
-
-def test_prf_partition_invariance(spark):
-    from ocr_search_spark.operators.search import match_terms_prf
-
-    p = _prf_postings(spark)
-    a = sorted(map(tuple, match_terms_prf(p, ["alpha"], max_return=100).collect()))
-    b = sorted(map(tuple, match_terms_prf(p.repartition(11), ["alpha"], max_return=100).collect()))
-    assert a == b
-
-
-def test_prf_validation(spark):
-    import pytest as _pytest
-
-    from ocr_search_spark.operators.search import match_terms_prf
-
-    p = _prf_postings(spark)
-    with _pytest.raises(ValueError):
-        match_terms_prf(p, ["alpha"], fb_docs=0)
-    with _pytest.raises(ValueError):
-        match_terms_prf(p, ["alpha"], fb_terms=-1)
-
-
-# ------------------------------------------------------------ sign test
-
-
-def _sign_test_py(pairs):
-    from math import comb
-
-    wins_a = sum(1 for a, b in pairs if a > b)
-    wins_b = sum(1 for a, b in pairs if a < b)
-    ties = sum(1 for a, b in pairs if a == b)
-    n = wins_a + wins_b
-    if n == 0 or n > 60:
-        return wins_a, wins_b, ties, n, None
-    w = max(wins_a, wins_b)
-    s_upper = sum(comb(n, k) for k in range(w, n + 1))
-    p = min(1_000_000, 2_000_000 * s_upper // (1 << n))
-    return wins_a, wins_b, ties, n, p
-
-
-def _metric_frames(spark, pairs):
-    a = spark.createDataFrame(
-        [(i, m) for i, (m, _) in enumerate(pairs)], "query_id long, metric long"
-    )
-    b = spark.createDataFrame(
-        [(i, m) for i, (_, m) in enumerate(pairs)], "query_id long, metric long"
-    )
-    return a, b
-
-
-def test_sign_test_matches_exact_binomial(spark):
-    from ocr_search_spark.operators.search import sign_test
-
-    cases = [
-        [(i * 37 % 101, i * 53 % 97) for i in range(40)],
-        [(5, 3)] * 9 + [(3, 5)] * 2,          # 9 vs 2 -> significant-ish
-        [(1, 1)] * 5 + [(2, 1)] * 3,          # ties drop
-        [(2, 1)] * 60,                        # extreme one-sided at the cap
-    ]
-    for pairs in cases:
-        a, b = _metric_frames(spark, pairs)
-        r = sign_test(a, b).collect()[0]
-        wa, wb, t, n, p = _sign_test_py(pairs)
-        assert (r["wins_a"], r["wins_b"], r["ties"], r["n"]) == (wa, wb, t, n)
-        assert r["p_e6"] == p, (pairs[:3], r["p_e6"], p)
-        assert not r["overflow"]
-
-
-def test_sign_test_all_ties_and_overflow(spark):
-    from ocr_search_spark.operators.search import sign_test
-
-    a, b = _metric_frames(spark, [(7, 7)] * 10)
-    r = sign_test(a, b).collect()[0]
-    assert r["n"] == 0 and r["p_e6"] is None and not r["overflow"]
-
-    a, b = _metric_frames(spark, [(2, 1)] * 61)
-    r = sign_test(a, b).collect()[0]
-    assert r["overflow"] and r["p_e6"] is None and r["n"] == 61
-
-
-# ----------------------------------------------- sharded BM25 serving
-
-
-def test_sharded_bm25_identical_to_global(spark):
-    """Shard-local top-k + merge with GLOBAL stats == the single-index
-    ranking, bit for bit, at several shard counts (incl. n=1 and more
-    shards than matching docs)."""
-    import random
-
-    from ocr_search_spark.operators.search import (
-        match_terms_bm25,
-        match_terms_bm25_sharded,
-    )
-
-    rng = random.Random(24)
-    vocab = [f"t{i}" for i in range(30)]
-    rows = []
-    for d in range(60):
-        did = f"{rng.randrange(16):x}{d:03d}"
-        for t in rng.sample(vocab, 8):
-            rows.append((t, did, rng.randrange(1, 9)))
-    post = spark.createDataFrame(rows, "term string, doc_id string, tf long")
-    terms = ["t1", "t2", "t3"]
-    want = [
-        (r["doc_id"], r["score"])
-        for r in match_terms_bm25(post, terms, max_return=10).collect()
-    ]
-    for s in (1, 4, 64):
-        got = match_terms_bm25_sharded(post, terms, n_shards=s, max_return=10)
-        assert [(r["doc_id"], r["score"]) for r in got.collect()] == want, s
-
-
-def test_sharded_bm25_shard_column_and_validation(spark):
-    from ocr_search_spark.operators.search import match_terms_bm25_sharded
+def test_single_partition_guards_raise_loudly(spark):
+    """The documented-small unpartitioned path fails actionably past its
+    bound instead of silently single-partition-sorting: the
+    ivf_centroids parameter guard."""
     import pytest
 
-    post = spark.createDataFrame(
-        [("a", "0b1", 3), ("a", "ff2", 1), ("b", "0b1", 2)],
-        "term string, doc_id string, tf long",
-    )
-    out = match_terms_bm25_sharded(post, ["a", "b"], n_shards=4).collect()
-    for r in out:
-        assert r["shard"] == int(r["doc_id"][:2], 16) % 4
-    with pytest.raises(ValueError):
-        match_terms_bm25_sharded(post, ["a"], n_shards=0)
-
-
-# ----------------------------------------------- query-likelihood QLD
-
-
-def test_qld_vs_python_replay(spark):
-    """Exact micro-nat parity with a python replay of the pinned
-    Zhai-Lafferty decomposition, and sane ordering (a doc stuffed with
-    the query term outranks a diluted one)."""
-    import math
-
-    from ocr_search_spark.operators.search import match_terms_qld
-
-    rows = [
-        ("apple", "d1", 5), ("pear", "d1", 1),
-        ("apple", "d2", 1), ("noise", "d2", 20),
-        ("pear", "d3", 4), ("plum", "d3", 2),
-    ]
-    post = spark.createDataFrame(rows, "term string, doc_id string, tf long")
-    terms, mu = ["apple", "pear"], 2000
-    got = [(r["doc_id"], r["score_e6"])
-           for r in match_terms_qld(post, terms, max_return=10, mu=mu).collect()]
-
-    C = sum(tf for _, _, tf in rows)
-    cf = {}
-    dl = {}
-    for t, d, tf in rows:
-        cf[t] = cf.get(t, 0) + tf
-        dl[d] = dl.get(d, 0) + tf
-    want = {}
-    for t, d, tf in rows:
-        if t in terms:
-            w = math.floor(1e6 * (math.log(mu * cf[t] + tf * C) - math.log(mu * cf[t])))
-            want[d] = want.get(d, 0) + w
-    for d in want:
-        want[d] += len(terms) * math.floor(1e6 * (math.log(mu) - math.log(dl[d] + mu)))
-    assert got == sorted(want.items(), key=lambda kv: (-kv[1], kv[0]))
-    assert got[0][0] == "d1"  # concentrated match wins
-
-
-# ----------------------------------------------- block-max pruned BM25
-
-
-def test_blockmax_bit_parity_and_prunes(spark):
-    import random
-
-    from ocr_search_spark.operators.search import (
-        match_terms_bm25,
-        match_terms_bm25_blockmax,
-    )
-
-    rng = random.Random(7)
-    vocab = [f"t{i}" for i in range(25)]
-    rows = []
-    for d in range(120):
-        did = f"{rng.randrange(256):02x}{d:03d}"
-        for t in rng.sample(vocab, 6):
-            rows.append((t, did, rng.randrange(1, 12)))
-    post = spark.createDataFrame(rows, "term string, doc_id string, tf long")
-    terms = ["t0", "t1", "t2", "t3"]
-    want = [(r["doc_id"], r["score"])
-            for r in match_terms_bm25(post, terms, max_return=10).collect()]
-    for nb in (1, 16, 256):
-        got = [(r["doc_id"], r["score"])
-               for r in match_terms_bm25_blockmax(post, terms, max_return=10,
-                                                  n_blocks=nb).collect()]
-        assert got == want, nb
-    # under-k corpus: pruning skipped, still correct
-    tiny = spark.createDataFrame(rows[:12], "term string, doc_id string, tf long")
-    a = [(r["doc_id"], r["score"])
-         for r in match_terms_bm25(tiny, terms, max_return=50).collect()]
-    c = [(r["doc_id"], r["score"])
-         for r in match_terms_bm25_blockmax(tiny, terms, max_return=50).collect()]
-    assert a == c
-    import pytest
-    with pytest.raises(ValueError):
-        match_terms_bm25_blockmax(post, terms, n_blocks=0)
-
-
-def test_ltr_features_consistent_with_scorers(spark):
-    """Feature columns agree with the gated scorers: bm25_e6 equals the
-    ranking's score, raw stats match hand counts."""
-    from ocr_search_spark.operators.search import ltr_features, match_terms_bm25
-
-    rows = [("a", "d1", 5), ("b", "d1", 2), ("a", "d2", 1), ("z", "d2", 7),
-            ("z", "d3", 4)]
-    post = spark.createDataFrame(rows, "term string, doc_id string, tf long")
-    terms = ["a", "b"]
-    feats = {r["doc_id"]: r for r in ltr_features(post, terms).collect()}
-    scores = {r["doc_id"]: r["score"]
-              for r in match_terms_bm25(post, terms, max_return=10).collect()}
-    assert set(feats) == {"d1", "d2"}  # d3 matches nothing
-    for d, r in feats.items():
-        assert r["bm25_e6"] == scores[d]
-    assert (feats["d1"]["max_tf"], feats["d1"]["sum_tf"],
-            feats["d1"]["n_terms"], feats["d1"]["dl"]) == (5, 7, 2, 7)
-    assert (feats["d2"]["max_tf"], feats["d2"]["n_terms"],
-            feats["d2"]["dl"]) == (1, 1, 8)
-
-
-def test_bm25_grid_default_point_bit_identical(spark):
-    import random
-
-    from ocr_search_spark.operators.search import (
-        match_terms_bm25,
-        match_terms_bm25_grid,
-    )
-
-    rng = random.Random(3)
-    rows = [(f"t{i%9}", f"d{rng.randrange(40)}", rng.randrange(1, 7))
-            for i in range(400)]
-    post = spark.createDataFrame(rows, "term string, doc_id string, tf long")
-    post = post.groupBy("term", "doc_id").agg(F.sum("tf").alias("tf"))
-    terms = ["t1", "t5"]
-    grid = [(1200, 750), (900, 400), (2000, 0)]
-    out = match_terms_bm25_grid(post, terms, grid, max_return=8).collect()
-    by_param = {}
-    for r in out:
-        by_param.setdefault((r["k1_e3"], r["b_e3"]), []).append(
-            (r["rank"], r["doc_id"], r["score"])
-        )
-    assert set(by_param) == set(grid)
-    want = [(i + 1, r["doc_id"], r["score"]) for i, r in
-            enumerate(match_terms_bm25(post, terms, max_return=8).collect())]
-    assert sorted(by_param[(1200, 750)]) == want
-    # b=0 kills length normalization: rankings genuinely differ somewhere
-    assert sorted(by_param[(2000, 0)]) != want
-    import pytest
-    with pytest.raises(ValueError):
-        match_terms_bm25_grid(post, terms, [])
-
-
-def test_kendall_tau_hand_cases(spark):
-    """Perfect agreement +1e6, perfect reversal -1e6, a known mixed
-    case, intersection-only and the n<2 drop."""
-    from ocr_search_spark.operators.search import kendall_tau
-
-    def mk(qid, order):
-        return [(qid, d, r + 1) for r, d in enumerate(order)]
-
-    a = spark.createDataFrame(
-        mk(1, ["w", "x", "y", "z"]) + mk(2, ["w", "x", "y"])
-        + mk(3, ["a", "b"]) + mk(4, ["only"]),
-        "query_id long, doc string, rank int",
-    )
-    b = spark.createDataFrame(
-        mk(1, ["w", "x", "y", "z"]) + mk(2, ["y", "x", "w"])
-        + mk(3, ["b", "ghost", "a"]) + mk(4, ["other"]),
-        "query_id long, doc string, rank int",
-    )
-    got = {r["query_id"]: (r["n"], r["n_concordant"], r["n_discordant"], r["tau_e6"])
-           for r in kendall_tau(a, b).collect()}
-    assert got[1] == (4, 6, 0, 1_000_000)
-    assert got[2] == (3, 0, 3, -1_000_000)
-    # q3: intersection {a, b}; a<b ranks (1,3) vs (2,1): discordant
-    assert got[3] == (2, 0, 1, -1_000_000)
-    assert 4 not in got  # no common docs
-
-
-def test_rank_sum_test_vs_scipy_free_replay(spark):
-    """U statistics match a python replay (incl. ties), symmetric case
-    gives z ~ 0, shifted case a large |z| agreeing with the classical
-    formula."""
-    import math
-    import random
-
-    from ocr_search_spark.operators.search import rank_sum_test
-
-    rng = random.Random(24)
-    xa = [rng.randrange(0, 40) for _ in range(60)]
-    xb = [rng.randrange(10, 50) for _ in range(45)]
-    A = spark.createDataFrame([(v,) for v in xa], "v long")
-    B = spark.createDataFrame([(v,) for v in xb], "v long")
-    r = rank_sum_test(A, B).collect()[0]
-    allv = sorted(xa + xb)
-    def rank2(v):
-        return 2 * sum(1 for x in allv if x < v) + allv.count(v) + 1
-    r1x2 = sum(rank2(v) for v in xa)
-    n1, n2, n = len(xa), len(xb), len(allv)
-    u1x2 = r1x2 - n1 * (n1 + 1)
-    T = sum(t ** 3 - t for t in
-            (allv.count(v) for v in set(allv)) if t > 1)
-    assert (r["n1"], r["n2"], r["u1_x2"], r["u2_x2"], r["tie_term"]) == (
-        n1, n2, u1x2, 2 * n1 * n2 - u1x2, T)
-    z = math.floor(1e6 * (u1x2 - n1 * n2) /
-                   (2.0 * math.sqrt(n1 * n2 * (n * (n - 1) * (n + 1) - T)
-                                    / (12 * n * (n - 1)))))
-    assert r["z_e6"] == z and r["z_e6"] < -1_960_000  # B is shifted up
-    same = rank_sum_test(A, A).collect()[0]
-    assert abs(same["z_e6"]) < 100_000
-
-
-def test_single_partition_guards_raise_loudly(spark, monkeypatch):
-    """The documented-small unpartitioned paths fail actionably past
-    their bounds instead of silently single-partition-sorting: the
-    rank_sum_test in-plan row guard and the ivf_centroids parameter
-    guard (VERDICT r3 item #7)."""
-    import pytest
-    from pyspark.errors.exceptions.captured import SparkRuntimeException
-
-    from ocr_search_spark.operators import search as S
     from ocr_search_spark.training.similarity import ivf_centroids
-
-    monkeypatch.setattr(S, "_MAX_SINGLE_PARTITION_ROWS", 10)
-    A = spark.range(20).selectExpr("cast(id as long) as v")
-    B = spark.range(20).selectExpr("cast(id + 100 as long) as v")
-    with pytest.raises(SparkRuntimeException, match="eval-set bound"):
-        S.rank_sum_test(A, B).collect()
-    # under the bound the same plan still runs
-    monkeypatch.setattr(S, "_MAX_SINGLE_PARTITION_ROWS", 5_000_000)
-    assert S.rank_sum_test(A, B).collect()[0]["n1"] == 20
 
     vecs = spark.range(4).selectExpr(
         "cast(id as long) as vec_id", "array(double(id), 1.0d) as embedding"

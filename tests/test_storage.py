@@ -145,6 +145,21 @@ def test_reinit_clears_previous_load(spark, base_df, tmp_path):
     )
 
 
+def test_init_writes_one_file_per_bucket(spark, base_df, tmp_path):
+    """A multi-partition load still lands as one file per bucket: init
+    hash-partitions on the bucket column before the write, instead of
+    every input partition writing its own file into every bucket."""
+    path = str(tmp_path / "tbl")
+    t = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS)
+    src = base_df.repartition(8)
+    assert src.rdd.getNumPartitions() == 8
+    t.init(src)
+    files = _by_bucket(_file_state(path))
+    assert set(files) == set(range(N_BUCKETS))
+    assert {b: len(f) for b, f in files.items()} == {b: 1 for b in range(N_BUCKETS)}
+    assert _rows(t.read()) == _rows(base_df)
+
+
 def test_delete_everything_keeps_table_readable(spark, base_df, tmp_path):
     """Emptying every bucket leaves a parquet-less dir; read() and the
     next mutation must still work (schema persisted in the meta)."""

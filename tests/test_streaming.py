@@ -176,11 +176,12 @@ def test_stateful_sessionize_vs_batch(spark, dirs):
         assert k in stream, f"closed session {k} not emitted"
 
 
-def test_stream_maintain_postings(spark, dirs, tmp_path):
-    """Doc-level incremental index maintenance: a stream of document
-    versions MERGEs into a standing BucketedTable; final state equals a
-    batch rebuild over the latest corpus, and buckets holding only
-    untouched docs stay byte-identical across the second run."""
+def test_stream_maintain_postings(spark, tmp_path):
+    """Doc-level incremental index maintenance: two batches of document
+    versions, one ``merge_doc_batch`` each, MERGE into a standing
+    BucketedTable; final state equals a batch rebuild over the latest
+    corpus, and buckets holding only untouched docs stay byte-identical
+    across the second batch."""
     from tests.test_storage import _by_bucket, _file_state
 
     from ocr_search_spark.operators.extract import extract_spans_columnar
@@ -191,11 +192,8 @@ def test_stream_maintain_postings(spark, dirs, tmp_path):
     n_buckets = 32
 
     docs_v1 = corpus.documents_table(spark, 100, skew=False).cache()
-    docs_v1.write.mode("append").parquet(dirs["in"])
-    IM.stream_maintain_postings(
-        spark, dirs["in"], table_path, dirs["ckpt"], n_buckets=n_buckets
-    )
     table = IM.postings_table(spark, table_path, n_buckets)
+    IM.merge_doc_batch(table, docs_v1)
     expect1 = term_postings(extract_spans_columnar(docs_v1).select("doc_id", "spans"))
     got1 = table.read()
     assert got1.exceptAll(expect1).count() == 0
@@ -229,12 +227,9 @@ def test_stream_maintain_postings(spark, dirs, tmp_path):
     )
     assert extra.count() == 30
     updates = docs_mod.unionByName(extra)
-    updates.write.mode("append").parquet(dirs["in"])
 
     before = _by_bucket(_file_state(table_path))
-    IM.stream_maintain_postings(
-        spark, dirs["in"], table_path, dirs["ckpt"], n_buckets=n_buckets
-    )
+    IM.merge_doc_batch(table, updates)
     after = _by_bucket(_file_state(table_path))
 
     latest = (
@@ -313,7 +308,7 @@ def test_transform_with_state_sessionize_vs_batch(spark, dirs):
         assert k in stream, f"closed session {k} not emitted"
 
 
-def test_stream_maintain_zero_term_doc_version(spark, dirs, tmp_path):
+def test_stream_maintain_zero_term_doc_version(spark, tmp_path):
     """A document re-arriving with NO tokenizable content (media-only
     spans) must lose its old postings — the doc-replace contract even
     when the new version contributes zero posting rows."""
@@ -321,9 +316,8 @@ def test_stream_maintain_zero_term_doc_version(spark, dirs, tmp_path):
 
     table_path = str(tmp_path / "ptbl")
     docs_v1 = corpus.documents_table(spark, 40, skew=False).cache()
-    docs_v1.write.mode("append").parquet(dirs["in"])
-    IM.stream_maintain_postings(spark, dirs["in"], table_path, dirs["ckpt"], n_buckets=8)
     table = IM.postings_table(spark, table_path, 8)
+    IM.merge_doc_batch(table, docs_v1)
     vid = sorted(r["doc_id"] for r in docs_v1.select("doc_id").collect())[0]
     assert table.read().where(F.col("doc_id") == vid).count() > 0
 
@@ -332,8 +326,7 @@ def test_stream_maintain_zero_term_doc_version(spark, dirs, tmp_path):
     empty_doc = spark.createDataFrame([(vid,)], "doc_id string").select(
         "doc_id", F.array().cast(docs_v1.schema["spans"].dataType).alias("spans")
     )
-    empty_doc.write.mode("append").parquet(dirs["in"])
-    IM.stream_maintain_postings(spark, dirs["in"], table_path, dirs["ckpt"], n_buckets=8)
+    IM.merge_doc_batch(table, empty_doc)
     assert table.read().where(F.col("doc_id") == vid).count() == 0
 
 

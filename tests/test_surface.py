@@ -4,7 +4,8 @@ The import closure of the entry modules (an ``ast`` walk over every
 import statement, function-local ones included) must stay inside an
 explicit allowlist, so a module only a deleted branch used cannot creep
 back onto the job paths. The job CLI must offer exactly the job
-subcommands. No Spark session is started here.
+subcommands, and every public function of the query layer must have a
+caller outside the tests. No Spark session is started here.
 """
 
 from __future__ import annotations
@@ -94,6 +95,50 @@ def test_cli_offers_exactly_the_jobs():
     )
     assert res.returncode == 0, res.stderr
     choices = re.search(r"\{([a-z,-]+)\}", res.stdout).group(1)
-    assert sorted(choices.split(",")) == [
-        "extract", "maintain-stream", "search", "serve", "sync",
-    ]
+    assert sorted(choices.split(",")) == ["extract", "search", "serve", "sync"]
+
+
+# the query layer: what /pages and ``jobs.py search`` run
+QUERY_LAYER = ["api.py", "server.py", "operators/search.py"]
+# kept without a caller: whether phrases get a positional index or go
+# is ROADMAP item 1's decision
+UNCALLED_OK = {"phrase_search"}
+
+
+def _referenced_names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
+    """Every name ``tree`` loads, reads as an attribute or imports,
+    outside the subtree ``skip``."""
+    names: set[str] = set()
+    todo = [tree]
+    while todo:
+        node = todo.pop()
+        if node is skip:
+            continue
+        if isinstance(node, ast.Name) and isinstance(node.ctx, ast.Load):
+            names.add(node.id)
+        elif isinstance(node, ast.Attribute):
+            names.add(node.attr)
+        elif isinstance(node, ast.ImportFrom):
+            names.update(a.name for a in node.names)
+        todo.extend(ast.iter_child_nodes(node))
+    return names
+
+
+def test_query_layer_has_no_test_only_functions():
+    callers = sorted(PKG.rglob("*.py")) + sorted((REPO / "tools").glob("*.py")) \
+        + sorted((REPO / "perfbench").glob("*.py"))
+    trees = {path: ast.parse(path.read_text()) for path in callers}
+    uncalled = []
+    for rel in QUERY_LAYER:
+        path = PKG / rel
+        for node in trees[path].body:
+            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+                continue
+            if node.name.startswith("_") or node.name in UNCALLED_OK:
+                continue
+            if not any(
+                node.name in _referenced_names(tree, node if p == path else None)
+                for p, tree in trees.items()
+            ):
+                uncalled.append(f"{rel}:{node.name}")
+    assert uncalled == [], "query-layer functions only tests reach"
