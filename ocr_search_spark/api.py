@@ -39,7 +39,6 @@ def search_pages(
     postings: DataFrame,
     docs: DataFrame,
     params: dict,
-    pos_postings: DataFrame | None = None,
 ) -> dict:
     """The GET /pages handler, param dict in → response dict out.
 
@@ -50,7 +49,7 @@ def search_pages(
 
     Extension beyond the reference: ``mode=boolean`` routes the query
     through the boolean parser (operators/boolquery.py — AND/OR/NOT,
-    parens, quoted phrases; phrases need ``pos_postings``);
+    parens, quoted single words; a multi-word quote is a 400);
     ``mode=prefix`` routes '<stem>*' wildcards through prefix_search
     (the expansion guard's refusal surfaces as a 400); ``mode=fuzzy``
     tokenizes with the document tokenizer and matches within one edit
@@ -73,9 +72,7 @@ def search_pages(
             from .operators.boolquery import boolean_search
 
             try:
-                scored = boolean_search(
-                    postings, query, pos_postings=pos_postings, max_return=k
-                )
+                scored = boolean_search(postings, query, max_return=k)
             except ValueError as err:
                 raise ApiError(400, str(err)) from err
             hits = (

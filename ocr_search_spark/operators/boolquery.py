@@ -4,13 +4,11 @@ The reference's search surface is a flat bag of terms: the query string is
 tokenized to a TermFreqDict and every distinct key is OR-matched with
 max-tf scoring (``/root/reference/src/ApiHandler/ApiHandler.const.js:28-34``,
 ``src/TermMatcher/TermMatcher.class.js:25-53``). There is no way to express
-"this AND that", exclusion, or an exact phrase. This module adds the classic
-boolean retrieval layer on top of the same index, compiled to a pure
-DataFrame set-algebra plan:
+"this AND that" or exclusion. This module adds the classic boolean
+retrieval layer on top of the same index, compiled to a pure DataFrame
+set-algebra plan:
 
     term leaf     -> postings filter (pushes down to the term-keyed scan)
-    "a b" phrase  -> positional-index adjacency join (operators.search.
-                     phrase_search's join shape), distinct doc set
     OR            -> union + distinct (one shuffle on doc_id)
     AND           -> left-semi join chain on doc_id
     AND NOT       -> left-anti join on doc_id
@@ -21,8 +19,8 @@ AND with only negative conjuncts raises ``ValueError`` -- the complement of
 a posting list is the whole corpus, which is never materializable at scale.
 
 Scoring stays pinned to the reference semantics: ``score = max(tf)`` over
-the query's positive term leaves (phrase words included), ties broken by
-doc_id ascending, top-k via TakeOrderedAndProject (SURVEY §2.4 Q3-Q5).
+the query's positive term leaves, ties broken by doc_id ascending, top-k
+via TakeOrderedAndProject (SURVEY §2.4 Q3-Q5).
 
 Grammar (operators are case-sensitive UPPERCASE so that lowercase
 ``and``/``or``/``not`` remain ordinary content words -- they are stopwords
@@ -33,7 +31,11 @@ documents):
     orexpr  := andexpr ( OR andexpr )*
     andexpr := unary ( [AND] unary )*      # adjacency = implicit AND
     unary   := NOT unary | atom
-    atom    := '(' orexpr ')' | '"' words '"' | word
+    atom    := '(' orexpr ')' | '"' word '"' | word
+
+The index is positionless (term, doc_id, tf), so there is no phrase
+search: a quoted word is a plain term, and a quote holding more than one
+index term raises ``ValueError`` at parse time.
 
 Every leaf word runs through the SAME ``tokenize_text`` pipeline as the
 documents (lowercase, punctuation strip, stopword drop, lemmatize) so query
@@ -59,13 +61,11 @@ from .tokenize import tokenize_text
 
 __all__ = [
     "Term",
-    "Phrase",
     "And",
     "Or",
     "Not",
     "parse_boolean",
     "term_leaves",
-    "boolean_matches",
     "boolean_search",
 ]
 
@@ -76,11 +76,6 @@ __all__ = [
 @dataclass(frozen=True)
 class Term:
     term: str
-
-
-@dataclass(frozen=True)
-class Phrase:
-    terms: tuple[str, ...]
 
 
 @dataclass(frozen=True)
@@ -99,7 +94,7 @@ class Not:
 
 
 def _lex(query: str) -> list[str]:
-    """Split into parens, quoted phrases (kept with their quotes) and words."""
+    """Split into parens, quoted strings (kept with their quotes) and words."""
     out: list[str] = []
     i, n = 0, len(query)
     while i < n:
@@ -162,7 +157,7 @@ class _Parser:
         if n_atoms == 0:
             # dangling operator / empty parens: nothing was even consumed
             # (distinct from leaves that normalized away, which count)
-            raise ValueError("boolean query: expected a term, phrase or '('")
+            raise ValueError("boolean query: expected a term or '('")
         parts = [p for p in parts if p is not None]
         if not parts:
             return None
@@ -182,7 +177,7 @@ class _Parser:
     def atom(self):
         t = self.peek()
         if t is None or t == ")":
-            raise ValueError("boolean query: expected a term, phrase or '('")
+            raise ValueError("boolean query: expected a term or '('")
         if t == "(":
             self.next()
             inner = self.or_expr()
@@ -193,9 +188,11 @@ class _Parser:
         self.next()
         if t.startswith('"'):
             words = tokenize_text(t[1:-1])
-            if not words:
-                return None
-            return Phrase(tuple(words)) if len(words) > 1 else Term(words[0])
+            if len(words) > 1:
+                raise ValueError(
+                    f"boolean query: phrase search is not supported: {t}"
+                )
+            return Term(words[0]) if words else None
         # a single word may normalize to 0, 1 or several index terms
         words = tokenize_text(t)
         if not words:
@@ -209,7 +206,7 @@ def parse_boolean(query: str):
     """Parse to an AST, or ``None`` if every leaf normalized away.
 
     Raises ``ValueError`` on syntax errors (unbalanced parens/quotes,
-    dangling operators)."""
+    dangling operators) and on a quote holding several index terms."""
     if not isinstance(query, str):
         raise TypeError("boolean query must be a string")
     toks = _lex(query)
@@ -249,17 +246,14 @@ def _check_negation(node) -> None:
 
 
 def term_leaves(node) -> list[str]:
-    """The POSITIVE term leaves (phrase words included), sorted distinct —
-    the score vocabulary. Negated subtrees do not contribute."""
+    """The POSITIVE term leaves, sorted distinct — the score vocabulary.
+    Negated subtrees do not contribute."""
     out: set[str] = set()
 
     def walk(n, neg: bool):
         if isinstance(n, Term):
             if not neg:
                 out.add(n.term)
-        elif isinstance(n, Phrase):
-            if not neg:
-                out.update(n.terms)
         elif isinstance(n, Not):
             walk(n.child, True)
         elif isinstance(n, (And, Or)):
@@ -270,30 +264,12 @@ def term_leaves(node) -> list[str]:
     return sorted(out)
 
 
-def _phrase_docs(pos_postings: DataFrame, terms: tuple[str, ...]) -> DataFrame:
-    cur = pos_postings.where(F.col("term") == terms[0]).select(
-        "doc_id", F.col("pos").alias("p0")
-    )
-    for k, t in enumerate(terms[1:], start=1):
-        nxt = pos_postings.where(F.col("term") == t).select(
-            "doc_id", (F.col("pos") - k).alias("p0")
-        )
-        cur = cur.join(nxt, ["doc_id", "p0"])
-    return cur.select("doc_id").distinct()
-
-
-def _doc_set(node, postings: DataFrame, pos_postings: DataFrame | None) -> DataFrame:
+def _doc_set(node, postings: DataFrame) -> DataFrame:
     """doc_id set (unique rows) for a positive node."""
     if isinstance(node, Term):
         return postings.where(F.col("term") == node.term).select("doc_id")
-    if isinstance(node, Phrase):
-        if pos_postings is None:
-            raise ValueError(
-                "phrase leaf in the query but no positional index supplied"
-            )
-        return _phrase_docs(pos_postings, node.terms)
     if isinstance(node, Or):
-        sets = [_doc_set(c, postings, pos_postings) for c in node.children]
+        sets = [_doc_set(c, postings) for c in node.children]
         cur = sets[0]
         for s in sets[1:]:
             cur = cur.unionByName(s)
@@ -301,37 +277,18 @@ def _doc_set(node, postings: DataFrame, pos_postings: DataFrame | None) -> DataF
     if isinstance(node, And):
         pos = [c for c in node.children if not isinstance(c, Not)]
         neg = [c.child for c in node.children if isinstance(c, Not)]
-        cur = _doc_set(pos[0], postings, pos_postings)
+        cur = _doc_set(pos[0], postings)
         for p in pos[1:]:
-            cur = cur.join(
-                _doc_set(p, postings, pos_postings), "doc_id", "leftsemi"
-            )
+            cur = cur.join(_doc_set(p, postings), "doc_id", "leftsemi")
         for n in neg:
-            cur = cur.join(
-                _doc_set(n, postings, pos_postings), "doc_id", "left_anti"
-            )
+            cur = cur.join(_doc_set(n, postings), "doc_id", "left_anti")
         return cur
     raise TypeError(f"unexpected boolean node {node!r}")
-
-
-def boolean_matches(
-    postings: DataFrame,
-    query: str,
-    pos_postings: DataFrame | None = None,
-) -> DataFrame:
-    """The matching doc_id set (one column, unique rows) for ``query``."""
-    spark = postings.sparkSession
-    ast = parse_boolean(query)
-    if ast is None:
-        return spark.createDataFrame([], postings.select("doc_id").schema)
-    _check_negation(ast)
-    return _doc_set(ast, postings, pos_postings)
 
 
 def boolean_search(
     postings: DataFrame,
     query: str,
-    pos_postings: DataFrame | None = None,
     max_return: int = DEFAULT_MAX_RETURN,
 ) -> DataFrame:
     """Boolean match + reference scoring: (doc_id, score) with
@@ -342,7 +299,7 @@ def boolean_search(
     if ast is None:
         return spark.createDataFrame([], "doc_id string, score bigint")
     _check_negation(ast)
-    matched = _doc_set(ast, postings, pos_postings)
+    matched = _doc_set(ast, postings)
     vocab = term_leaves(ast)
     terms_df = spark.createDataFrame([(t,) for t in vocab], "term string")
     scores = (

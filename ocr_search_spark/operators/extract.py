@@ -207,72 +207,6 @@ def extract_spans_exploded(documents: DataFrame) -> DataFrame:
     return regrouped
 
 
-_BARE_SPAN_T = "array<struct<kind:string,text:string,media_ref:string>>"
-
-
-def coalesce_spans(documents: DataFrame, spans_col: str = "spans") -> DataFrame:
-    """Span-stream normalization: order spans by offset, DROP text spans
-    whose text is whitespace-only, MERGE every run of adjacent text
-    spans into one span (texts joined verbatim with a single space), and
-    re-number offsets densely from 0. Media spans are hard boundaries —
-    they never merge and always survive. This is the "re-emit normalized
-    (kind, text, media_ref, offset) span arrays" step of the north rule:
-    real converter output is full of fragmented/empty text runs
-    (per-line PDF text objects, empty PPTX placeholders — reference
-    analog: the page-level convert chain in convert_pipeline.sh
-    pdftotext/pptx2txt emits one fragment per text object).
-
-    Scale shape: a pure zero-shuffle array transform — sort, filter,
-    fold and re-index all happen INSIDE the array column of each row
-    (whole-stage codegen, no explode, no window, no shuffle), so at
-    10^12 docs this is a narrow map pass exactly like extraction
-    itself. The fold is O(spans) per row with last-element peeks via
-    null-safe ``get`` (never out-of-bounds under ANSI mode)."""
-    col = F.col(spans_col)
-    ordered = F.array_sort(col, lambda a, b: a["offset"] - b["offset"])
-    kept = F.filter(
-        ordered,
-        lambda s: (s["kind"] != F.lit("text"))
-        | (F.trim(F.coalesce(s["text"], F.lit(""))) != F.lit("")),
-    )
-
-    def _bare(s):
-        return F.struct(
-            s["kind"].alias("kind"),
-            F.coalesce(s["text"], F.lit("")).alias("text"),
-            F.coalesce(s["media_ref"], F.lit("")).alias("media_ref"),
-        )
-
-    def _fold(acc, s):
-        last = F.get(acc, F.size(acc) - 1)
-        merging = (
-            (F.size(acc) > 0)
-            & (last["kind"] == F.lit("text"))
-            & (s["kind"] == F.lit("text"))
-        )
-        merged_last = F.struct(
-            F.lit("text").alias("kind"),
-            F.concat(last["text"], F.lit(" "), s["text"]).alias("text"),
-            F.lit("").alias("media_ref"),
-        )
-        return F.when(
-            merging,
-            F.concat(F.slice(acc, 1, F.size(acc) - 1), F.array(merged_last)),
-        ).otherwise(F.concat(acc, F.array(_bare(s))))
-
-    folded = F.aggregate(kept, F.array().cast(_BARE_SPAN_T), _fold)
-    renumbered = F.transform(
-        folded,
-        lambda s, i: F.struct(
-            s["kind"].alias("kind"),
-            s["text"].alias("text"),
-            s["media_ref"].alias("media_ref"),
-            i.cast("int").alias("offset"),
-        ),
-    )
-    return documents.withColumn(spans_col, renumbered)
-
-
 def repartition_salted(documents: DataFrame, num_partitions: int) -> DataFrame:
     """Uniform spread of row weight: hash-repartition on xxhash64(doc_id).
 
@@ -281,39 +215,6 @@ def repartition_salted(documents: DataFrame, num_partitions: int) -> DataFrame:
     inherits a cluster of mega-docs (e.g. all pages of one huge file,
     which ARE adjacent in the input ordering)."""
     return documents.repartition(num_partitions, F.xxhash64("doc_id"))
-
-
-def doc_weight_col() -> F.Column:
-    """Extraction-cost model for one document row: text bytes + a pinned
-    OCR-cost constant per media span (media dominate real extraction)."""
-    text_len = F.aggregate(
-        F.transform("spans", lambda s: F.length(F.coalesce(s["text"], F.lit("")))),
-        F.lit(0),
-        lambda acc, x: acc + x,
-    )
-    n_media = F.size(F.filter("spans", lambda s: s["kind"] == "media"))
-    return text_len + n_media * F.lit(256)
-
-
-def repartition_size_bucketed(
-    documents: DataFrame,
-    num_partitions: int,
-    bucket_bounds: tuple[int, ...] = (512, 4096, 65536),
-) -> DataFrame:
-    """Size-bucketed + salted repartition (SURVEY §4.2.1): range-partition
-    on (weight_bucket, salt) so one Arrow batch never mixes a mega-doc
-    with thousands of tiny ones — batch memory stays bounded and task
-    runtimes stay uniform, while the salt spreads each bucket across all
-    partitions. Bounds are pinned percentile-ish thresholds; at 100 TB
-    compute them from ``approxQuantile(weight, [.5,.9,.99])`` instead."""
-    w = doc_weight_col()
-    bucket = F.lit(0)
-    for i, b in enumerate(bucket_bounds):
-        bucket = F.when(w >= b, F.lit(i + 1)).otherwise(bucket)
-    out = documents.withColumn("_wb", bucket).withColumn(
-        "_salt", F.pmod(F.xxhash64("doc_id"), F.lit(num_partitions))
-    )
-    return out.repartitionByRange(num_partitions, "_wb", "_salt").drop("_wb", "_salt")
 
 
 def extract_spans(

@@ -125,37 +125,6 @@ def match_terms_fuzzy(
     )
 
 
-def phrase_search(
-    pos_postings: DataFrame,
-    phrase_terms: list[str],
-    max_return: int = DEFAULT_MAX_RETURN,
-) -> DataFrame:
-    """Exact-phrase search over a positional index (term, doc_id, pos):
-    docs where ``phrase_terms`` occur at consecutive positions, scored by
-    occurrence count. k-term phrase = k−1 equi-joins on
-    (doc_id, pos+offset) — each term's posting rows are filtered first so
-    the joins touch only the phrase terms' lists, never the corpus. Empty
-    phrase → empty result (no match-all surprise)."""
-    spark = pos_postings.sparkSession
-    if not phrase_terms:
-        return spark.createDataFrame([], "doc_id string, n_matches long")
-    cur = (
-        pos_postings.where(F.col("term") == phrase_terms[0])
-        .select("doc_id", F.col("pos").alias("p0"))
-    )
-    for k, t in enumerate(phrase_terms[1:], start=1):
-        nxt = pos_postings.where(F.col("term") == t).select(
-            "doc_id", (F.col("pos") - k).alias("p0")
-        )
-        cur = cur.join(nxt, ["doc_id", "p0"])
-    return (
-        cur.groupBy("doc_id")
-        .agg(F.count("*").cast("long").alias("n_matches"))
-        .orderBy(F.desc("n_matches"), F.asc("doc_id"))
-        .limit(max_return)
-    )
-
-
 def prefix_search(
     postings: DataFrame,
     prefix: str,

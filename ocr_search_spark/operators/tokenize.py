@@ -107,48 +107,35 @@ import re  # noqa: E402
 
 _PUNCT_TABLE = str.maketrans(textproc.ASCII_PUNCT, " " * len(textproc.ASCII_PUNCT))
 _STRIP_TABLE = str.maketrans("", "", textproc.STRIP_CHARS)
-_LEMMA_RULES_PY = {
-    wn: [
-        (re.compile(pat), rep.replace("$1", "\\1"))
-        for pat, rep in textproc.lemma_rules(wordnet=wn)
-    ]
-    for wn in (False, True)
-}
+_LEMMA_RULES_PY = [
+    (re.compile(pat), rep.replace("$1", "\\1")) for pat, rep in textproc.LEMMA_RULES
+]
 _CJK_KEEP = re.compile(f"[^{textproc.CJK_CHAR_RANGE}]")
 
 
-def lemmatize_py(token: str, wordnet: bool = False) -> str:
+def lemmatize_py(token: str) -> str:
     exc = textproc.LEMMA_EXCEPTIONS.get(token)
     if exc is not None:
         return exc
-    for pat, rep in _LEMMA_RULES_PY[wordnet]:
+    for pat, rep in _LEMMA_RULES_PY:
         token = pat.sub(rep, token)
     return token
 
 
-def tokenize_text(
-    text: str,
-    treebank: bool = False,
-    wordnet: bool = False,
-    nltk_stop: bool = False,
-) -> list[str]:
+def tokenize_text(text: str) -> list[str]:
     """Pure-Python tokenizer following the textproc SPEC exactly; used for
-    single-query tokenization (Q1, ApiHandler.const.js:28-34).
-    ``treebank=True`` applies the TREEBANK_SPLITS contraction rules
-    (FIDELITY.md T1) — must match english_tokens_col(treebank=True).
-    ``nltk_stop=True`` uses the full NLTK 179-word stopword list
-    (FIDELITY.md T2) — must match english_tokens_col(nltk_stop=True)."""
+    single-query tokenization (Q1, ApiHandler.const.js:28-34)."""
     t = text.lower().translate(_STRIP_TABLE).translate(_PUNCT_TABLE)
-    toks = t.split()
-    if treebank:
-        toks = [p for tok in toks for p in textproc.TREEBANK_SPLITS.get(tok, tok).split()]
-    stops = textproc.NLTK_STOPWORDS_SET if nltk_stop else textproc.STOPWORDS_SET
     out: list[str] = []
     cjk_buf: list[str] = []
-    for tok in toks:
+    for tok in t.split():
         if tok.isascii():
-            if len(tok) > 1 and re.search("[a-z]", tok) and tok not in stops:
-                out.append(lemmatize_py(tok, wordnet=wordnet))
+            if (
+                len(tok) > 1
+                and re.search("[a-z]", tok)
+                and tok not in textproc.STOPWORDS_SET
+            ):
+                out.append(lemmatize_py(tok))
         else:
             cjk_buf.append(_CJK_KEEP.sub("", tok))
     if cjk_buf:
@@ -162,24 +149,3 @@ def term_freq_dict(text: str) -> dict[str, int]:
     for t in tokenize_text(text):
         freqs[t] = freqs.get(t, 0) + 1
     return freqs
-
-
-def positional_postings(
-    extracted: DataFrame, wordnet: bool = False
-) -> DataFrame:
-    """Positional inverted index: (term, doc_id, pos) rows, ``pos`` the
-    0-based index of the term in the doc's FILTERED English token
-    sequence (post stopword-drop, post lemma — the sequence phrase
-    queries actually run over; the reference's index is positionless,
-    TermFreqDict only). English branch only: CJK terms come from a
-    concatenated char stream with no stable token positions (see
-    textproc SPEC step 5), so phrase adjacency is undefined there.
-    Pure columnar: one posexplode, zero Python."""
-    dt = _doc_text(extracted)
-    return dt.select(
-        "doc_id",
-        F.posexplode(english_tokens_col(F.col("doc_text"), wordnet=wordnet)).alias(
-            "pos", "term"
-        ),
-    ).select("term", "doc_id", F.col("pos").cast("int").alias("pos"))
-

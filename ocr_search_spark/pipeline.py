@@ -172,7 +172,11 @@ def run_extraction_job(
             .withColumn("error", F.coalesce("error", "convert_error"))
             .drop("convert_error")
         )
+    # hash-partitioned on the bucket so each bucket's rows sit in one
+    # task and every written bucket is one file, whatever partitioning
+    # the extraction ran at
     ext = ext.withColumn("bucket", bucket_col(F.col("doc_id"), n_buckets))
+    ext = ext.repartition(n_buckets, F.col("bucket"))
 
     # 1) data commit first (dynamic overwrite of only the touched buckets)
     with_dyn = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
@@ -226,9 +230,10 @@ def run_extraction_job(
 def build_postings(spark: SparkSession, out_dir: str) -> None:
     """Derive the inverted index from the committed extracted_spans.
     Postings are term-keyed (not doc-bucketed), so they are rebuilt from
-    the committed extraction — the cheap stage; incremental maintenance
-    happens via MERGE-style upserts (operators.maintenance) when only a
-    diff changed."""
+    the committed extraction — the cheap stage. Incremental maintenance
+    of a changed source tree is ``sync``'s job: it doc-replaces the
+    changed documents' postings through
+    ``storage.BucketedTable.replace_group``."""
     ext = spark.read.parquet(f"{out_dir}/{EXTRACTED_DIR}")
     term_postings(ext.select("doc_id", "spans")).write.mode("overwrite").parquet(
         f"{out_dir}/{POSTINGS_DIR}"

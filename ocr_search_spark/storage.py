@@ -1,21 +1,23 @@
-"""Table-level MERGE emulation with partition-pruned rewrites.
+"""Group replace on a bucketed parquet table, rewriting only touched buckets.
 
-`operators.maintenance.upsert_by_key` / `delete_by_key` are pure plans —
-applied naively to a stored table they rewrite the WHOLE table, which at
-100 TB rewrites the world for a 1-row upsert. The production answer is a
-table format with MERGE INTO (Iceberg/Delta); without those jars this
-module provides the same contract on plain parquet:
+Re-processing a changed document must replace ALL its rows (its new
+term set need not overlap the old one). Applied naively to a stored
+table that rewrites the WHOLE table. The production answer is a table
+format with MERGE INTO (Iceberg/Delta); without those jars this module
+gives the same contract on plain parquet, through one mutation,
+``BucketedTable.replace_group``:
 
 * the table is partitioned by ``bucket = pmod(xxhash64(bucket keys), n)``
-  — deterministic from (a prefix of) the merge key, so an updated row
-  always lands in the same bucket as the row it replaces;
-* mutations first compute the distinct buckets touched by the updates
-  (bounded driver-side list, ≤ n_buckets ints), read ONLY those
-  partitions (partition pruning on the bucket column), merge, and
-  dynamic-partition-overwrite ONLY those partitions;
+  — deterministic from the group key, so a group's new rows always land
+  in the bucket that holds its old ones;
+* a replace first computes the distinct buckets its groups touch
+  (bounded driver-side list, ≤ n_buckets ints), reads ONLY those
+  partitions (partition pruning on the bucket column), drops the
+  groups' old rows, adds the new ones, and dynamic-partition-overwrites
+  ONLY those partitions, one file per bucket;
 * untouched partitions' files are never opened, let alone rewritten —
   byte-identity is asserted in tests/test_storage.py;
-* buckets a mutation EMPTIES are dropped through the Hadoop FS API
+* buckets a replace EMPTIES are dropped through the Hadoop FS API
   (dynamic overwrite cannot write an absent partition), and a table
   with zero data files still reads as an empty DataFrame (the schema is
   persisted in the table metadata).
@@ -33,14 +35,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .operators.maintenance import delete_by_key, upsert_by_key
-
 BUCKET_COL = "_mbucket"
 META_FILE = "_bucketed_table_meta.json"
 
 
 class BucketedTable:
-    """A parquet table bucketed by merge key for partition-pruned MERGE."""
+    """A parquet table bucketed by a key prefix for partition-pruned
+    group replaces."""
 
     def __init__(
         self,
@@ -50,9 +51,9 @@ class BucketedTable:
         n_buckets: int = 64,
         bucket_keys: list[str] | None = None,
     ):
-        """``keys`` = the MERGE key (row identity). ``bucket_keys``
-        (default: keys) = the partition-pruning key; must be a subset of
-        ``keys`` so an updated row always lands in its old row's bucket.
+        """``keys`` = the row identity. ``bucket_keys`` (default: keys) =
+        the partition-pruning key; must be a subset of ``keys`` so a
+        replaced row always lands in its old row's bucket.
         Bucketing postings by ``doc_id`` alone while merging on
         ``(term, doc_id)`` colocates each document's rows — a doc-level
         replace then touches only that doc's bucket."""
@@ -189,7 +190,7 @@ class BucketedTable:
         Distinguishes 'table legitimately emptied' from 'read failed for
         another reason' so a transient/corruption error is never treated
         as an empty table (which would silently drop the surviving rows
-        on the next upsert/replace/delete)."""
+        on the next replace)."""
         root = self._fs_path(self.path)
         fs = self._fs(root)
         if not fs.exists(root):
@@ -249,23 +250,6 @@ class BucketedTable:
         raw = self._read_raw()
         return raw.select([c for c in raw.columns if c != BUCKET_COL])
 
-    def upsert(self, updates: DataFrame, version_col: str | None = None) -> list[int]:
-        """MERGE: last-writer-wins upsert of ``updates`` on the table
-        keys, rewriting only the buckets the update keys hash into.
-        Returns the list of rewritten buckets."""
-        self._check_meta()
-        touched = self._touched_buckets(updates)
-        if not touched:
-            return []
-        raw = self._read_raw()
-        cols = [c for c in raw.columns if c != BUCKET_COL]
-        current = raw.where(F.col(BUCKET_COL).isin(touched)).select(cols)
-        merged = upsert_by_key(current, updates.select(cols), self.keys, version_col)
-        # upsert can never empty a touched bucket (every touched bucket
-        # receives at least one update row), so the plain overwrite works
-        self._overwrite_buckets(merged.withColumn(BUCKET_COL, self._bucket()))
-        return touched
-
     def replace_group(
         self,
         updates: DataFrame,
@@ -309,64 +293,4 @@ class BucketedTable:
         remaining = current.join(groups, group_keys, "left_anti").select(cols)
         merged = remaining.unionByName(updates.select(cols))
         self._commit_touched(touched, merged.withColumn(BUCKET_COL, self._bucket()))
-        return touched
-
-    def compact(self, max_files: int = 1) -> list[int]:
-        """Defragment buckets littered by repeated MERGEs: every bucket
-        holding more than ``max_files`` data files is rewritten to one
-        file; the row multiset is unchanged and untouched buckets stay
-        byte-identical (asserted in test_storage.py).
-
-        Streaming maintenance commits one file per micro-batch per
-        touched bucket, so a long-lived table pays a growing small-files
-        tax on EVERY read (a task + a footer per file). This is the
-        plain-parquet analogue of Delta/Iceberg ``OPTIMIZE``: the
-        fragmentation probe lists per-bucket files through the FS API
-        (driver cost ∝ n_buckets), only over-budget buckets are read,
-        and the rewrite is committed like every other mutation: one task
-        and one file per bucket, pruned dynamic overwrite.  Returns the
-        compacted bucket ids."""
-        self._check_meta()
-        root = self._fs_path(self.path)
-        fs = self._fs(root)
-        if not fs.exists(root):
-            return []
-        fragmented: list[int] = []
-        for st in fs.listStatus(root):
-            name = st.getPath().getName()
-            if not name.startswith(f"{BUCKET_COL}="):
-                continue
-            n = 0
-            for f in fs.listStatus(st.getPath()):
-                fn = f.getPath().getName()
-                if fn.endswith(".parquet") and not fn.startswith(("_", ".")):
-                    n += 1
-            if n > max_files:
-                fragmented.append(int(name.split("=", 1)[1]))
-        if not fragmented:
-            return []
-        rows = self._read_raw().where(F.col(BUCKET_COL).isin(fragmented))
-        # _commit_touched writes one file per bucket. It is used rather
-        # than a bare dynamic overwrite because a fragmented bucket whose
-        # files hold ZERO rows would never appear in the written data, so
-        # dynamic overwrite would leave its stale files behind —
-        # _commit_touched FS-drops it instead.
-        self._commit_touched(fragmented, rows)
-        return sorted(fragmented)
-
-    def delete(self, doomed_keys: DataFrame) -> list[int]:
-        """MERGE … WHEN MATCHED DELETE, partition-pruned the same way;
-        emptied buckets are FS-dropped, and a fully-emptied table stays
-        readable via the persisted schema."""
-        self._check_meta()
-        touched = self._touched_buckets(doomed_keys.select(*self.keys))
-        if not touched:
-            return []
-        raw = self._read_raw()
-        cols = [c for c in raw.columns if c != BUCKET_COL]
-        current = raw.where(F.col(BUCKET_COL).isin(touched)).select(cols)
-        remaining = delete_by_key(current, doomed_keys, self.keys)
-        self._commit_touched(
-            touched, remaining.withColumn(BUCKET_COL, self._bucket())
-        )
         return touched

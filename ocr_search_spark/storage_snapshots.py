@@ -731,8 +731,8 @@ class SnapshotTable:
         source keys would all land in the new snapshot.
 
         This is the snapshot-log sibling of
-        ``storage.BucketedTable.upsert`` (bucket-pruned, in-place): COW
-        merge costs a rewrite of touched FILES but keeps history, and
+        ``storage.BucketedTable.replace_group`` (bucket-pruned,
+        in-place): COW merge costs a rewrite of touched FILES but keeps history, and
         with a key-aligned layout (``zorder_write`` / range partition on
         the key) the touched set stays proportional to the batch's key
         range instead of the whole table."""

@@ -4,7 +4,8 @@ ProcessDirector.handle*Update/Delete per file) re-expressed as ONE
 idempotent set-oriented iteration:
 
     list source dir → diff vs standing file library → touched files
-    (added, modified, deleted) → one doc-replace per table, in order:
+    (added, modified, deleted) → read the changed files' new versions
+    once → one doc-replace per table, in order:
       postings:    extract + tokenize the changed files' documents; drop
                    every doc the touched files held and insert the new
                    versions
@@ -109,12 +110,16 @@ def _read_files(spark: SparkSession, source_path: str, rels: list[str]) -> DataF
 def _read_changed(
     spark: SparkSession, source_path: str, changed: DataFrame, n_changed: int
 ) -> DataFrame:
-    """The new versions (doc_id, spans, path) of the ``changed`` files."""
+    """The new versions (doc_id, spans, path) of the ``changed`` files,
+    materialized (eager localCheckpoint): the postings and membership
+    writes both use them, and each changed file is scanned once per
+    poll. The checkpoint is bounded by the poll, like the diff."""
     if n_changed <= _SMALL_POLL_FILES:
         # steady-state poll: a handful of files, read one by one; the
         # driver path list is bounded by _SMALL_POLL_FILES by
         # construction, never by catalog size
-        return _read_files(spark, source_path, [rel for (rel,) in changed.collect()])
+        rels = [rel for (rel,) in changed.collect()]
+        return _read_files(spark, source_path, rels).localCheckpoint(eager=True)
     # cold start / bulk change: one scan of the whole source tree, each
     # row tagged with its url-decoded relative path and semi-joined
     # against the changed set — zero driver lists, and scanning
@@ -140,6 +145,7 @@ def _read_changed(
         )
         .join(changed, "path")
         .select("doc_id", "spans", "path")
+        .localCheckpoint(eager=True)
     )
     # Loud-failure guard: any changed path the decoded scan failed to
     # match is re-read per-file (bounded — a miss is either a zero-row
@@ -158,7 +164,11 @@ def _read_changed(
             f"changed files (first: {missed[0]!r}) — "
             "input_file_name decoding is broken for this source"
         )
-    return src.unionByName(_read_files(spark, source_path, missed)) if missed else src
+    if not missed:
+        return src
+    return src.unionByName(_read_files(spark, source_path, missed)).localCheckpoint(
+        eager=True
+    )
 
 
 def sync_once(

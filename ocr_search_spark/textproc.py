@@ -109,29 +109,6 @@ STOPWORDS = (
 ).split()
 STOPWORDS_SET = frozenset(STOPWORDS)
 
-# Opt-in FULL NLTK English stopword list (the 179-word corpus the
-# reference's `stopwords.words()` typically resolves to — FIDELITY.md
-# T2). Apostrophed and single-letter entries are unreachable through
-# this pipeline (punctuation became spaces, len>1 filter) but are kept
-# verbatim so the pinned list IS the published corpus.
-NLTK_STOPWORDS = (
-    "i me my myself we our ours ourselves you you're you've you'll you'd "
-    "your yours yourself yourselves he him his himself she she's her hers "
-    "herself it it's its itself they them their theirs themselves what "
-    "which who whom this that that'll these those am is are was were be "
-    "been being have has had having do does did doing a an the and but if "
-    "or because as until while of at by for with about against between "
-    "into through during before after above below to from up down in out "
-    "on off over under again further then once here there when where why "
-    "how all any both each few more most other some such no nor not only "
-    "own same so than too very s t can will just don don't should "
-    "should've now d ll m o re ve y ain aren aren't couldn couldn't didn "
-    "didn't doesn doesn't hadn hadn't hasn hasn't haven haven't isn isn't "
-    "ma mightn mightn't mustn mustn't needn needn't shan shan't shouldn "
-    "shouldn't wasn wasn't weren weren't won won't wouldn wouldn't"
-).split()
-NLTK_STOPWORDS_SET = frozenset(NLTK_STOPWORDS)
-
 LEMMA_EXCEPTIONS = {
     "men": "man",
     "women": "woman",
@@ -144,54 +121,14 @@ LEMMA_EXCEPTIONS = {
 }
 
 # Ordered (pattern, replacement) chain — Java-regex and RE2 compatible
-# (no lookarounds, no pattern backrefs) so Spark, DuckDB and Python agree.
-#
-# ``wordnet=True`` (FIDELITY.md T3, opt-in — flipping the default would
-# re-key every recorded posting) adds the two WordNet-delta closers
-# before each plain verb strip:
-#   * undouble — gemination before the suffix is undone when the stem
-#     shows the classic C·V·C doubling shape (running→run, stopped→stop,
-#     submitted→submit); the leading [^aeiou][aeiou] guard keeps
-#     add/egg-style stems intact, and l/s are excluded from the doubled
-#     set (falling→fall, missing→miss beat controlled→control in corpus
-#     frequency — the general case needs WordNet's lexicon).
-#   * e-restore — stems ending c/u/v/z or non-n consonant+g get the
-#     silent e back (merged→merge, producing→produce, saving→save);
-#     -nge stems (changing) stay truncated so -ng verbs (singing,
-#     bringing) don't grow a spurious e.
-WORDNET_UNDOUBLE = "bdgmnprt"
-
-
-def lemma_rules(wordnet: bool = False) -> list[tuple[str, str]]:
-    rules = [
-        (r"^(..+)sses$", r"$1ss"),
-        (r"^(..+)ies$", r"$1y"),
-        (r"^(.*[^sui])s$", r"$1"),
-    ]
-    for suf in ("ing", "ed"):
-        if wordnet:
-            for c in WORDNET_UNDOUBLE:
-                rules.append((rf"^(.*[^aeiou][aeiou]{c}){c}{suf}$", r"$1"))
-            rules.append((rf"^(..+[cuvz]){suf}$", r"$1e"))
-            rules.append((rf"^(..+[^n]g){suf}$", r"$1e"))
-        rules.append((rf"^(...+){suf}$", r"$1"))
-    return rules
-
-
-LEMMA_RULES = lemma_rules()
-LEMMA_RULES_WORDNET = lemma_rules(wordnet=True)
-
-# Treebank-style contraction splits (FIDELITY.md T1): the residual
-# word_tokenize behaviors that survive punctuation removal. Optional —
-# tokenize mode "treebank" applies them; the default SPEC does not.
-TREEBANK_SPLITS = {
-    "cannot": "can not",
-    "gonna": "gon na",
-    "gotta": "got ta",
-    "wanna": "wan na",
-    "lemme": "lem me",
-    "gimme": "gim me",
-}
+# (no lookarounds, no pattern backrefs) so Spark and Python agree.
+LEMMA_RULES = [
+    (r"^(..+)sses$", r"$1ss"),
+    (r"^(..+)ies$", r"$1y"),
+    (r"^(.*[^sui])s$", r"$1"),
+    (r"^(...+)ing$", r"$1"),
+    (r"^(...+)ed$", r"$1"),
+]
 
 # Pinned CJK dictionary for the forward-max-match segmenter (longest-first).
 CJK_DICT = [
@@ -237,49 +174,13 @@ def strip_boilerplate_col(text: Column) -> Column:
     return F.trim(t)
 
 
-def dehyphenate_reflow_col(text: Column) -> Column:
-    """Columnar dehyphenation + soft line reflow for OCR'd page text.
-
-    Tesseract (and every PDF text layer) hard-wraps lines and splits
-    words with trailing hyphens; downstream tokenization then sees
-    "exam-" and "ple" as two garbage terms (reference analog: the OCR
-    output lands verbatim in the Mongo page doc — src/py/img_to_text.py
-    never repairs wraps). Pinned rule order, each a global replace:
-
-      D1  letter "-\\n" lowercase-letter  →  join, DROP the hyphen
-          ("exam-\\nple" → "example"); an uppercase continuation is a
-          likely true compound and falls through to
-      D2  remaining "-\\n"                →  keep the hyphen, drop the
-          break ("X-\\nRay" → "X-Ray")
-      R1  2+ consecutive newlines         →  U+0001 sentinel (paragraph)
-      R2  remaining single "\\n"          →  one space
-      R3  sentinel                        →  "\\n\\n"
-      R4  runs of spaces/tabs             →  one space; trim ends
-
-    The sentinel dance (instead of a lookaround on "\\n") keeps every
-    pattern inside RE2's subset so the DuckDB oracle replays this
-    bit-for-bit — RE2 has no lookbehind. U+0001 is pinned as reserved:
-    ingest strips control chars before this stage ("\\r" likewise is
-    not handled — upstream page text is LF-normalized at ingest).
-    """
-    t = F.regexp_replace(text, r"(\p{L})-\n(\p{Ll})", "$1$2")
-    t = F.regexp_replace(t, r"-\n", "-")
-    t = F.regexp_replace(t, r"\n{2,}", "\u0001")
-    t = F.regexp_replace(t, r"\n", " ")
-    t = F.regexp_replace(t, "\u0001", "\n\n")
-    t = F.regexp_replace(t, r"[ \t]+", " ")
-    # btrim with an explicit set: F.trim strips SPACES only, and a
-    # paragraph sentinel at either end must not survive as bare \n\n
-    return F.btrim(t, F.lit(" \t\n"))
-
-
 def normalize_media_ref_col(doc_id: Column, offset: Column) -> Column:
     return F.concat(
         doc_id, F.lit("-"), F.lpad(offset.cast("string"), MEDIA_REF_PAD, "0"), F.lit(".png")
     )
 
 
-def lemmatize_col(token: Column, wordnet: bool = False) -> Column:
+def lemmatize_col(token: Column) -> Column:
     """Columnar lemmatizer: exception map lookup, else the regexp chain.
 
     Fast path: every lemma rule pattern ends in s/g/d, so tokens with any
@@ -291,7 +192,7 @@ def lemmatize_col(token: Column, wordnet: bool = False) -> Column:
         *[F.lit(x) for kv in LEMMA_EXCEPTIONS.items() for x in kv]
     )
     ruled = token
-    for pat, rep in (LEMMA_RULES_WORDNET if wordnet else LEMMA_RULES):
+    for pat, rep in LEMMA_RULES:
         ruled = F.regexp_replace(ruled, pat, rep)
     may_match = (
         token.endswith("s") | token.endswith("g") | token.endswith("d")
@@ -301,44 +202,22 @@ def lemmatize_col(token: Column, wordnet: bool = False) -> Column:
     )
 
 
-def english_tokens_col(
-    text: Column,
-    treebank: bool = False,
-    wordnet: bool = False,
-    nltk_stop: bool = False,
-) -> Column:
+def english_tokens_col(text: Column) -> Column:
     """Columnar E8-E13: lowercase → strip → punct→space → split →
     English filter → lemmatize. Returns array<string> of lemmatized terms
-    (CJK branch handled separately — see tokenize.py).
-
-    ``treebank=True`` additionally applies the TREEBANK_SPLITS
-    contraction rules (FIDELITY.md T1) before splitting — the residual
-    nltk.word_tokenize behaviors on punctuation-free text.
-    ``nltk_stop=True`` filters with the full 179-word NLTK English list
-    instead of the pinned 60-word default (FIDELITY.md T2) — opt-in so
-    recorded postings keep their keys."""
+    (CJK branch handled separately — see tokenize.py)."""
     t = F.lower(text)
     t = F.translate(t, STRIP_CHARS, "")
     t = F.translate(t, ASCII_PUNCT, " " * len(ASCII_PUNCT))
-    if treebank:
-        # whitespace-anchored (not \b): a \b fires at CJK adjacency too,
-        # where the python twin routes the mixed token to the CJK branch —
-        # only whole whitespace-delimited tokens may split. All \s first
-        # normalized to ' ' so tab/newline-delimited tokens anchor too.
-        t = F.regexp_replace(t, r"\s", " ")
-        t = F.concat(F.lit(" "), t, F.lit(" "))
-        for k, v in TREEBANK_SPLITS.items():
-            t = F.regexp_replace(t, rf"(?<= ){k}(?= )", v)
     toks = F.filter(F.split(t, r"\s+"), lambda x: x != "")
-    stops = NLTK_STOPWORDS if nltk_stop else STOPWORDS
     eng = F.filter(
         toks,
         lambda x: x.rlike("^[\\x00-\\x7F]+$")
         & (F.length(x) > 1)
         & x.rlike("[a-z]")
-        & ~x.isin(*stops),
+        & ~x.isin(*STOPWORDS),
     )
-    return F.transform(eng, lambda x: lemmatize_col(x, wordnet=wordnet))
+    return F.transform(eng, lemmatize_col)
 
 
 def cjk_chars_col(text: Column) -> Column:
@@ -416,81 +295,3 @@ def segment_cjk(chars: str) -> list[str]:
 def segment_cjk_batch(chars: pd.Series) -> pd.Series:
     """Batch wrapper used by the pandas UDF in tokenize.py."""
     return chars.fillna("").map(segment_cjk)
-
-
-def segment_cjk_search(chars: str) -> list[str]:
-    """Search-mode segmentation: jieba.cut_for_search's overlapping
-    sub-word emission (tokenize_and_stem.py:52) re-pinned over CJK_DICT.
-
-    jieba's search mode runs the base cut, then for every multi-char word
-    also emits the contained dictionary words of length 2 (if len > 2)
-    and length 3 (if len > 3), sub-words before the word itself. Same
-    contract here with FMM as the base cut: a query for 學習 now hits
-    documents indexed under 機器學習. FIDELITY.md quantifies the delta
-    vs real jieba."""
-    out: list[str] = []
-    for w in segment_cjk(chars):
-        n = len(w)
-        if n > 2:
-            for j in range(n - 1):
-                g = w[j : j + 2]
-                if g in CJK_DICT_SET:
-                    out.append(g)
-        if n > 3:
-            for j in range(n - 2):
-                g = w[j : j + 3]
-                if g in CJK_DICT_SET:
-                    out.append(g)
-        out.append(w)
-    return out
-
-
-# -------------------------------------------- density-based main content
-# Readability/boilerpipe-style block classification (north_rule: "HTML
-# boilerplate strip … DOM heuristics"), pinned so Spark and the DuckDB
-# oracle agree exactly:
-#   1. split the raw text into blocks on newlines;
-#   2. per block: markup_chars = chars removed by tag strip,
-#      text = tag-stripped block, density = len(text)/(len(text)+markup),
-#      words = whitespace word count of text;
-#   3. drop a block if its tag-stripped trimmed text matches
-#      BOILERPLATE_LINE_RE (known chrome — density alone would keep
-#      prose-like chrome such as copyright lines), else keep iff
-#      words >= MIN_BLOCK_WORDS and density >= MIN_TEXT_DENSITY
-#      (unknown chrome is short or markup-heavy; body prose is long and
-#      clean — and is kept even when tag-wrapped, which the line-pattern
-#      pass alone cannot decide);
-#   4. join kept blocks with single spaces, strip STRIP_CHARS, collapse
-#      whitespace.
-
-MIN_BLOCK_WORDS = 3
-MIN_TEXT_DENSITY = 0.5
-
-
-def extract_main_content_col(text: Column) -> Column:
-    """Columnar density-based main-content extraction (see block comment
-    above). Returns the cleaned text; entirely whole-stage-codegen."""
-    blocks = F.split(text, "\n")
-
-    def keep(b: Column) -> Column:
-        stripped = F.regexp_replace(b, HTML_TAG_RE, " ")
-        chrome = F.trim(stripped).rlike("(?i)" + BOILERPLATE_LINE_RE)
-        words = F.filter(F.split(stripped, r"\s+"), lambda x: x != "")
-        text_len = F.length(F.regexp_replace(stripped, r"\s", ""))
-        markup_len = F.length(F.regexp_replace(b, r"\s", "")) - text_len
-        density = text_len.cast("double") / F.when(
-            (text_len + markup_len) > 0, (text_len + markup_len).cast("double")
-        ).otherwise(F.lit(1.0))
-        return (
-            ~chrome
-            & (F.size(words) >= MIN_BLOCK_WORDS)
-            & (density >= MIN_TEXT_DENSITY)
-        )
-
-    kept = F.filter(blocks, keep)
-    joined = F.array_join(
-        F.transform(kept, lambda b: F.regexp_replace(b, HTML_TAG_RE, " ")), " "
-    )
-    t = F.translate(joined, STRIP_CHARS, "")
-    t = F.regexp_replace(t, r"\s+", " ")
-    return F.trim(t)

@@ -186,8 +186,7 @@ def vocab_coverage(encoded: DataFrame, vocab_size: int) -> DataFrame:
     Scale shape: the piece table aggregates the DISTINCT-word
     segmentation — vocab-sized (≤ chars + merges), orders of magnitude
     below the corpus — so the rank is a bounded single-partition
-    window (same justification as postings_varint_stats' doc
-    numbering) and the kept vocab broadcast-joins back onto the
+    window and the kept vocab broadcast-joins back onto the
     exploded segmentation. No corpus-scale shuffle anywhere.
     """
     if vocab_size < 1:

@@ -14,6 +14,7 @@ binary media spans in, recognized text out, per-row errors recorded.
 
 * ``render_page(lines)``  — text → uint8 grayscale page image (ink=0,
   bg=255): 5×7 glyphs on a 6-px pitch, 3 blank rows between lines.
+  Builds the OCR's test inputs.
 * ``ocr_page(img)``       — the inverse, but written as an OCR, not a
   decoder: threshold → blank-row line segmentation → blank-column
   glyph segmentation → per-glyph 35-bit template match (minimum
@@ -25,7 +26,7 @@ Font: the classic HD44780-style 5×7 matrix for a-z (small-caps shapes)
 and 0-9. Every glyph row and every interior column carries ink, which
 the segmentation relies on; ``test_ocrglyph`` asserts both invariants.
 
-Scale note: pages are rendered/recognized inside Arrow-batched
+Scale note: pages are recognized inside Arrow-batched
 ``mapInPandas`` (operators/convert.py) — per-document numpy work, no
 shuffle, no driver involvement.
 """
@@ -39,11 +40,8 @@ __all__ = [
     "render_page",
     "ocr_page",
     "render_line",
-    "ocr_line",
     "ocr_line_scored",
     "ocr_page_scored",
-    "render_page_at",
-    "ocr_page_boxes",
 ]
 
 # 7 rows per glyph, 5-bit masks, bit 4 = leftmost column.
@@ -125,84 +123,6 @@ def render_page(lines: list[str]) -> np.ndarray:
     return img
 
 
-def render_page_at(
-    boxes: list[tuple[int, int, str]],
-    width: int | None = None,
-    height: int | None = None,
-) -> np.ndarray:
-    """Positioned text boxes → uint8 grayscale page (ink=0, bg=255).
-
-    Each (x, y, text) blits :func:`render_line`'s ink mask with its
-    top-left pixel at (x, y) — absolute page coordinates, y DOWN. The
-    canvas autosizes to the extents plus a 2-px margin unless
-    width/height are given. Overlapping boxes OR their ink. This is the
-    layout-bearing sibling of :func:`render_page`: it produces the
-    two-column / positioned page bitmaps whose recognition requires
-    geometry (``ocr_page_boxes``), not just a line stream."""
-    masks = [(x, y, render_line(t)) for x, y, t in boxes]
-    if width is None:
-        width = max((x + m.shape[1] for x, y, m in masks), default=1) + MARGIN
-    if height is None:
-        height = max((y + GLYPH_H for x, y, m in masks), default=1) + MARGIN
-    page = np.zeros((height, width), dtype=np.uint8)
-    for x, y, m in masks:
-        if x < 0 or y < 0 or y + m.shape[0] > height or x + m.shape[1] > width:
-            raise ValueError(f"box at ({x},{y}) exceeds {width}x{height} canvas")
-        page[y : y + m.shape[0], x : x + m.shape[1]] |= m
-    return np.where(page == 1, 0, 255).astype(np.uint8)
-
-
-def ocr_page_boxes(
-    img: np.ndarray, seg_gap: int = 3 * PITCH
-) -> list[tuple[int, int, str]]:
-    """uint8 grayscale page → positioned text segments (x, y, text).
-
-    Line bands come from blank-row segmentation exactly like
-    :func:`ocr_page`; within a band, ink-column runs separated by a
-    horizontal gap ≥ ``seg_gap`` pixels start a new SEGMENT (a column
-    cell), while narrower gaps stay inside the segment and are
-    reconstructed as word spacing by :func:`ocr_line`. Single-spaced
-    words in this font leave ≤ ~10 px of whitespace and two adjacent
-    columns are laid out ≥ 3 glyph pitches apart, so the default
-    threshold separates columns without splitting sentences. Segments
-    are emitted in (band, x) scan order — DOCUMENT order, not reading
-    order; feed the boxes to ``operators.pagelayout.reading_order`` to
-    recover column-major reading order."""
-    if img.ndim == 3:
-        img = img.mean(axis=2)
-    mask = (img < 128).astype(np.uint8)
-    row_ink = mask.any(axis=1)
-    rows = np.flatnonzero(row_ink)
-    out: list[tuple[int, int, str]] = []
-
-    def band(y0: int, y1: int) -> None:
-        sub = mask[y0 : y1 + 1]
-        cols = np.flatnonzero(sub.any(axis=0))
-        if len(cols) == 0:
-            return
-        start = prev = cols[0]
-        segs: list[tuple[int, int]] = []
-        for c in cols[1:]:
-            if c - prev > seg_gap:
-                segs.append((start, prev))
-                start = c
-            prev = c
-        segs.append((start, prev))
-        for s, e in segs:
-            out.append((int(s), int(y0), ocr_line(sub[:, s : e + 1])))
-
-    if len(rows) == 0:
-        return out
-    start = prev = rows[0]
-    for r in rows[1:]:
-        if r > prev + 1:
-            band(start, prev)
-            start = r
-        prev = r
-    band(start, prev)
-    return out
-
-
 # ------------------------------------------------------------- matcher
 
 _TEMPLATES: tuple[list[str], np.ndarray, np.ndarray, dict[bytes, str]] | None = None
@@ -250,11 +170,6 @@ def _classify_scored(seg: np.ndarray) -> tuple[str, int]:
     d = (stack != a[None]).sum(axis=(1, 2)) + np.abs(widths - min(w, _BOX_W))
     i = int(np.argmin(d))
     return chars[i], int(d[i])
-
-
-def ocr_line(mask: np.ndarray) -> str:
-    """(7, W) binary ink mask → recognized text with word spacing."""
-    return ocr_line_scored(mask)[0]
 
 
 def ocr_line_scored(mask: np.ndarray) -> tuple[str, int, int, int]:

@@ -35,7 +35,7 @@ from __future__ import annotations
 import re
 import zlib
 
-__all__ = ["encode_pdf", "decode_pdf", "encode_pdf_layout", "decode_pdf_layout"]
+__all__ = ["encode_pdf", "decode_pdf"]
 
 
 # --------------------------------------------------------------- writer
@@ -364,175 +364,6 @@ def _page_lines(content: bytes) -> list[str]:
             pending.clear()
     break_line()
     return lines
-
-
-def _page_items(content: bytes) -> list[tuple[float, float, str]]:
-    """Layout tokenizer: one page's content → positioned text items.
-
-    Tracks the text-line cursor of the PDF text-object subset this
-    engine reads and writes: ``Td``/``TD`` translate the line start,
-    ``TL`` + ``T*``/``'`` advance by the leading, ``BT`` resets. Shows
-    between two line moves concatenate into one item at the line start.
-    Coordinates are PDF user space (y axis UP)."""
-    items: list[tuple[float, float, str]] = []
-    lx = ly = 0.0  # line start
-    leading = 0.0
-    cur: list[str] = []
-    nums: list[float] = []
-    strs: list[str] = []
-
-    def flush() -> None:
-        if cur:
-            items.append((lx, ly, "".join(cur)))
-            cur.clear()
-
-    pos, n = 0, len(content)
-    while pos < n:
-        c = content[pos : pos + 1]
-        if c in b" \t\r\n\x00\x0c":
-            pos += 1
-        elif c == b"%":
-            nl = content.find(b"\n", pos)
-            pos = n if nl < 0 else nl + 1
-        elif c == b"(":
-            s, pos = _read_literal(content, pos)
-            strs.append(s)
-        elif c == b"<":
-            if content[pos : pos + 2] == b"<<":
-                pos += 2
-            else:
-                s, pos = _read_hex(content, pos)
-                strs.append(s)
-        elif c in b")>[]{}/":
-            if c == b"/":
-                m = re.compile(rb"/[^\s()<>\[\]{}/%]*").match(content, pos)
-                pos = m.end()
-            else:
-                pos += 1
-        else:
-            m = re.compile(rb"[^\s()<>\[\]{}/%]+").match(content, pos)
-            tok = m.group(0)
-            pos = m.end()
-            if re.fullmatch(rb"[+-]?(\d+\.?\d*|\.\d+)", tok):
-                nums.append(float(tok))
-                continue
-            if tok == b"Tj":
-                if strs:
-                    cur.append(strs[-1])
-            elif tok == b"TJ":
-                cur.extend(strs)
-            elif tok in (b"'", b'"'):
-                flush()
-                ly -= leading
-                if strs:
-                    cur.append(strs[-1])
-            elif tok in (b"Td", b"TD"):
-                flush()
-                if len(nums) >= 2:
-                    lx += nums[-2]
-                    ly += nums[-1]
-                    if tok == b"TD":
-                        leading = -nums[-1]
-            elif tok == b"TL":
-                if nums:
-                    leading = nums[-1]
-            elif tok == b"T*":
-                flush()
-                ly -= leading
-            elif tok == b"BT":
-                flush()
-                lx = ly = 0.0
-                leading = 0.0
-            elif tok == b"ET":
-                flush()
-            nums.clear()
-            strs.clear()
-    flush()
-    return items
-
-
-def decode_pdf_layout(data: bytes) -> list[list[tuple[float, float, str]]]:
-    """PDF bytes → pages of positioned text items (x, y, text) in PDF
-    user space (origin bottom-left, y UP) — the layout-parse face of
-    the codec; feeds XY-cut reading order (operators/pagelayout.py)
-    with REAL coordinates from the content stream instead of modeled
-    boxes."""
-    if not data.startswith(b"%PDF-"):
-        raise ValueError("not a PDF (bad header)")
-    objs = _scan_objects(data)
-    pages = _page_order(objs)
-    out: list[list[tuple[float, float, str]]] = []
-    for num in pages:
-        head, _ = objs[num]
-        out.append(_page_items(_content_streams(head, objs)))
-    return out
-
-
-def encode_pdf_layout(
-    pages: list[list[tuple[float, float, str]]], compress: bool = True
-) -> bytes:
-    """Positioned text items → a PDF whose content streams place each
-    item with relative ``Td`` moves IN THE GIVEN (stream) ORDER — which
-    need not be reading order; that is the point for layout tests."""
-    def fmt(v: float) -> str:
-        return ("%d" % v) if float(v).is_integer() else ("%g" % v)
-
-    streams: list[bytes] = []
-    for items in pages:
-        parts = ["BT /F1 12 Tf"]
-        px = py = 0.0
-        for x, y, text in items:
-            parts.append(f"{fmt(x - px)} {fmt(y - py)} Td ({_esc(text)}) Tj")
-            px, py = x, y
-        parts.append("ET")
-        try:
-            streams.append(" ".join(parts).encode("latin-1"))
-        except UnicodeEncodeError as e:
-            raise ValueError(f"non-latin-1 text cannot be encoded: {e}") from None
-    return _assemble_pdf(streams, compress)
-
-
-def _assemble_pdf(streams: list[bytes], compress: bool) -> bytes:
-    """Shared document skeleton: one page per content stream."""
-    n_pages = len(streams) or 1
-    if not streams:
-        streams = [b"BT ET"]
-    objs: dict[int, bytes] = {}
-    page_nums = [4 + 2 * i for i in range(n_pages)]
-    content_nums = [5 + 2 * i for i in range(n_pages)]
-    kids = " ".join(f"{n} 0 R" for n in page_nums)
-    objs[1] = b"<< /Type /Catalog /Pages 2 0 R >>"
-    objs[2] = f"<< /Type /Pages /Kids [{kids}] /Count {n_pages} >>".encode()
-    objs[3] = b"<< /Type /Font /Subtype /Type1 /BaseFont /Helvetica >>"
-    for i, stream in enumerate(streams):
-        if compress:
-            body = zlib.compress(stream)
-            head = f"<< /Length {len(body)} /Filter /FlateDecode >>"
-        else:
-            body = stream
-            head = f"<< /Length {len(body)} >>"
-        objs[content_nums[i]] = head.encode() + b"\nstream\n" + body + b"\nendstream"
-        objs[page_nums[i]] = (
-            f"<< /Type /Page /Parent 2 0 R /MediaBox [0 0 612 792] "
-            f"/Resources << /Font << /F1 3 0 R >> >> "
-            f"/Contents {content_nums[i]} 0 R >>"
-        ).encode()
-    out = bytearray(b"%PDF-1.4\n%\xe2\xe3\xcf\xd3\n")
-    offsets: dict[int, int] = {}
-    for num in sorted(objs):
-        offsets[num] = len(out)
-        out += f"{num} 0 obj\n".encode() + objs[num] + b"\nendobj\n"
-    xref_pos = len(out)
-    maxn = max(objs)
-    out += f"xref\n0 {maxn + 1}\n".encode()
-    out += b"0000000000 65535 f \n"
-    for n in range(1, maxn + 1):
-        out += f"{offsets[n]:010d} 00000 n \n".encode()
-    out += (
-        f"trailer\n<< /Size {maxn + 1} /Root 1 0 R >>\n"
-        f"startxref\n{xref_pos}\n%%EOF\n"
-    ).encode()
-    return bytes(out)
 
 
 def decode_pdf(data: bytes) -> list[list[str]]:

@@ -38,8 +38,6 @@ from xml.etree import ElementTree as ET
 __all__ = [
     "encode_pptx",
     "decode_pptx",
-    "encode_pptx_layout",
-    "decode_pptx_layout",
     "is_pptx",
 ]
 
@@ -237,85 +235,6 @@ def decode_pptx(data: bytes) -> list[list[str]]:
                 [_para_text(p) for p in root.iter(f"{{{_NS_A}}}p")]
             )
         return slides
-
-
-def _slide_xml_positioned(shapes: list[tuple[int, int, str]]) -> bytes:
-    """Slide part whose shapes carry explicit DrawingML transforms."""
-    sps = []
-    for x, y, text in shapes:
-        paras = "".join(
-            f"<a:p><a:r><a:t>{_xml_esc(seg)}</a:t></a:r></a:p>"
-            for seg in text.split("\n")
-        )
-        sps.append(
-            f"<p:sp><p:spPr><a:xfrm><a:off x=\"{x}\" y=\"{y}\"/>"
-            f'<a:ext cx="914400" cy="457200"/></a:xfrm></p:spPr>'
-            f"<p:txBody>{paras}</p:txBody></p:sp>"
-        )
-    return (
-        f'<?xml version="1.0" encoding="UTF-8" standalone="yes"?>'
-        f'<p:sld xmlns:p="{_NS_P}" xmlns:a="{_NS_A}"><p:cSld><p:spTree>'
-        f'{"".join(sps)}</p:spTree></p:cSld></p:sld>'
-    ).encode()
-
-
-def encode_pptx_layout(slides: list[list[tuple[int, int, str]]]) -> bytes:
-    """Positioned shapes per slide → .pptx: each (x_emu, y_emu, text)
-    becomes one ``p:sp`` with an explicit ``a:xfrm/a:off`` transform,
-    written in the GIVEN (document) order — which need not be reading
-    order; OOXML y grows DOWNWARD from the slide's top-left."""
-    base = encode_pptx([[] for _ in slides])
-    z = zipfile.ZipFile(io.BytesIO(base))
-    parts = {n: z.read(n) for n in z.namelist()}
-    for i, shapes in enumerate(slides):
-        parts[f"ppt/slides/slide{i + 1}.xml"] = _slide_xml_positioned(shapes)
-    buf = io.BytesIO()
-    with zipfile.ZipFile(buf, "w", zipfile.ZIP_DEFLATED) as out:
-        for name in sorted(parts):
-            info = zipfile.ZipInfo(name, date_time=(1980, 1, 1, 0, 0, 0))
-            info.compress_type = zipfile.ZIP_DEFLATED
-            out.writestr(info, parts[name])
-    return buf.getvalue()
-
-
-def decode_pptx_layout(data: bytes) -> list[list[tuple[int, int, str]]]:
-    """.pptx bytes → per-slide positioned shapes (x_emu, y_emu, text) in
-    shape-tree document order; a shape's text is its paragraphs joined
-    with ``\\n``. Shapes without an explicit transform (placeholders
-    inherit theirs from the layout part) report (0, 0) — callers that
-    need geometry should write explicit transforms, as
-    :func:`encode_pptx_layout` does."""
-    try:
-        z = zipfile.ZipFile(io.BytesIO(data))
-    except zipfile.BadZipFile as e:
-        raise ValueError(f"not a zip/pptx: {e}") from None
-    with z:
-        pkg_rels = _read_rels(z, "")
-        pres_part = next(
-            (t for (typ, t) in pkg_rels.values() if typ == _REL_OFFICEDOC), None
-        )
-        if pres_part is None:
-            raise ValueError("package has no officeDocument relationship")
-        pres = ET.fromstring(z.read(pres_part))
-        rid_attr = f"{{{_NS_R}}}id"
-        rids = [s.get(rid_attr) for s in pres.iter(f"{{{_NS_P}}}sldId")]
-        pres_rels = _read_rels(z, pres_part)
-        out: list[list[tuple[int, int, str]]] = []
-        for rid in rids:
-            if rid not in pres_rels:
-                raise ValueError(f"dangling slide relationship {rid}")
-            root = ET.fromstring(z.read(pres_rels[rid][1]))
-            shapes: list[tuple[int, int, str]] = []
-            for sp in root.iter(f"{{{_NS_P}}}sp"):
-                off = sp.find(f".//{{{_NS_A}}}off")
-                x = int(off.get("x", "0")) if off is not None else 0
-                y = int(off.get("y", "0")) if off is not None else 0
-                text = "\n".join(
-                    _para_text(p) for p in sp.iter(f"{{{_NS_A}}}p")
-                )
-                shapes.append((x, y, text))
-            out.append(shapes)
-        return out
 
 
 def is_pptx(data: bytes) -> bool:

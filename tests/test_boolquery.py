@@ -14,9 +14,7 @@ from ocr_search_spark.operators.boolquery import (
     And,
     Not,
     Or,
-    Phrase,
     Term,
-    boolean_matches,
     boolean_search,
     parse_boolean,
     term_leaves,
@@ -40,9 +38,12 @@ def test_parens_override_precedence():
 
 
 def test_quoted_phrase_and_leaf_normalization():
-    # words run through the document tokenizer: lowercase + lemma
-    ast = parse_boolean('"Annual Reports" Tables')
-    assert ast == And((Phrase(("annual", "report")), Term("table")))
+    # words run through the document tokenizer: lowercase + lemma; a
+    # quoted single word is a plain term
+    ast = parse_boolean('"Annual" Reports Tables')
+    assert ast == And((Term("annual"), Term("report"), Term("table")))
+    # a quote that normalizes to nothing drops out like a stopword
+    assert parse_boolean('"the" Tables') == Term("table")
 
 
 def test_single_word_phrase_collapses_to_term():
@@ -82,7 +83,7 @@ def test_lowercase_operators_are_content_words():
 
 
 def test_term_leaves_excludes_negated():
-    ast = parse_boolean('(nebula OR "table value") AND merge AND NOT summit')
+    ast = parse_boolean('(nebula OR (table value)) AND merge AND NOT summit')
     assert term_leaves(ast) == ["merge", "nebula", "table", "value"]
 
 
@@ -94,7 +95,7 @@ _DOCS = {
     "d2": ["zephyr", "merge", "merge"],
     "d3": ["nebula", "summit", "merge"],
     "d4": ["table", "value", "merge", "table", "value"],
-    "d5": ["value", "table", "nebula"],  # 'table value' NOT adjacent in order
+    "d5": ["value", "table", "nebula"],
     "d6": ["summit", "table", "value", "merge"],
     "d7": ["zephyr"],
 }
@@ -102,36 +103,18 @@ _DOCS = {
 
 @pytest.fixture(scope="module")
 def tiny_index(spark):
-    post_rows = []
-    pos_rows = []
-    for d, toks in _DOCS.items():
-        for i, t in enumerate(toks):
-            pos_rows.append((t, d, i))
-        for t in set(toks):
-            post_rows.append((t, d, toks.count(t)))
-    postings = spark.createDataFrame(
+    post_rows = [
+        (t, d, toks.count(t)) for d, toks in _DOCS.items() for t in set(toks)
+    ]
+    return spark.createDataFrame(
         post_rows, "term string, doc_id string, tf long"
     ).cache()
-    pos = spark.createDataFrame(
-        pos_rows, "term string, doc_id string, pos int"
-    ).cache()
-    return postings, pos
 
 
 def _brute(node):
     """Python-set evaluation of an AST over _DOCS."""
     if isinstance(node, Term):
         return {d for d, toks in _DOCS.items() if node.term in toks}
-    if isinstance(node, Phrase):
-        k = len(node.terms)
-        return {
-            d
-            for d, toks in _DOCS.items()
-            if any(
-                tuple(toks[i : i + k]) == node.terms
-                for i in range(len(toks) - k + 1)
-            )
-        }
     if isinstance(node, Or):
         out = set()
         for c in node.children:
@@ -157,29 +140,23 @@ def _brute(node):
         "nebula OR zephyr",
         "(nebula OR zephyr) AND merge",
         "merge AND NOT summit",
-        '"table value"',
-        '"table value merge"',
-        '(nebula OR "table value") AND merge AND NOT summit',
+        '(nebula OR ("table" value)) AND merge AND NOT summit',
         "(nebula OR zephyr) (table OR merge) NOT (summit OR value)",
         "missingterm",
         "missingterm OR nebula",
     ],
 )
 def test_matches_equal_brute_force(spark, tiny_index, query):
-    postings, pos = tiny_index
     ast = parse_boolean(query)
     got = {
         r["doc_id"]
-        for r in boolean_matches(postings, query, pos_postings=pos).collect()
+        for r in boolean_search(tiny_index, query, max_return=len(_DOCS)).collect()
     }
     assert got == _brute(ast)
 
 
 def test_search_scores_are_max_tf_over_positive_leaves(spark, tiny_index):
-    postings, pos = tiny_index
-    rows = boolean_search(
-        postings, "merge AND NOT summit", pos_postings=pos
-    ).collect()
+    rows = boolean_search(tiny_index, "merge AND NOT summit").collect()
     # matched: d1, d2, d4 — score = max tf among positive leaves {merge}
     assert [(r["doc_id"], r["score"]) for r in rows] == [
         ("d2", 2),
@@ -189,40 +166,35 @@ def test_search_scores_are_max_tf_over_positive_leaves(spark, tiny_index):
 
 
 def test_search_order_is_score_desc_doc_asc_with_limit(spark, tiny_index):
-    postings, pos = tiny_index
-    rows = boolean_search(
-        postings, "table value", pos_postings=pos, max_return=2
-    ).collect()
+    rows = boolean_search(tiny_index, "table value", max_return=2).collect()
     # d4 has tf(table)=2 -> score 2; d1/d5/d6 tie at 1, doc_id asc
     assert [(r["doc_id"], r["score"]) for r in rows] == [("d4", 2), ("d1", 1)]
 
 
 def test_unbounded_negation_rejected(spark, tiny_index):
-    postings, pos = tiny_index
     for q in ["NOT nebula", "nebula OR NOT zephyr", "NOT nebula NOT zephyr"]:
         with pytest.raises(ValueError):
-            boolean_matches(postings, q, pos_postings=pos)
+            boolean_search(tiny_index, q)
 
 
 def test_empty_query_returns_empty(spark, tiny_index):
-    postings, pos = tiny_index
-    assert boolean_search(postings, "the of a", pos_postings=pos).count() == 0
+    assert boolean_search(tiny_index, "the of a").count() == 0
 
 
 def test_phrase_without_positional_index_raises(spark, tiny_index):
-    postings, _ = tiny_index
-    with pytest.raises(ValueError):
-        boolean_matches(postings, '"table value"')
+    # the index is positionless: a multi-word quote is refused at parse
+    # time, before any plan is built
+    with pytest.raises(ValueError, match="phrase"):
+        parse_boolean('"table value"')
+    with pytest.raises(ValueError, match="phrase"):
+        boolean_search(tiny_index, 'merge AND NOT "table value"')
 
 
 def test_plan_has_no_python_udf(spark, tiny_index):
     """The compiled plan is pure set algebra: no BatchEvalPython /
     ArrowEvalPython stages anywhere."""
-    postings, pos = tiny_index
     df = boolean_search(
-        postings,
-        '(nebula OR "table value") AND merge AND NOT summit',
-        pos_postings=pos,
+        tiny_index, '(nebula OR "table" value) AND merge AND NOT summit'
     )
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

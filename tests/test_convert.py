@@ -9,13 +9,7 @@ end-to-end chain PDF bytes → spans → extract → postings → search hit.
 import numpy as np
 import pytest
 
-from ocr_search_spark.operators.convert import (
-    convert_to_spans,
-    ocr_png_media,
-    pdf_to_spans,
-    pptx_to_spans,
-    sniff_format,
-)
+from ocr_search_spark.operators.convert import convert_to_spans, sniff_format
 from ocr_search_spark.training.ocrglyph import render_page
 from ocr_search_spark.training.pdfmini import encode_pdf
 from ocr_search_spark.training.png import encode_png
@@ -31,7 +25,7 @@ def _payload_df(spark, rows):
 def test_pdf_to_spans_roundtrip(spark):
     lines = [f"alpha beta doc line {i}" for i in range(10)]
     df = _payload_df(spark, [("d1", encode_pdf(lines, lines_per_page=4))])
-    out = pdf_to_spans(df).collect()
+    out = convert_to_spans(df).collect()
     assert len(out) == 1 and out[0]["error"] is None
     assert out[0]["n_pages"] == 3
     spans = out[0]["spans"]
@@ -46,24 +40,10 @@ def test_pdf_to_spans_roundtrip(spark):
 def test_pptx_to_spans_roundtrip(spark):
     slides = [["slide one title", "body text"], ["slide two"]]
     df = _payload_df(spark, [("p1", encode_pptx(slides))])
-    out = pptx_to_spans(df).collect()[0]
+    out = convert_to_spans(df).collect()[0]
     assert out["error"] is None and out["n_pages"] == 2
     texts = [s["text"] for s in out["spans"] if s["kind"] == "text"]
     assert texts == ["slide one title", "body text", "slide two"]
-
-
-def test_ocr_png_media(spark):
-    lines = ["spark ocr works", "line two 42"]
-    img = render_page(lines)
-    png = encode_png(img[:, :, None], 2)
-    media = spark.createDataFrame(
-        [("m1", bytearray(png)), ("bad", bytearray(b"nope"))],
-        "media_ref string, payload binary",
-    )
-    rows = {r["media_ref"]: r for r in ocr_png_media(media).collect()}
-    assert rows["m1"]["text"] == "spark ocr works\nline two 42"
-    assert rows["m1"]["n_lines"] == 2 and rows["m1"]["error"] is None
-    assert rows["bad"]["text"] is None and "PNG" in rows["bad"]["error"]
 
 
 def test_convert_dispatch_mixed(spark):
@@ -91,11 +71,10 @@ def test_convert_dispatch_mixed(spark):
 
 
 def test_docx_to_spans_page_breaks(spark):
-    from ocr_search_spark.operators.convert import docx_to_spans
     from ocr_search_spark.training.docxmini import encode_docx
 
     pages = [["first page para", "second para"], ["next page text"]]
-    out = docx_to_spans(_payload_df(spark, [("w1", encode_docx(pages))]))
+    out = convert_to_spans(_payload_df(spark, [("w1", encode_docx(pages))]))
     row = out.collect()[0]
     assert row["error"] is None and row["n_pages"] == 2
     assert [s["offset"] for s in row["spans"]] == list(range(5))
@@ -145,60 +124,6 @@ def test_convert_error_rows_never_fail_stage(spark):
     rows = [("t1", good[: len(good) // 3]), ("t2", encode_pptx([["y"]])[:20])]
     out = convert_to_spans(_payload_df(spark, rows)).collect()
     assert all(r["error"] is not None and r["spans"] == [] for r in out)
-
-
-def test_render_page_media_roundtrip(spark):
-    """media spans → real PNG payloads; OCR recovers each page's text
-    and the geometry matches the font metrics."""
-    from ocr_search_spark.operators.convert import render_page_media
-
-    lines = [f"words for page line {i}" for i in range(6)]
-    pdf = encode_pdf(lines, lines_per_page=4)
-    spans = pdf_to_spans(_payload_df(spark, [("rd", pdf)])).select("doc_id", "spans")
-    media = render_page_media(spans)
-    rows = {r["media_ref"]: r for r in media.collect()}
-    assert set(rows) == {"rd/page-0.png", "rd/page-1.png"}
-    # page 0: 4 lines; page 1: 2 lines — height = 7n + 3(n-1) + 4
-    assert rows["rd/page-0.png"]["height"] == 7 * 4 + 3 * 3 + 4
-    assert rows["rd/page-1.png"]["height"] == 7 * 2 + 3 * 1 + 4
-    assert rows["rd/page-0.png"]["width"] == 6 * max(len(l) for l in lines[:4]) + 4
-    ocr = {r["media_ref"]: r for r in ocr_png_media(media).collect()}
-    assert ocr["rd/page-0.png"]["text"] == "\n".join(lines[:4])
-    assert ocr["rd/page-1.png"]["text"] == "\n".join(lines[4:])
-    assert ocr["rd/page-0.png"]["width"] == rows["rd/page-0.png"]["width"]
-    assert ocr["rd/page-1.png"]["height"] == rows["rd/page-1.png"]["height"]
-
-
-def test_pdf_layout_boxes_two_columns(spark):
-    """A two-column PDF written in interleaved stream order: the layout
-    decode + XY-cut reading order recovers column-major logical order."""
-    from ocr_search_spark.operators.convert import pdf_layout_boxes
-    from ocr_search_spark.operators.pagelayout import reading_order
-    from ocr_search_spark.training.pdfmini import encode_pdf_layout
-    from pyspark.sql import functions as F
-
-    left = [f"left row {r}" for r in range(3)]
-    right = [f"right row {r}" for r in range(3)]
-    items = []
-    for r in range(3):  # stream order interleaves the columns
-        items.append((72.0, 720.0 - 14 * r, left[r]))
-        items.append((330.0, 720.0 - 14 * r, right[r]))
-    df = _payload_df(spark, [("two", encode_pdf_layout([items]))])
-    boxes = pdf_layout_boxes(df).select(
-        "doc_id",
-        "page",
-        F.col("seq").alias("box_id"),
-        F.col("x").cast("int").alias("x0"),
-        (F.col("x") + 6 * F.length("text")).cast("int").alias("x1"),
-        (720 - F.col("y")).cast("int").alias("y0"),
-        (720 - F.col("y") + 12).cast("int").alias("y1"),
-        "text",
-    )
-    ranked = reading_order(boxes, page_col="page", min_gap=60).join(
-        boxes.select("box_id", "text"), "box_id"
-    )
-    ordered = [r["text"] for r in ranked.orderBy("rank").collect()]
-    assert ordered == left + right
 
 
 def test_repartition_payload_bucketed(spark):

@@ -135,47 +135,3 @@ def test_skew_tail_present(corpus_df):
     assert max(sizes) > 64, "no mega-doc in corpus — skew path untested"
     assert min(sizes) >= 2
 
-
-def test_coalesce_spans_normalizes(spark):
-    """Sort by offset, drop whitespace-only text spans, merge adjacent
-    text runs, keep media as boundaries, renumber densely."""
-    from ocr_search_spark.operators.extract import coalesce_spans
-
-    rows = [
-        (
-            "d1",
-            [
-                ("text", "Hello world", "", 0),
-                ("text", "again", "", 1),
-                ("text", "  ", "", 2),
-                ("media", "", "img/1", 3),
-                ("text", "", "", 4),
-                ("text", "TAIL", "", 5),
-            ],
-        ),
-        # out-of-order input: sort must precede the fold
-        ("d2", [("text", "solo", "", 2), ("media", "", "img/2", 0), ("media", "", "img/3", 1)]),
-        # all spans dropped -> empty normalized array
-        ("d3", [("text", "   ", "", 0)]),
-    ]
-    schema = (
-        "doc_id string, "
-        "spans array<struct<kind:string,text:string,media_ref:string,offset:int>>"
-    )
-    out = {
-        r["doc_id"]: [
-            (s["kind"], s["text"], s["media_ref"], s["offset"]) for s in r["spans"]
-        ]
-        for r in coalesce_spans(spark.createDataFrame(rows, schema)).collect()
-    }
-    assert out["d1"] == [
-        ("text", "Hello world again", "", 0),
-        ("media", "", "img/1", 1),
-        ("text", "TAIL", "", 2),
-    ]
-    assert out["d2"] == [
-        ("media", "", "img/2", 0),
-        ("media", "", "img/3", 1),
-        ("text", "solo", "", 2),
-    ]
-    assert out["d3"] == []

@@ -88,63 +88,6 @@ def test_empty_page():
     assert ocr_page(np.full((10, 10), 255, dtype=np.uint8)) == []
 
 
-def test_render_at_and_boxes_roundtrip():
-    from ocr_search_spark.training.ocrglyph import ocr_page_boxes, render_page_at
-
-    boxes = [
-        (10, 4, "left one row"),
-        (300, 4, "right one"),
-        (10, 16, "left two"),
-        (300, 16, "right two here"),
-    ]
-    img = render_page_at(boxes)
-    # scan order = (band, x), regardless of input order
-    assert ocr_page_boxes(img) == sorted(boxes, key=lambda b: (b[1], b[0]))
-
-
-def test_boxes_single_line_is_one_segment():
-    from ocr_search_spark.training.ocrglyph import ocr_page_boxes, render_page_at
-
-    img = render_page_at([(2, 2, "only a single line 42")])
-    assert ocr_page_boxes(img) == [(2, 2, "only a single line 42")]
-
-
-def test_boxes_png_transport_survives_noise():
-    from ocr_search_spark.training.ocrglyph import ocr_page_boxes, render_page_at
-    from ocr_search_spark.training.png import decode_png, encode_png
-
-    img = render_page_at([(4, 4, "alpha beta"), (200, 4, "gamma")])
-    back = decode_png(encode_png(img[:, :, None], 3))[:, :, 0].copy()
-    back[5, 6] = 0  # one flipped pixel inside the first glyph's box
-    got = ocr_page_boxes(back)
-    assert [t for _, _, t in got] == ["alpha beta", "gamma"]
-
-
-def test_render_at_out_of_canvas_raises():
-    from ocr_search_spark.training.ocrglyph import render_page_at
-
-    with pytest.raises(ValueError, match="exceeds"):
-        render_page_at([(50, 2, "wide text")], width=60, height=20)
-
-
-def test_ocr_layout_boxes_operator(spark):
-    from ocr_search_spark.operators.convert import ocr_layout_boxes
-    from ocr_search_spark.training.ocrglyph import render_page_at
-    from ocr_search_spark.training.png import encode_png
-
-    img = render_page_at([(4, 4, "col a"), (120, 4, "col b")])
-    df = spark.createDataFrame(
-        [("d1", bytearray(encode_png(img[:, :, None], 1))),
-         ("bad", bytearray(b"junk"))],
-        "doc_id string, payload binary",
-    )
-    rows = {(r["doc_id"], r["seq"]): r for r in ocr_layout_boxes(df).collect()}
-    assert rows[("d1", 0)]["text"] == "col a" and rows[("d1", 0)]["x"] == 4
-    assert rows[("d1", 1)]["text"] == "col b" and rows[("d1", 1)]["x"] == 120
-    assert rows[("d1", 0)]["y"] == 4
-    assert rows[("bad", None)]["error"] is not None
-
-
 def test_scored_ocr_confidence_counts():
     """Scored OCR: clean renders are all exact-template hits; a single
     safe bit flip costs distance exactly 1 on exactly one glyph and

@@ -152,51 +152,3 @@ def test_non_latin1_rejected():
     with pytest.raises(ValueError, match="latin-1"):
         encode_pdf(["日本語"])
 
-
-def test_layout_roundtrip():
-    from ocr_search_spark.training.pdfmini import decode_pdf_layout, encode_pdf_layout
-
-    pages = [
-        [(72.0, 720.0, "top left"), (330.0, 720.0, "top right"),
-         (72.0, 706.0, "second left")],
-        [(100.5, 650.0, "page two item")],
-    ]
-    data = encode_pdf_layout(pages)
-    assert decode_pdf_layout(data) == pages
-    # uncompressed path too
-    assert decode_pdf_layout(encode_pdf_layout(pages, compress=False)) == pages
-
-
-def test_layout_of_writer_output_tracks_leading():
-    # the line-oriented writer uses Td + TL + T*; the layout decoder
-    # must place line i at y = 720 - 14*i on every page.
-    from ocr_search_spark.training.pdfmini import decode_pdf_layout
-
-    lines = [f"line {i}" for i in range(6)]
-    pages = decode_pdf_layout(encode_pdf(lines, lines_per_page=3))
-    for items in pages:
-        assert [(x, y) for x, y, _ in items] == [
-            (72.0, 720.0 - 14 * i) for i in range(3)
-        ]
-    assert [t for items in pages for _, _, t in items] == lines
-
-
-def test_layout_quote_op_advances_line():
-    import zlib as _z
-
-    content = b"BT 12 TL 72 720 Td (a) Tj (b) ' (c) ' ET"
-    body = _z.compress(content)
-    data = (
-        b"%PDF-1.4\n"
-        b"1 0 obj\n<< /Type /Catalog /Pages 2 0 R >>\nendobj\n"
-        b"2 0 obj\n<< /Type /Pages /Kids [3 0 R] /Count 1 >>\nendobj\n"
-        b"3 0 obj\n<< /Type /Page /Parent 2 0 R /Contents 4 0 R >>\nendobj\n"
-        + f"4 0 obj\n<< /Length {len(body)} /Filter /FlateDecode >>\nstream\n".encode()
-        + body + b"\nendstream\nendobj\n"
-        b"trailer\n<< /Size 5 /Root 1 0 R >>\n%%EOF\n"
-    )
-    from ocr_search_spark.training.pdfmini import decode_pdf_layout
-
-    assert decode_pdf_layout(data) == [
-        [(72.0, 720.0, "a"), (72.0, 708.0, "b"), (72.0, 696.0, "c")]
-    ]

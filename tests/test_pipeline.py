@@ -80,6 +80,47 @@ def test_resume_equals_cold_run(spark, corpus_df, out_dir, tmp_path):
         )
 
 
+def _files_per_bucket(table_dir):
+    """{bucket dir name: number of parquet data files in it}."""
+    return {
+        d: sum(f.endswith(".parquet") for f in os.listdir(os.path.join(table_dir, d)))
+        for d in os.listdir(table_dir)
+        if d.startswith("bucket=")
+    }
+
+
+def test_multi_partition_extraction_writes_one_file_per_bucket(
+    spark, corpus_df, out_dir, tmp_path
+):
+    """Extraction spread over several partitions (and the skew path's
+    shuffle) still commits each bucket as one file, on a cold run and on
+    each leg of a partial run + resume; the resumed table equals the
+    cold one."""
+    docs = corpus_df.select("doc_id", "spans").repartition(6)
+    n_buckets = 8
+
+    cold_dir = str(tmp_path / "cold")
+    pipeline.run_extraction_job(
+        spark, docs, cold_dir, run_id="cold", n_buckets=n_buckets, num_partitions=4
+    )
+    cold_files = _files_per_bucket(f"{cold_dir}/{pipeline.EXTRACTED_DIR}")
+    assert cold_files == {f"bucket={b}": 1 for b in range(n_buckets)}
+
+    pipeline.run_extraction_job(
+        spark, docs, out_dir, run_id="r", n_buckets=n_buckets, num_partitions=4,
+        bucket_filter=lambda b: b < 3,
+    )
+    pipeline.run_extraction_job(
+        spark, docs, out_dir, run_id="r", n_buckets=n_buckets, num_partitions=4
+    )
+    assert _files_per_bucket(f"{out_dir}/{pipeline.EXTRACTED_DIR}") == cold_files
+
+    cold = _flat(spark.read.parquet(f"{cold_dir}/{pipeline.EXTRACTED_DIR}"))
+    resumed = _flat(spark.read.parquet(f"{out_dir}/{pipeline.EXTRACTED_DIR}"))
+    assert cold.exceptAll(resumed).count() == 0
+    assert resumed.exceptAll(cold).count() == 0
+
+
 def test_read_done_buckets_absent_checkpoint_is_empty(spark, out_dir):
     assert pipeline.read_done_buckets(spark, out_dir, "r", "cfg") == set()
 
@@ -158,10 +199,10 @@ def test_postings_build_and_history(spark, corpus_df, out_dir):
 
 def test_incremental_update_equals_full_rebuild(spark, corpus_df):
     """M3/X4 end-to-end: when a diff of documents changes (modified +
-    deleted + added), re-extracting ONLY the changed docs and MERGE-ing
-    into the standing tables equals a full rebuild from the new corpus."""
+    deleted + added), re-extracting ONLY the changed docs and replacing
+    them in the standing tables (anti-join + union on doc_id) equals a
+    full rebuild from the new corpus."""
     from ocr_search_spark.operators.extract import extract_spans_columnar
-    from ocr_search_spark.operators.maintenance import delete_by_key, upsert_by_key
     from ocr_search_spark.operators.tokenize import term_postings
 
     docs_v1 = corpus_df.select("doc_id", "spans").limit(100).cache()
@@ -210,10 +251,13 @@ def test_incremental_update_equals_full_rebuild(spark, corpus_df):
     doomed = spark.createDataFrame(
         [(d,) for d in sorted(deleted | modified)], "doc_id string"
     )
-    ext_inc = upsert_by_key(
-        delete_by_key(ext_v1, doomed, ["doc_id"]), ext_delta, ["doc_id"]
-    )
-    post_inc = delete_by_key(post_v1, doomed, ["doc_id"]).unionByName(post_delta)
+
+    def replaced(standing, delta):
+        kept = standing.join(doomed, "doc_id", "left_anti")
+        return kept.select(*standing.columns).unionByName(delta)
+
+    ext_inc = replaced(ext_v1, ext_delta)
+    post_inc = replaced(post_v1, post_delta)
 
     flat = lambda df: df.select(  # noqa: E731
         "doc_id", F.posexplode("spans").alias("p", "s")

@@ -84,6 +84,15 @@ def test_product_plans_have_no_cartesian_or_unbounded_bnlj(spark, tmp_path):
     for name, df in plans.items():
         info = audit(df, plan_string(df))
         assert info["cartesian"] == 0 and info["bnlj_bad"] == 0, (name, info)
+    # a poll reads each changed source file once: the postings and
+    # membership writes run off that materialized read, not the files
+    source = str(tmp_path / "source")
+    for name in ("sync_postings", "sync_membership"):
+        scans = [
+            line for line in plan_string(plans[name]).splitlines()
+            if "Location:" in line and source in line
+        ]
+        assert scans == [], (name, scans)
     # the fuzzy matcher's length-band join is the one BNLJ, and it is
     # proven bounded (the broadcast side is the literal query terms)
     assert _audit_bnlj(plans["match_terms_fuzzy"]) == (1, 0)

@@ -103,26 +103,6 @@ def test_search_validation(postings_df, spark):
         search.search(spark, postings_df, "x", max_return=0)
 
 
-def test_upsert_idempotence(postings_df):
-    """X4: MERGE-emulation upsert is idempotent — applying the same
-    updates twice equals applying them once, and upserting a table into
-    itself is a no-op."""
-    from ocr_search_spark.operators.maintenance import upsert_by_key
-
-    keys = ["term", "doc_id"]
-    once = upsert_by_key(postings_df, postings_df, keys)
-    twice = upsert_by_key(once, postings_df, keys)
-    assert once.count() == postings_df.count()
-    assert twice.exceptAll(postings_df).count() == 0
-    assert postings_df.exceptAll(twice).count() == 0
-
-    updates = postings_df.limit(25).withColumn("tf", F.col("tf") + 7)
-    u1 = upsert_by_key(postings_df, updates, keys)
-    u2 = upsert_by_key(u1, updates, keys)
-    assert u1.exceptAll(u2).count() == 0 and u2.exceptAll(u1).count() == 0
-    assert u1.count() == postings_df.count()
-
-
 def test_correlations_df_guard(spark):
     """Skewed-df fixture: a term present in 100% of docs (the quadratic
     self-join killer) must be dropped by max_df_ratio while normal terms
@@ -141,26 +121,6 @@ def test_correlations_df_guard(spark):
     assert "hot" not in terms
     tcr = {(r["term1"], r["term2"]): r["tcr"] for r in guarded}
     assert abs(tcr[("aa", "bb")] - 1.0) < 1e-9  # identical posting vectors
-
-
-def test_upsert_duplicate_keys_deterministic(spark):
-    """Duplicate keys inside the updates batch resolve to the SAME
-    survivor regardless of partitioning/order: max (version, payload)."""
-    from ocr_search_spark.operators.maintenance import upsert_by_key
-
-    existing = spark.createDataFrame(
-        [("k1", 0, "old")], "k string, ver int, val string"
-    )
-    dup_rows = [("k1", 2, "newest"), ("k1", 1, "mid"), ("k2", 5, "b"), ("k2", 5, "a")]
-    for nparts in (1, 4):
-        updates = spark.createDataFrame(
-            dup_rows, "k string, ver int, val string"
-        ).repartition(nparts)
-        got = {
-            r["k"]: (r["ver"], r["val"])
-            for r in upsert_by_key(existing, updates, ["k"], version_col="ver").collect()
-        }
-        assert got == {"k1": (2, "newest"), "k2": (5, "b")}
 
 
 def test_incremental_correlations_equals_full(spark, corpus_df):
@@ -211,65 +171,6 @@ def test_incremental_correlations_equals_full(spark, corpus_df):
         )
         assert r(inc).exceptAll(r(full)).count() == 0, f"extra pairs (ratio={ratio})"
         assert r(full).exceptAll(r(inc)).count() == 0, f"missing pairs (ratio={ratio})"
-
-
-def test_positional_phrase_search(spark):
-    """Positional index + k-term phrase adjacency: positions are over
-    the FILTERED English sequence (stopwords dropped before positions,
-    so 'scan the table' matches phrase ['scan', 'table']), counts are
-    per-occurrence, empty phrase is empty."""
-    from ocr_search_spark.operators.search import phrase_search
-    from ocr_search_spark.operators.tokenize import positional_postings
-
-    rows = [
-        ("d1", "fast table value part slow fast table value part"),
-        ("d2", "table value the part"),   # 'the' dropped -> value,part adjacent
-        ("d3", "value table part fast"),  # wrong order
-        ("d4", "scan the table value part scan"),
-    ]
-    docs = spark.createDataFrame(rows, "doc_id string, doc_text string")
-    pos = positional_postings(docs).cache()
-    # 3-term phrase
-    got = {r["doc_id"]: r["n_matches"] for r in
-           phrase_search(pos, ["table", "value", "part"]).collect()}
-    assert got == {"d1": 2, "d2": 1, "d4": 1}
-    # stopword removal shifts positions: 'scan table' matches d4
-    got2 = {r["doc_id"]: r["n_matches"] for r in
-            phrase_search(pos, ["scan", "table"]).collect()}
-    assert got2 == {"d4": 1}
-    assert phrase_search(pos, []).count() == 0
-    # single-term phrase degenerates to tf
-    got1 = {r["doc_id"]: r["n_matches"] for r in
-            phrase_search(pos, ["value"]).collect()}
-    assert got1 == {"d1": 2, "d2": 1, "d3": 1, "d4": 1}
-
-
-def test_postings_varint_stats_vs_python(spark):
-    """Delta+varint byte counts replay exactly in plain Python."""
-    from ocr_search_spark.operators.maintenance import postings_varint_stats
-
-    rows = [("alpha", f"d{i:03d}", 1) for i in range(40)] + [
-        ("beta", "d001", 2), ("beta", "d999", 1), ("gamma", "d500", 1)
-    ]
-    df = spark.createDataFrame(rows, "term string, doc_id string, tf long")
-    got = {r["term"]: (r["n_postings"], r["bytes_varint"], r["bytes_fixed"])
-           for r in postings_varint_stats(df).collect()}
-
-    def vbytes(x):
-        n = 1
-        while x >= (1 << (7 * n)) and n < 9:
-            n += 1
-        return n
-
-    ordinal = {d: i + 1 for i, d in enumerate(sorted({d for _, d, _ in rows}))}
-    expect = {}
-    for term in {t for t, _, _ in rows}:
-        dns = sorted(ordinal[d] for t, d, _ in rows if t == term)
-        deltas = [dns[0]] + [b - a for a, b in zip(dns, dns[1:])]
-        expect[term] = (len(dns), sum(vbytes(x) for x in deltas), 8 * len(dns))
-    assert got == expect
-    # sorted deltas compress: varint bytes strictly below fixed for runs
-    assert got["alpha"][1] < got["alpha"][2]
 
 
 def test_prefix_search_expansion_and_guard(spark):

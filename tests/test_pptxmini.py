@@ -87,30 +87,3 @@ def test_xml_escaping_roundtrip():
     slides = [["a<b>&c", "quotes \"x\" 'y'"]]
     assert decode_pptx(encode_pptx(slides)) == slides
 
-
-def test_layout_roundtrip():
-    from ocr_search_spark.training.pptxmini import (
-        decode_pptx_layout,
-        encode_pptx_layout,
-    )
-
-    slides = [
-        [(457200, 457200, "top left shape"), (3657600, 457200, "top right")],
-        [(914400, 914400, "second slide\nwith two paras")],
-    ]
-    data = encode_pptx_layout(slides)
-    assert decode_pptx_layout(data) == slides
-
-
-def test_layout_decode_of_plain_deck_gives_origin():
-    from ocr_search_spark.training.pptxmini import decode_pptx_layout
-
-    data = encode_pptx([["no transform here"]])
-    assert decode_pptx_layout(data) == [[(0, 0, "no transform here")]]
-
-
-def test_layout_deck_still_readable_by_text_decoder():
-    from ocr_search_spark.training.pptxmini import encode_pptx_layout
-
-    data = encode_pptx_layout([[(10, 20, "abc"), (30, 40, "def")]])
-    assert decode_pptx(data) == [["abc", "def"]]

@@ -1,9 +1,9 @@
-"""BucketedTable: partition-pruned MERGE on parquet storage.
+"""BucketedTable: partition-pruned group replace on parquet storage.
 
-The contract under test (VERDICT round-1 item 5): an upsert/delete must
-leave every untouched bucket partition's files BYTE-IDENTICAL (never
-opened, never rewritten), while the table contents equal the pure-plan
-upsert_by_key/delete_by_key applied to the whole table.
+The contract under test: a replace_group must leave every untouched
+bucket partition's files BYTE-IDENTICAL (never opened, never
+rewritten), while the table contents equal the same replace applied to
+the whole table as a plain anti-join + union.
 """
 
 from __future__ import annotations
@@ -14,7 +14,6 @@ from pathlib import Path
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_search_spark.operators.maintenance import delete_by_key, upsert_by_key
 from ocr_search_spark.storage import BUCKET_COL, BucketedTable
 
 N_BUCKETS = 8
@@ -47,6 +46,13 @@ def _rows(df):
     return sorted(tuple(r) for r in df.collect())
 
 
+def _replaced(base, updates, keys):
+    """Whole-table reference for replace_group: drop every row of the
+    replaced groups, add the update rows."""
+    kept = base.join(updates.select(*keys).distinct(), keys, "left_anti")
+    return kept.select(*base.columns).unionByName(updates.select(*base.columns))
+
+
 def test_upsert_rewrites_only_touched_buckets(spark, base_df, tmp_path):
     path = str(tmp_path / "tbl")
     t = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS)
@@ -57,7 +63,7 @@ def test_upsert_rewrites_only_touched_buckets(spark, base_df, tmp_path):
     updates = spark.createDataFrame(
         [("t1", "d1", 99), ("zzz", "znew", 5)], "term string, doc_id string, tf int"
     )
-    touched = t.upsert(updates)
+    touched = t.replace_group(updates, KEYS)
     assert 0 < len(touched) <= 2
 
     after = _by_bucket(_file_state(path))
@@ -67,8 +73,7 @@ def test_upsert_rewrites_only_touched_buckets(spark, base_df, tmp_path):
         else:
             assert after[b] == before[b], f"untouched bucket {b} was modified"
 
-    expected = upsert_by_key(base_df, updates, KEYS)
-    assert _rows(t.read()) == _rows(expected)
+    assert _rows(t.read()) == _rows(_replaced(base_df, updates, KEYS))
 
 
 def test_delete_prunes_and_drops_emptied_buckets(spark, base_df, tmp_path):
@@ -89,7 +94,7 @@ def test_delete_prunes_and_drops_emptied_buckets(spark, base_df, tmp_path):
         doom_all.unionByName(other).collect(), "term string, doc_id string"
     )
 
-    touched = t.delete(doomed)
+    touched = t.replace_group(base_df.where(F.lit(False)), KEYS, groups=doomed)
     assert 0 in touched and len(touched) == 2
 
     after = _by_bucket(_file_state(path))
@@ -99,7 +104,7 @@ def test_delete_prunes_and_drops_emptied_buckets(spark, base_df, tmp_path):
     for b in set(range(N_BUCKETS)) - set(touched):
         assert after[b] == before[b], f"untouched bucket {b} was modified"
 
-    expected = delete_by_key(base_df, doomed, KEYS)
+    expected = base_df.join(doomed, KEYS, "left_anti").select(*base_df.columns)
     assert _rows(t.read()) == _rows(expected)
 
 
@@ -109,8 +114,8 @@ def test_upsert_noop_on_empty_updates(spark, base_df, tmp_path):
     t.init(base_df)
     before = _file_state(path)
     empty = base_df.where(F.lit(False))
-    assert t.upsert(empty) == []
-    assert t.delete(empty.select(*KEYS)) == []
+    assert t.replace_group(empty, KEYS) == []
+    assert t.replace_group(empty, KEYS, groups=empty.select(*KEYS)) == []
     assert _file_state(path) == before
 
 
@@ -123,12 +128,12 @@ def test_layout_mismatch_refused(spark, base_df, tmp_path):
     wrong = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS * 2)
     upd = base_df.limit(1)
     with pytest.raises(ValueError, match="bucket layout mismatch"):
-        wrong.upsert(upd)
+        wrong.replace_group(upd, KEYS)
     with pytest.raises(ValueError, match="bucket layout mismatch"):
-        wrong.delete(upd.select(*KEYS))
+        wrong.replace_group(upd.where(F.lit(False)), KEYS, groups=upd)
     # the matching handle still works
     ok = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS)
-    assert ok.upsert(upd)
+    assert ok.replace_group(upd, KEYS)
 
 
 def test_reinit_clears_previous_load(spark, base_df, tmp_path):
@@ -166,11 +171,11 @@ def test_delete_everything_keeps_table_readable(spark, base_df, tmp_path):
     path = str(tmp_path / "tbl")
     t = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS)
     t.init(base_df)
-    t.delete(base_df.select(*KEYS))
+    t.replace_group(base_df.where(F.lit(False)), KEYS, groups=base_df)
     assert t.read().count() == 0
     assert t.read().columns == base_df.columns
-    # table keeps working: an upsert into the empty table
-    t.upsert(base_df.limit(2))
+    # table keeps working: a replace into the empty table
+    t.replace_group(base_df.limit(2), KEYS)
     assert t.read().count() == 2
 
 
@@ -191,8 +196,8 @@ def test_replace_group_with_empty_new_version(spark, base_df, tmp_path):
 
 def test_corrupt_data_file_raises_not_empty(spark, base_df, tmp_path):
     """A parquet read failure while data files still exist must RAISE
-    (ADVICE r2): treating it as an empty table would let the next
-    upsert overwrite the surviving rows with only the update rows."""
+    treating it as an empty table would let the next replace overwrite
+    the surviving rows with only the update rows."""
     path = str(tmp_path / "tbl")
     t = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS)
     t.init(base_df)
@@ -201,55 +206,15 @@ def test_corrupt_data_file_raises_not_empty(spark, base_df, tmp_path):
     with pytest.raises(Exception):
         t.read().count()
     with pytest.raises(Exception):
-        t.upsert(base_df.limit(3))
-
-
-def test_compact_defragments_without_changing_rows(spark, base_df, tmp_path):
-    """An append-style commit litters a bucket with an extra file;
-    compact rewrites over-budget buckets to ONE file each, leaves the
-    row multiset identical, and never touches buckets already within
-    budget (byte-identity)."""
-    path = str(tmp_path / "tbl")
-    t = BucketedTable(spark, path, KEYS, n_buckets=N_BUCKETS)
-    # single-task init -> exactly one file per bucket, so fragmentation
-    # below provably comes from the appended commit and the untouched-
-    # bucket byte-identity branch has real coverage
-    t.init(base_df.repartition(1))
-
-    # fragment ONE bucket the way a foreachBatch append sink would:
-    # commit an extra file of NEW keys that hash into that bucket (the
-    # table's key->bucket invariant holds afterwards)
-    cand = spark.createDataFrame(
-        [(f"x{i}", f"dx{i}", 50 + i) for i in range(64)],
-        "term string, doc_id string, tf int",
-    ).withColumn("b", F.pmod(F.xxhash64("term", "doc_id"), F.lit(N_BUCKETS)).cast("int"))
-    b0 = int(cand.first()["b"])
-    extra = cand.where(F.col("b") == b0).drop("b").limit(3)
-    extra.coalesce(1).write.mode("append").parquet(f"{path}/{BUCKET_COL}={b0}")
-
-    before_rows = _rows(t.read())
-    before = _by_bucket(_file_state(path))
-    assert len(before[b0]) == 2  # the bucket is fragmented
-
-    assert t.compact(max_files=1) == [b0]
-
-    after = _by_bucket(_file_state(path))
-    for b, files in after.items():
-        assert len(files) == 1  # every bucket is now a single file
-        if b != b0:  # within-budget buckets never rewritten
-            assert files == before[b]
-    assert _rows(t.read()) == before_rows
-
-    # idempotent: a second compact is a no-op, files untouched
-    assert t.compact(max_files=1) == []
-    assert _by_bucket(_file_state(path)) == after
+        t.replace_group(base_df.limit(3), KEYS)
 
 
 def test_kn_counts_ivm_through_bucketed_merge(spark, tmp_path):
     """The KN bigram-count IVM (training/textstats.py) wired through the
-    storage layer: the delta lands as a pruned MERGE (upsert of changed
-    counts + delete of exactly-cancelled rows); untouched u-buckets stay
-    byte-identical and the stored table equals the full recount."""
+    storage layer: the delta lands as one pruned replace_group over the
+    changed (u, w) keys (changed counts re-inserted, exactly-cancelled
+    rows left out); untouched u-buckets stay byte-identical and the
+    stored table equals the full recount."""
     from ocr_search_spark.training import textstats as TS
 
     docs = spark.read.parquet("/root/testdata/sf0.001/documents.parquet").limit(60)
@@ -276,15 +241,15 @@ def test_kn_counts_ivm_through_bucketed_merge(spark, tmp_path):
         .unionByName(TS.kn_bigram_counts(new_corpus.where(changed)).select("u", "w"))
         .distinct()
     )
-    # rows still present after the merge -> upsert; vanished -> delete.
+    # every changed key is replaced by its row in the merge, if any.
     # MATERIALIZE both before mutating the table: their lineage reads
-    # the stored files, and upsert() rewrites those files in place (the
-    # delta is batch-sized, so localizing it is the production shape too)
+    # the stored files, and replace_group rewrites those files in place
+    # (the delta is batch-sized, so localizing it is the production
+    # shape too)
     upserts = merged.join(delta_keys, ["u", "w"])
-    doomed = delta_keys.join(merged.select("u", "w"), ["u", "w"], "left_anti")
     upserts = spark.createDataFrame(upserts.collect(), upserts.schema)
-    doomed = spark.createDataFrame(doomed.collect(), doomed.schema)
-    touched = set(t.upsert(upserts)) | set(t.delete(doomed))
+    delta_keys = spark.createDataFrame(delta_keys.collect(), delta_keys.schema)
+    touched = set(t.replace_group(upserts, ["u", "w"], groups=delta_keys))
 
     want = sorted(map(tuple, TS.kn_bigram_counts(new_corpus).collect()))
     got = sorted(map(tuple, t.read().select("u", "w", "c_uw").collect()))

@@ -4,8 +4,9 @@ The import closure of the entry modules (an ``ast`` walk over every
 import statement, function-local ones included) must stay inside an
 explicit allowlist, so a module only a deleted branch used cannot creep
 back onto the job paths. The job CLI must offer exactly the job
-subcommands, and every public function of the query layer must have a
-caller outside the tests. No Spark session is started here.
+subcommands, and every public function, class and method of the
+closure must have a caller outside the tests. No Spark session is
+started here.
 """
 
 from __future__ import annotations
@@ -98,11 +99,20 @@ def test_cli_offers_exactly_the_jobs():
     assert sorted(choices.split(",")) == ["extract", "search", "serve", "sync"]
 
 
-# the query layer: what /pages and ``jobs.py search`` run
-QUERY_LAYER = ["api.py", "server.py", "operators/search.py"]
-# kept without a caller: whether phrases get a positional index or go
-# is ROADMAP item 1's decision
-UNCALLED_OK = {"phrase_search"}
+# Fixture writers: tests build the inputs of product decoders with them
+# (encode_pdf -> decode_pdf, encode_docx -> decode_docx, encode_pptx ->
+# decode_pptx, render_page -> ocr_page), build corpus tables with
+# documents_table, and ship the package to executors with ensure_shipped.
+# They stay beside the code they mirror; moving them under tests/ would
+# not remove a line.
+TEST_SUPPORT = {
+    "corpus.documents_table",
+    "deploy.ensure_shipped",
+    "training.docxmini.encode_docx",
+    "training.ocrglyph.render_page",
+    "training.pdfmini.encode_pdf",
+    "training.pptxmini.encode_pptx",
+}
 
 
 def _referenced_names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
@@ -124,21 +134,47 @@ def _referenced_names(tree: ast.AST, skip: ast.AST | None = None) -> set[str]:
     return names
 
 
-def test_query_layer_has_no_test_only_functions():
+def _public_defs(tree: ast.Module):
+    """(qualified name, node) of every public module-level function and
+    class, and of every public method of a public class."""
+    for node in tree.body:
+        if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            continue
+        if node.name.startswith("_"):
+            continue
+        yield node.name, node
+        if isinstance(node, ast.ClassDef):
+            for member in node.body:
+                if isinstance(member, ast.FunctionDef) and member.name[0] != "_":
+                    yield f"{node.name}.{member.name}", member
+
+
+def test_closure_has_no_test_only_functions():
+    """Every public def of every closure module has a caller in the
+    package, ``tools/`` or ``perfbench/``: code only tests reach goes
+    with its tests. A method counts as called when its name is read as
+    an attribute anywhere outside its own body."""
     callers = sorted(PKG.rglob("*.py")) + sorted((REPO / "tools").glob("*.py")) \
         + sorted((REPO / "perfbench").glob("*.py"))
     trees = {path: ast.parse(path.read_text()) for path in callers}
     uncalled = []
-    for rel in QUERY_LAYER:
-        path = PKG / rel
-        for node in trees[path].body:
-            if not isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+    for mod in sorted(ALLOWED):
+        path = _source(mod)
+        for qual, node in _public_defs(trees[path]):
+            name = f"{mod}.{qual}" if mod else qual
+            if name in TEST_SUPPORT:
                 continue
-            if node.name.startswith("_") or node.name in UNCALLED_OK:
-                continue
+            short = qual.rsplit(".", 1)[-1]
             if not any(
-                node.name in _referenced_names(tree, node if p == path else None)
+                short in _referenced_names(tree, node if p == path else None)
                 for p, tree in trees.items()
             ):
-                uncalled.append(f"{rel}:{node.name}")
-    assert uncalled == [], "query-layer functions only tests reach"
+                uncalled.append(name)
+    assert uncalled == [], "closure functions only tests reach"
+    # a stale exemption would let its function go uncalled unnoticed
+    exempt = {
+        f"{mod}.{qual}"
+        for mod in ALLOWED
+        for qual, _ in _public_defs(trees[_source(mod)])
+    }
+    assert TEST_SUPPORT - exempt == set(), "TEST_SUPPORT names no closure def"

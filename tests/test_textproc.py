@@ -107,129 +107,6 @@ def test_ocr_determinism_and_shape():
     assert all(w in textproc.OCR_VOCAB for w in t.split())
 
 
-def test_segment_cjk_search_mode():
-    """jieba cut_for_search analogue: contained dictionary sub-words are
-    emitted before each multi-char FMM word; plain FMM is unchanged."""
-    from ocr_search_spark.textproc import segment_cjk, segment_cjk_search
-
-    assert segment_cjk("機器學習") == ["機器學習"]
-    assert segment_cjk_search("機器學習") == ["學習", "機器學習"]  # 學習 ∈ dict
-    assert segment_cjk_search("資料庫") == ["資料", "資料庫"]  # 2-gram of 3-char word
-    assert segment_cjk_search("索引") == ["索引"]  # len-2 word: no expansion
-    assert segment_cjk_search("宇宙") == ["宇", "宙"]  # unmatched singles
-    # concatenation: expansion applies per segmented word
-    assert segment_cjk_search("資料庫索引") == ["資料", "資料庫", "索引"]
-
-
-def test_treebank_mode_parity(spark):
-    """FIDELITY T1 closure: treebank contraction splits agree between the
-    columnar and pure-Python tokenizers, including the adversarial CJK-
-    adjacency and whitespace-variant cases, and change nothing else."""
-    from pyspark.sql import functions as F
-
-    from ocr_search_spark.operators.tokenize import tokenize_text
-
-    cases = [
-        "I cannot do that",
-        "gonna gotta wanna lemme gimme",
-        "cannot",
-        "xcannot cannotx",          # no split: not whole tokens
-        "cannot機器學習 機cannot",   # CJK adjacency → python CJK branch
-        "cannot\tgonna\ncannot",    # tab/newline separators
-        "can not already split",
-        "",
-    ]
-    df = spark.createDataFrame([(c,) for c in cases], "t string")
-    got = {
-        r["t"]: r["toks"]
-        for r in df.select(
-            "t", textproc.english_tokens_col(F.col("t"), treebank=True).alias("toks")
-        ).collect()
-    }
-    for c in cases:
-        # python twin: english terms only (CJK branch excluded, as in the
-        # columnar english_tokens_col)
-        expect = [
-            t for t in tokenize_text(c, treebank=True)
-            if t.isascii()
-        ]
-        assert got[c] == expect, (c, got[c], expect)
-    # default mode unchanged: 'cannot' survives as one token
-    base = {
-        r["t"]: r["toks"]
-        for r in df.select(
-            "t", textproc.english_tokens_col(F.col("t")).alias("toks")
-        ).collect()
-    }
-    assert base["I cannot do that"] == ["cannot", "do"]
-    assert base["cannot"] == ["cannot"]
-
-
-def test_extract_main_content_density(spark):
-    """Block-density main-content extraction: tag-wrapped prose survives,
-    known chrome (pattern), short blocks, and link farms are dropped."""
-    from pyspark.sql import functions as F
-
-    body = "the quick brown fox jumps over the lazy dog repeatedly"
-    raw = (
-        f'<div class="nav">{body}</div>\n'
-        "home\n"
-        "copyright 2020 acme corp\n"
-        '<a href="#">x</a> <a href="#">y</a> <a href="#">z</a>\n'
-        f"plain second paragraph of real text\n"
-        "ok go\n"  # two words: below MIN_BLOCK_WORDS
-    )
-    df = spark.createDataFrame([(raw,)], "t string")
-    got = df.select(
-        textproc.extract_main_content_col(F.col("t")).alias("o")
-    ).collect()[0]["o"]
-    assert got == f"{body} plain second paragraph of real text"
-
-
-WN_CASES = {
-    # undouble (one per letter of WORDNET_UNDOUBLE)
-    "grabbing": "grab", "nodded": "nod", "jogging": "jog", "humming": "hum",
-    "planning": "plan", "stopped": "stop", "referred": "refer",
-    "submitted": "submit",
-    # e-restore c/u/v/z and [^n]g
-    "producing": "produce", "arguing": "argue", "saving": "save",
-    "organizing": "organize", "merged": "merge", "charging": "charge",
-    # guards hold: ll/ss kept, add/egg shape kept, -ng kept
-    "falling": "fall", "missing": "miss", "adding": "add", "egging": "egg",
-    "singing": "sing", "dressing": "dress",
-    # untouched by the new rules
-    "sorted": "sort", "needed": "need", "tables": "table",
-    "queries": "query", "classes": "class", "children": "child",
-    # documented residual deltas (pinned so a drift is visible)
-    "controlled": "controll", "changing": "chang", "housing": "hous",
-    "agreed": "agre",
-}
-
-
-def test_wordnet_mode_parity_and_cases(spark):
-    from ocr_search_spark.operators.tokenize import lemmatize_py
-
-    for w, want in WN_CASES.items():
-        assert lemmatize_py(w, wordnet=True) == want, (w, lemmatize_py(w, wordnet=True))
-    df = spark.createDataFrame([(w,) for w in WN_CASES], "w string")
-    got = {
-        r["w"]: r["l"]
-        for r in df.select(
-            "w", textproc.lemmatize_col(F.col("w"), wordnet=True).alias("l")
-        ).collect()
-    }
-    for w, want in WN_CASES.items():
-        assert got[w] == want, (w, got[w])
-    # default mode is untouched by the flag's existence
-    for w in WORDS:
-        assert lemmatize_py(w) == golden.lemmatize(w), w
-
-
-def test_wordnet_mode_tokenize_text(spark):
-    got = tokenize_text("The running jobs merged tables", wordnet=True)
-    assert got == ["run", "job", "merge", "table"]
-
-
 # --------------------------------------------------- NFC normalization
 
 def test_normalize_nfc_digest_and_changed(spark):
@@ -262,44 +139,3 @@ def test_normalize_nfc_null_text_yields_null_changed(spark):
     r = normalize_nfc(df).collect()[0]
     assert r.nfc_digest is None and r.changed is None
 
-
-def test_nltk_stopword_mode(spark):
-    from ocr_search_spark import textproc
-    from ocr_search_spark.operators.tokenize import tokenize_text
-    from pyspark.sql import functions as F
-
-    text = "about the merge during very own table being data until spark"
-    # default 60-word list keeps the NLTK-only stopwords (lemmatized)
-    default = tokenize_text(text)
-    assert "dure" in default or "during" in default or "dur" in default
-    # full-list mode drops them; content words survive identically
-    full = tokenize_text(text, nltk_stop=True)
-    assert set(full) == {"merge", "table", "data", "spark"}
-    # columnar twin agrees exactly
-    df = spark.createDataFrame([(text,)], "t string")
-    got = df.select(
-        textproc.english_tokens_col(F.col("t"), nltk_stop=True).alias("a")
-    ).head()["a"]
-    assert got == full
-    # list is the published 179-word corpus
-    assert len(textproc.NLTK_STOPWORDS) == 179
-    assert len(textproc.NLTK_STOPWORDS_SET) == 179
-
-
-def test_dehyphenate_reflow(spark):
-    from pyspark.sql import functions as F
-    from ocr_search_spark.textproc import dehyphenate_reflow_col
-
-    cases = [
-        ("exam-\nple", "example"),                  # D1 join, hyphen dropped
-        ("X-\nRay", "X-Ray"),                        # D2 uppercase keeps hyphen
-        ("a -\nb", "a -b"),                          # D2: no letter before '-'
-        ("one\ntwo", "one two"),                     # soft wrap → space
-        ("p1\n\n\np2", "p1\n\np2"),                  # 3 newlines → one break
-        ("  pad\t \nx \n\n", "pad x"),               # collapse + full trim
-        ("mid-\nstream flow re-\nuse", "midstream flow reuse"),
-    ]
-    df = spark.createDataFrame([(i, s) for i, (s, _) in enumerate(cases)], "i int, t string")
-    out = {r["i"]: r["c"] for r in df.select("i", dehyphenate_reflow_col(F.col("t")).alias("c")).collect()}
-    for i, (_, want) in enumerate(cases):
-        assert out[i] == want, (i, out[i], want)

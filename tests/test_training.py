@@ -256,19 +256,6 @@ def test_connected_components(spark):
     assert got == {1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 6, 7: 6}
 
 
-def test_prefer_original_unknown_formats_fallback(spark):
-    """ANSI-mode regression: a stem with none of pptx/docx/pdf must fall
-    back to 'pdf', not crash on element_at of an empty array."""
-    from ocr_search_spark.operators.maintenance import prefer_original
-
-    df = spark.createDataFrame(
-        [("a", ["txt"]), ("b", ["pdf", "pptx"]), ("c", [])],
-        "stem string, formats array<string>",
-    )
-    got = {r["stem"]: r["ori_format"] for r in prefer_original(df).collect()}
-    assert got == {"a": "pdf", "b": "pptx", "c": "pdf"}
-
-
 def test_char_ngrams_short_text(spark):
     """Spark sequence(1, 0) is DESCENDING — sub-n texts must yield zero
     grams, not two truncated ones, and lm scores must stay well-defined."""
@@ -2715,29 +2702,6 @@ def test_shard_manifest_validation(spark):
         shard_manifest(df, n_buckets=0)
 
 
-# ------------------------------------------------- index_drift
-
-
-def test_index_drift_statuses(spark):
-    from ocr_search_spark.operators.maintenance import index_drift
-
-    old = spark.createDataFrame(
-        [("a", "d1"), ("a", "d2"), ("b", "d1"), ("c", "d1"), ("e", "d1"), ("e", "d2")],
-        "term string, doc_id string",
-    )
-    new = spark.createDataFrame(
-        [("a", "d1"), ("b", "d1"), ("b", "d2"), ("d", "d9"), ("e", "d1"), ("e", "d3")],
-        "term string, doc_id string",
-    )
-    out = {r["term"]: r for r in index_drift(old, new).collect()}
-    assert (out["a"]["df_old"], out["a"]["df_new"], out["a"]["status"]) == (2, 1, "shrunk")
-    assert (out["b"]["delta"], out["b"]["status"]) == (1, "grew")
-    assert (out["c"]["df_new"], out["c"]["status"]) == (0, "vanished")
-    assert (out["d"]["df_old"], out["d"]["status"]) == (0, "new")
-    assert (out["e"]["delta"], out["e"]["status"]) == (0, "stable")
-    assert set(out) == {"a", "b", "c", "d", "e"}
-
-
 def test_char_error_rate_python_replica(spark):
     """Seeded fuzz: Spark levenshtein + CER math vs a pure-Python DP."""
     import random
@@ -2815,37 +2779,6 @@ def test_shard_manifest_python_replica(spark):
         for r in out
     }
     assert got == model
-
-
-def test_index_drift_python_replica(spark):
-    """Seeded fuzz over random posting sets, incl. docs in neither/both."""
-    import random
-
-    from ocr_search_spark.operators.maintenance import index_drift
-
-    rng = random.Random(11)
-    terms = [f"t{i}" for i in range(20)]
-    docs = [f"d{i}" for i in range(30)]
-    old = sorted({(rng.choice(terms), rng.choice(docs)) for _ in range(150)})
-    new = sorted({(rng.choice(terms), rng.choice(docs)) for _ in range(150)})
-    o = spark.createDataFrame(old, "term string, doc_id string")
-    n = spark.createDataFrame(new, "term string, doc_id string")
-    got = {r["term"]: r for r in index_drift(o, n).collect()}
-    from collections import Counter
-
-    co = Counter(t for t, _ in old)
-    cn = Counter(t for t, _ in new)
-    for t in set(co) | set(cn):
-        a, b = co.get(t, 0), cn.get(t, 0)
-        exp = (
-            "new" if a == 0 else "vanished" if b == 0
-            else "grew" if b > a else "shrunk" if b < a else "stable"
-        )
-        r = got[t]
-        assert (r["df_old"], r["df_new"], r["delta"], r["status"]) == (
-            a, b, b - a, exp
-        )
-    assert set(got) == set(co) | set(cn)
 
 
 def test_vocab_coverage_python_replica(spark):
