@@ -106,11 +106,12 @@ def main(argv: list[str] | None = None) -> int:
             )
         )
     elif args.job == "serve":
+        from . import serving_index
         from .server import PagesServer
 
-        postings = spark.read.parquet(args.postings).cache()
-        docs = spark.read.parquet(args.docs).cache()
-        postings.count(), docs.count()  # warm before accepting requests
+        postings = spark.read.parquet(args.postings)
+        docs = spark.read.parquet(args.docs)
+        serving_index.of(postings, docs)  # build before accepting requests
         srv = PagesServer(
             spark, postings, docs,
             host=args.host, port=args.port, png_root=args.png_root,

@@ -5,13 +5,14 @@ tokenized to a TermFreqDict and every distinct key is OR-matched with
 max-tf scoring (``/root/reference/src/ApiHandler/ApiHandler.const.js:28-34``,
 ``src/TermMatcher/TermMatcher.class.js:25-53``). There is no way to express
 "this AND that" or exclusion. This module adds the classic boolean
-retrieval layer on top of the same index, compiled to a pure DataFrame
-set-algebra plan:
+retrieval layer on top of the same index. It parses a query to an AST,
+and ``serving_index.PostingsIndex.boolean_top`` evaluates it as set
+algebra over sorted doc-code arrays:
 
-    term leaf     -> postings filter (pushes down to the term-keyed scan)
-    OR            -> union + distinct (one shuffle on doc_id)
-    AND           -> left-semi join chain on doc_id
-    AND NOT       -> left-anti join on doc_id
+    term leaf     -> the term's postings slice
+    OR            -> union
+    AND           -> intersection
+    AND NOT       -> difference
 
 Negation is only admitted as a conjunct next to at least one positive
 conjunct (``x AND NOT y``); a bare ``NOT y``, ``NOT`` under ``OR``, or an
@@ -20,7 +21,7 @@ a posting list is the whole corpus, which is never materializable at scale.
 
 Scoring stays pinned to the reference semantics: ``score = max(tf)`` over
 the query's positive term leaves, ties broken by doc_id ascending, top-k
-via TakeOrderedAndProject (SURVEY §2.4 Q3-Q5).
+(SURVEY §2.4 Q3-Q5).
 
 Grammar (operators are case-sensitive UPPERCASE so that lowercase
 ``and``/``or``/``not`` remain ordinary content words -- they are stopwords
@@ -44,31 +45,15 @@ stopword, a 1-char token) is dropped from its AND/OR list, mirroring the
 reference's silent drop of non-index tokens; a word that normalizes to
 SEVERAL tokens (punctuation split) becomes an implicit AND of them.
 
-At 100 TB: every leaf is a term-keyed index lookup (partition-prunable on a
-term-bucketed postings table), the set algebra is doc_id-keyed semi/anti
-joins over those narrow lists, and nothing ever scans the corpus.
+At 100 TB: every leaf is a term-keyed lookup, the set algebra runs over
+those narrow doc lists, and nothing ever scans the corpus.
 """
 
 from __future__ import annotations
 
 from dataclasses import dataclass
 
-from pyspark.sql import DataFrame
-from pyspark.sql import functions as F
-
-from .search import DEFAULT_MAX_RETURN
 from .tokenize import tokenize_text
-
-__all__ = [
-    "Term",
-    "And",
-    "Or",
-    "Not",
-    "parse_boolean",
-    "term_leaves",
-    "boolean_search",
-]
-
 
 # --------------------------------------------------------------------- AST
 
@@ -219,7 +204,7 @@ def parse_boolean(query: str):
     return ast
 
 
-# ------------------------------------------------------------- compilation
+# ---------------------------------------------------------------- checks
 
 
 def _check_negation(node) -> None:
@@ -262,54 +247,3 @@ def term_leaves(node) -> list[str]:
 
     walk(node, False)
     return sorted(out)
-
-
-def _doc_set(node, postings: DataFrame) -> DataFrame:
-    """doc_id set (unique rows) for a positive node."""
-    if isinstance(node, Term):
-        return postings.where(F.col("term") == node.term).select("doc_id")
-    if isinstance(node, Or):
-        sets = [_doc_set(c, postings) for c in node.children]
-        cur = sets[0]
-        for s in sets[1:]:
-            cur = cur.unionByName(s)
-        return cur.distinct()
-    if isinstance(node, And):
-        pos = [c for c in node.children if not isinstance(c, Not)]
-        neg = [c.child for c in node.children if isinstance(c, Not)]
-        cur = _doc_set(pos[0], postings)
-        for p in pos[1:]:
-            cur = cur.join(_doc_set(p, postings), "doc_id", "leftsemi")
-        for n in neg:
-            cur = cur.join(_doc_set(n, postings), "doc_id", "left_anti")
-        return cur
-    raise TypeError(f"unexpected boolean node {node!r}")
-
-
-def boolean_search(
-    postings: DataFrame,
-    query: str,
-    max_return: int = DEFAULT_MAX_RETURN,
-) -> DataFrame:
-    """Boolean match + reference scoring: (doc_id, score) with
-    score = max(tf) over the query's positive term leaves, score desc /
-    doc_id asc, top ``max_return``."""
-    spark = postings.sparkSession
-    ast = parse_boolean(query)
-    if ast is None:
-        return spark.createDataFrame([], "doc_id string, score bigint")
-    _check_negation(ast)
-    matched = _doc_set(ast, postings)
-    vocab = term_leaves(ast)
-    terms_df = spark.createDataFrame([(t,) for t in vocab], "term string")
-    scores = (
-        postings.join(F.broadcast(terms_df), "term")
-        .groupBy("doc_id")
-        .agg(F.max("tf").alias("score"))
-    )
-    return (
-        matched.join(scores, "doc_id", "left")
-        .select("doc_id", F.coalesce(F.col("score"), F.lit(0)).cast("long").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(max_return)
-    )

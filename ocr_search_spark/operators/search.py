@@ -72,86 +72,3 @@ def search(
     # query-side tf is discarded: search terms are the distinct keys
     # (ApiHandler.const.js:33 Object.keys)
     return match_terms(postings, list(term_freq_dict(query).keys()), docs, max_return)
-
-
-def match_terms_fuzzy(
-    postings: DataFrame,
-    terms: list[str],
-    max_dist: int = 1,
-    max_return: int = DEFAULT_MAX_RETURN,
-) -> DataFrame:
-    """Typo-tolerant search: a query term also matches vocabulary terms
-    within ``max_dist`` Levenshtein edits (the reference has no fuzzy
-    mode at all — TermMatcher.class.js:25 is exact-match only).
-
-    Scale shape: edit distance runs against the DISTINCT vocabulary
-    (∝ unique terms, not postings), and the vocabulary×query pairing is
-    pruned BEFORE the Levenshtein compare by the length prefilter
-    (|len(term) − len(q)| ≤ max_dist, a necessary condition for edit
-    distance ≤ max_dist) expressed as a join predicate, so only a thin
-    length band of the vocabulary reaches the O(len²) compare. The
-    classic shared-first-character prefilter is deliberately NOT used:
-    it is unsound for edit distance ("spark"→"zpark" is one
-    substitution yet differs in the first character) and would
-    silently lose recall exactly on first-letter typos. Matched vocabulary
-    terms then flow through the normal Q2-Q5 scoring path (max tf,
-    doc_id tie-break)."""
-    spark = postings.sparkSession
-    if not terms:
-        # no query terms -> no matches: return the empty result directly
-        # instead of running a sentinel term through the vocabulary scan
-        return (
-            postings.groupBy("doc_id")
-            .agg(F.max("tf").alias("score"))
-            .limit(0)
-        )
-    terms_df = literal_df(spark, sorted(set(terms)), "q")
-    vocab = postings.select("term").distinct()
-    cand = (
-        vocab.join(
-            F.broadcast(terms_df),
-            F.abs(F.length("term") - F.length("q")) <= max_dist,
-        )
-        .where(F.levenshtein(F.col("term"), F.col("q")) <= max_dist)
-        .select("term")
-        .distinct()
-    )
-    return (
-        postings.join(F.broadcast(cand), "term")
-        .groupBy("doc_id")
-        .agg(F.max("tf").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(max_return)
-    )
-
-
-def prefix_search(
-    postings: DataFrame,
-    prefix: str,
-    max_return: int = DEFAULT_MAX_RETURN,
-    max_terms: int = 1000,
-) -> DataFrame:
-    """Wildcard term search (``val*``): expand the prefix against the
-    term dictionary (one filtered DISTINCT over the index — on a sorted/
-    bucketed postings table this is a range scan), then score matched
-    docs with the pinned max-tf semantics over ALL expanded terms.
-    Raises when the expansion exceeds ``max_terms``
-    (an unselective prefix like 'a*' expands to a scan-sized OR; the
-    reference behavior for runaway queries is an explicit error, not a
-    silent corpus scan)."""
-    p = prefix.lower().rstrip("*")
-    if not p:
-        raise ValueError("prefix must be non-empty")
-    matched = postings.where(F.col("term").startswith(p))
-    n_terms = matched.select("term").distinct().count()
-    if n_terms > max_terms:
-        raise ValueError(
-            f"prefix {prefix!r} expands to {n_terms} terms "
-            f"(> max_terms={max_terms}) — refusing the scan-sized OR"
-        )
-    return (
-        matched.groupBy("doc_id")
-        .agg(F.max("tf").cast("long").alias("score"))
-        .orderBy(F.desc("score"), F.asc("doc_id"))
-        .limit(max_return)
-    )

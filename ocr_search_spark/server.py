@@ -10,9 +10,11 @@ ApiHandler.const.js):
   (``express.static('data/png')``): 200 with bytes, 404 outside/missing;
   traversal outside the root is refused.
 
-The server owns no engine state: it closes over a SparkSession plus the
-postings/docs DataFrames and serves each request through the same public
-API the tests drive. ``port=0`` binds an ephemeral port (``srv.port``).
+The server closes over a SparkSession plus the postings/docs DataFrames
+and serves each request through the same public API the tests drive. It
+answers from the index ``serving_index.of`` holds for the pair, built by
+the first /pages request or before start (``jobs.py serve``): no later
+request runs a Spark job. ``port=0`` binds an ephemeral port (``srv.port``).
 """
 
 from __future__ import annotations

@@ -88,8 +88,9 @@ def test_http_server_end_to_end(spark, tiny_index, tmp_path):
 
     def get(url):
         try:
-            # generous: the first /pages request runs a real Spark job and
-            # this box's wall-clock stretches 2-3x under concurrent load
+            # generous: the first /pages request builds the serving index
+            # (Spark reads both tables; later requests run no Spark job),
+            # and wall-clock stretches 2-3x on a loaded host
             with urllib.request.urlopen(url, timeout=180) as r:
                 return r.status, r.read()
         except urllib.error.HTTPError as e:
@@ -222,3 +223,26 @@ def test_search_pages_unknown_mode_is_400(spark, tiny_index):
     postings, docs = tiny_index
     err = _err(spark, postings, docs, {"searchTerm": "x", "mode": "regex"})
     assert err.status == 400 and "mode" in err.message
+
+
+def test_search_pages_ranks_only_cataloged_docs(spark, tiny_index):
+    """A doc without a catalog row takes no slot of the top k: with the
+    top doc's row gone, every mode still returns maxReturn pages."""
+    postings, docs = tiny_index
+    p2 = postings.unionByName(
+        spark.createDataFrame(
+            [("tablet", f"doc{i}", i + 1) for i in range(5)],
+            "term string, doc_id string, tf int",
+        )
+    )
+    partial = docs.where("doc_id != 'doc4'")  # doc4 holds the top tf
+    for params in (
+        {"searchTerm": "table OR tablet", "mode": "boolean"},
+        {"searchTerm": "table", "mode": "boolean"},
+        {"searchTerm": "tab*", "mode": "prefix"},
+        {"searchTerm": "tble", "mode": "fuzzy"},
+        {"searchTerm": "table"},
+    ):
+        out = api.search_pages(spark, p2, partial, {**params, "maxReturn": "3"})
+        got = [p["oriFilePath"] for p in out["pageList"]]
+        assert got == ["data/pdf/f3.pdf", "data/pdf/f2.pdf", "data/pdf/f1.pdf"], params

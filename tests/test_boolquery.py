@@ -1,5 +1,5 @@
-"""Boolean retrieval: parser algebra + plan parity vs a brute-force
-Python set evaluation over a tiny hand-built index (session-10).
+"""Boolean retrieval: parser algebra + serving-index parity vs a
+brute-force Python set evaluation over a tiny hand-built index.
 
 The reference has no boolean surface at all (flat TermFreqDict OR-match,
 ApiHandler.const.js:28-34); the oracle here is first principles: evaluate
@@ -7,18 +7,18 @@ the same AST with Python sets over the same postings rows."""
 
 from __future__ import annotations
 
+import pyarrow as pa
 import pytest
-from pyspark.sql import functions as F
 
 from ocr_search_spark.operators.boolquery import (
     And,
     Not,
     Or,
     Term,
-    boolean_search,
     parse_boolean,
     term_leaves,
 )
+from ocr_search_spark.serving_index import PostingsIndex
 
 # ------------------------------------------------------------------ parser
 
@@ -102,13 +102,25 @@ _DOCS = {
 
 
 @pytest.fixture(scope="module")
-def tiny_index(spark):
+def tiny_index():
     post_rows = [
         (t, d, toks.count(t)) for d, toks in _DOCS.items() for t in set(toks)
     ]
-    return spark.createDataFrame(
-        post_rows, "term string, doc_id string, tf long"
-    ).cache()
+    term, doc_id, tf = zip(*post_rows)
+    postings = pa.table({"term": term, "doc_id": doc_id, "tf": pa.array(tf, pa.int64())})
+    docs = pa.table({
+        "doc_id": list(_DOCS),
+        "ori_file_path": [f"{d}.pdf" for d in _DOCS],
+        "page_idx": [1] * len(_DOCS),
+        "img_path": [f"{d}.png" for d in _DOCS],
+    })
+    return PostingsIndex(postings, docs)
+
+
+def _boolean(index, query, max_return=20):
+    """[(doc_id, score)] of ``index.boolean_top``, ranked."""
+    codes, scores = index.boolean_top(query, max_return)
+    return list(zip(index.doc_id.take(pa.array(codes)).to_pylist(), scores.tolist()))
 
 
 def _brute(node):
@@ -146,55 +158,43 @@ def _brute(node):
         "missingterm OR nebula",
     ],
 )
-def test_matches_equal_brute_force(spark, tiny_index, query):
+def test_matches_equal_brute_force(tiny_index, query):
     ast = parse_boolean(query)
-    got = {
-        r["doc_id"]
-        for r in boolean_search(tiny_index, query, max_return=len(_DOCS)).collect()
-    }
+    got = {d for d, _ in _boolean(tiny_index, query, max_return=len(_DOCS))}
     assert got == _brute(ast)
 
 
-def test_search_scores_are_max_tf_over_positive_leaves(spark, tiny_index):
-    rows = boolean_search(tiny_index, "merge AND NOT summit").collect()
+def test_search_scores_are_max_tf_over_positive_leaves(tiny_index):
     # matched: d1, d2, d4 — score = max tf among positive leaves {merge}
-    assert [(r["doc_id"], r["score"]) for r in rows] == [
+    assert _boolean(tiny_index, "merge AND NOT summit") == [
         ("d2", 2),
         ("d1", 1),
         ("d4", 1),
     ]
 
 
-def test_search_order_is_score_desc_doc_asc_with_limit(spark, tiny_index):
-    rows = boolean_search(tiny_index, "table value", max_return=2).collect()
+def test_search_order_is_score_desc_doc_asc_with_limit(tiny_index):
     # d4 has tf(table)=2 -> score 2; d1/d5/d6 tie at 1, doc_id asc
-    assert [(r["doc_id"], r["score"]) for r in rows] == [("d4", 2), ("d1", 1)]
+    assert _boolean(tiny_index, "table value", max_return=2) == [
+        ("d4", 2), ("d1", 1),
+    ]
 
 
-def test_unbounded_negation_rejected(spark, tiny_index):
+def test_unbounded_negation_rejected(tiny_index):
     for q in ["NOT nebula", "nebula OR NOT zephyr", "NOT nebula NOT zephyr"]:
         with pytest.raises(ValueError):
-            boolean_search(tiny_index, q)
+            _boolean(tiny_index, q)
 
 
-def test_empty_query_returns_empty(spark, tiny_index):
-    assert boolean_search(tiny_index, "the of a").count() == 0
+def test_empty_query_returns_empty(tiny_index):
+    assert _boolean(tiny_index, "the of a") == []
 
 
-def test_phrase_without_positional_index_raises(spark, tiny_index):
+def test_phrase_without_positional_index_raises(tiny_index):
     # the index is positionless: a multi-word quote is refused at parse
-    # time, before any plan is built
+    # time, before the index is read
     with pytest.raises(ValueError, match="phrase"):
         parse_boolean('"table value"')
     with pytest.raises(ValueError, match="phrase"):
-        boolean_search(tiny_index, 'merge AND NOT "table value"')
+        _boolean(tiny_index, 'merge AND NOT "table value"')
 
-
-def test_plan_has_no_python_udf(spark, tiny_index):
-    """The compiled plan is pure set algebra: no BatchEvalPython /
-    ArrowEvalPython stages anywhere."""
-    df = boolean_search(
-        tiny_index, '(nebula OR "table" value) AND merge AND NOT summit'
-    )
-    plan = df._jdf.queryExecution().executedPlan().toString()
-    assert "BatchEvalPython" not in plan and "ArrowEvalPython" not in plan

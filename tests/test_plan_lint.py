@@ -78,7 +78,6 @@ def test_product_plans_have_no_cartesian_or_unbounded_bnlj(spark, tmp_path):
     plans = product_plans(spark, str(tmp_path))
     assert set(plans) == {
         "term_postings[arrow]", "term_postings[columnar]", "match_terms",
-        "match_terms_fuzzy", "prefix_search", "boolean_search",
         "merge_doc_batch", "sync_postings", "sync_membership", "sync_filelib",
     }
     for name, df in plans.items():
@@ -93,6 +92,3 @@ def test_product_plans_have_no_cartesian_or_unbounded_bnlj(spark, tmp_path):
             if "Location:" in line and source in line
         ]
         assert scans == [], (name, scans)
-    # the fuzzy matcher's length-band join is the one BNLJ, and it is
-    # proven bounded (the broadcast side is the literal query terms)
-    assert _audit_bnlj(plans["match_terms_fuzzy"]) == (1, 0)

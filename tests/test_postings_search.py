@@ -174,22 +174,26 @@ def test_incremental_correlations_equals_full(spark, corpus_df):
 
 
 def test_prefix_search_expansion_and_guard(spark):
-    from ocr_search_spark.operators.search import prefix_search
+    from ocr_search_spark.serving_index import PostingsIndex
 
     postings = spark.createDataFrame(
         [("value", "d1", 3), ("valuable", "d2", 5), ("vat", "d3", 9),
          ("value", "d2", 1)],
         "term string, doc_id string, tf long",
     )
-    got = [(r["doc_id"], r["score"]) for r in prefix_search(postings, "val*").collect()]
+    docs = spark.createDataFrame(
+        [(d, f"{d}.pdf", 1, f"{d}.png") for d in ("d1", "d2", "d3")],
+        "doc_id string, ori_file_path string, page_idx int, img_path string",
+    )
+    index = PostingsIndex.from_frames(postings, docs)
+    codes, scores = index.prefix_top("val*", 20)
+    got = list(zip(index.doc_id.take(codes).to_pylist(), scores.tolist()))
     # d2: max(valuable 5, value 1) = 5; d1: 3; d3 (vat) not val-prefixed
     assert got == [("d2", 5), ("d1", 3)]
-    import pytest as _pytest
-
-    with _pytest.raises(ValueError, match="max_terms"):
-        prefix_search(postings, "v", max_terms=2)
-    with _pytest.raises(ValueError):
-        prefix_search(postings, "*")
+    with pytest.raises(ValueError, match="max_terms"):
+        index.prefix_top("v", 20, max_terms=2)
+    with pytest.raises(ValueError):
+        index.prefix_top("*", 20)
 
 
 def _edit_distance(a: str, b: str) -> int:
@@ -228,13 +232,21 @@ FUZZY_QUERIES = [
 ]
 
 
+@pytest.fixture(scope="module")
+def served_index(postings_df, corpus_df):
+    """The /pages index over the corpus postings and a catalog of every
+    corpus doc."""
+    from ocr_search_spark.operators.maintenance import doc_catalog
+    from ocr_search_spark.serving_index import PostingsIndex
+
+    return PostingsIndex.from_frames(postings_df, doc_catalog(corpus_df))
+
+
 @pytest.mark.parametrize("terms", FUZZY_QUERIES, ids=lambda t: "+".join(t) or "empty")
 @pytest.mark.parametrize("k", [3, 20])
-def test_match_terms_fuzzy_matches_brute_force(terms, k, postings_df, golden_postings):
-    got = [
-        (r["doc_id"], r["score"])
-        for r in search.match_terms_fuzzy(postings_df, terms, max_return=k).collect()
-    ]
+def test_match_terms_fuzzy_matches_brute_force(terms, k, served_index, golden_postings):
+    codes, scores = served_index.fuzzy_top(terms, k)
+    got = list(zip(served_index.doc_id.take(codes).to_pylist(), scores.tolist()))
     assert got == _fuzzy_brute_force(golden_postings, terms, k), terms
 
 

@@ -24,7 +24,8 @@ ROOTS = ["jobs", "__main__", "api", "server", "golden", "corpus", "deploy"]
 # dotted names relative to the package; "" is the package itself
 ALLOWED = {
     "", "__main__", "api", "corpus", "deploy", "golden", "jobs",
-    "pipeline", "schemas", "server", "session", "storage", "sync", "textproc",
+    "pipeline", "schemas", "server", "serving_index", "session", "storage",
+    "sync", "textproc",
     "operators", "operators.boolquery", "operators.convert", "operators.extract",
     "operators.maintenance", "operators.search", "operators.tokenize",
     "streaming", "streaming.index_maintain",

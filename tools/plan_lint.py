@@ -1,13 +1,13 @@
 """Physical-plan lint over the product's query and build plans.
 
-For each plan the jobs run — the top-k matchers behind ``search`` and
-``serve`` (exact, fuzzy, prefix, boolean), the postings build over the
-arrow and columnar extraction paths, one ``merge_doc_batch`` of the
-streaming maintenance path, and the postings, membership and file
-library frames one ``sync_once`` poll commits — it builds the DataFrame
-over a small synthetic corpus and inspects the physical plan (no
-collect) for the two operators that turn into corpus-squared work at
-scale:
+For each plan the jobs run — the top-k matcher behind ``search``
+(``serve`` answers from a driver-side index and plans no query), the
+postings build over the arrow and columnar extraction paths, one
+``merge_doc_batch`` of the streaming maintenance path, and the postings,
+membership and file library frames one ``sync_once`` poll commits — it
+builds the DataFrame over a small synthetic corpus and inspects the
+physical plan (no collect) for the two operators that turn into
+corpus-squared work at scale:
 
 * ``CartesianProduct``        — always a violation (O(N·M) rows moved);
 * ``BroadcastNestedLoopJoin`` — a violation unless the broadcast side
@@ -135,18 +135,13 @@ def audit(df, plan: str) -> dict:
 
 
 def product_plans(spark, work_dir: str) -> dict:
-    """name -> DataFrame for every product plan the lint covers. Query
-    plans read a stored postings table, as ``jobs.py search``/``serve``
-    do; the merge plan is the one ``merge_doc_batch`` commits."""
+    """name -> DataFrame for every product plan the lint covers. The
+    query plan reads a stored postings table, as ``jobs.py search``
+    does; the merge plan is the one ``merge_doc_batch`` commits."""
     from ocr_search_spark import corpus
-    from ocr_search_spark.operators.boolquery import boolean_search
     from ocr_search_spark.operators.extract import extract_spans
     from ocr_search_spark.operators.maintenance import doc_catalog
-    from ocr_search_spark.operators.search import (
-        match_terms,
-        match_terms_fuzzy,
-        prefix_search,
-    )
+    from ocr_search_spark.operators.search import match_terms
     from ocr_search_spark.operators.tokenize import term_postings
     from ocr_search_spark.streaming.index_maintain import (
         merge_doc_batch,
@@ -166,11 +161,6 @@ def product_plans(spark, work_dir: str) -> dict:
     postings = spark.read.parquet(f"{work_dir}/postings")
     catalog = spark.read.parquet(f"{work_dir}/docs")
     plans["match_terms"] = match_terms(postings, ["table", "scan"], docs=catalog)
-    plans["match_terms_fuzzy"] = match_terms_fuzzy(postings, ["tble", "sprk"])
-    plans["prefix_search"] = prefix_search(postings, "merg*")
-    plans["boolean_search"] = boolean_search(
-        postings, "(table OR merge) AND NOT scan"
-    )
 
     # merge_doc_batch commits through BucketedTable._commit_touched; record
     # the frame it is handed, on this table instance only
