@@ -30,6 +30,13 @@ import json
 import sys
 
 
+def _positive_int(value: str) -> int:
+    n = int(value)
+    if n < 1:
+        raise argparse.ArgumentTypeError(f"must be a positive integer, got {value}")
+    return n
+
+
 def _add_common(p: argparse.ArgumentParser) -> None:
     p.add_argument("--cores", type=int, default=None, help="local[N] cores")
 
@@ -55,7 +62,7 @@ def main(argv: list[str] | None = None) -> int:
     ps = sub.add_parser("search", help="top-k query against stored postings")
     ps.add_argument("--postings", required=True, help="postings parquet dir")
     ps.add_argument("--query", required=True)
-    ps.add_argument("--max-return", type=int, default=20)
+    ps.add_argument("--max-return", type=_positive_int, default=20)
     _add_common(ps)
 
     pv = sub.add_parser("serve", help="HTTP /pages facade over stored tables")

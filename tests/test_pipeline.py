@@ -16,7 +16,7 @@ import shutil
 import pytest
 from pyspark.sql import functions as F
 
-from ocr_search_spark import pipeline
+from ocr_search_spark import golden, pipeline
 
 
 @pytest.fixture()
@@ -289,12 +289,27 @@ def test_jobs_cli_extract_and_search(spark, corpus_df, tmp_path, capsys):
     assert summary["run_id"] == "cli"
     assert summary["buckets_processed"] == 4
 
-    rc = jobs.main(
-        ["search", "--postings", f"{out}/term_postings", "--query", "tables merged"]
-    )
+    postings = f"{out}/term_postings"
+    rc = jobs.main(["search", "--postings", postings, "--query", "tables merged"])
     assert rc == 0
     hits = json.loads(capsys.readouterr().out.strip().splitlines()[-1])["hits"]
-    assert hits and all(h["score"] >= 1 for h in hits)
+    stored = {
+        (r["term"], r["doc_id"]): r["tf"] for r in spark.read.parquet(postings).collect()
+    }
+    want = golden.search(stored, "tables merged", 20)
+    assert want and [(h["doc_id"], h["score"]) for h in hits] == want
+
+
+@pytest.mark.parametrize("k", ["0", "-3"])
+def test_jobs_cli_search_rejects_bad_max_return(k, capsys):
+    """A max-return below 1 is a usage error (exit 2), caught before a
+    Spark session starts."""
+    from ocr_search_spark import jobs
+
+    with pytest.raises(SystemExit) as exc:
+        jobs.main(["search", "--postings", "p", "--query", "q", "--max-return", k])
+    assert exc.value.code == 2
+    assert "--max-return" in capsys.readouterr().err
 
 
 def test_binary_source_pipeline_resume(spark, out_dir, tmp_path):

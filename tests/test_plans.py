@@ -56,17 +56,39 @@ def test_postings_single_shuffle(spark, corpus_df):
     assert "partial_count" in plan_of(df), "map-side partial aggregation lost"
 
 
-def test_search_broadcasts_and_takeordered(spark, corpus_df):
+def test_search_is_one_takeordered_scan(spark, corpus_df, tmp_path):
+    """A stored-postings query is one Spark job of one stage: the term
+    filter is pushed into the Parquet scan and the top-n runs as a
+    TakeOrderedAndProject, with no aggregation exchange and no join."""
+    from ocr_search_spark.operators import search
     from ocr_search_spark.operators.extract import extract_spans_columnar
-    from ocr_search_spark.operators.search import match_terms
     from ocr_search_spark.operators.tokenize import term_postings
 
     ext = extract_spans_columnar(corpus_df.select("doc_id", "spans"))
-    postings = term_postings(ext.select("doc_id", "spans"))
-    p = plan_of(match_terms(postings, ["table", "scan"], max_return=20))
-    assert "BroadcastHashJoin" in p, "query terms must broadcast"
-    assert "TakeOrderedAndProject" in p, "top-k must not be a global sort"
-    assert "SortMergeJoin" not in p
+    term_postings(ext.select("doc_id", "spans")).write.parquet(str(tmp_path / "p"))
+    postings = spark.read.parquet(str(tmp_path / "p"))
+
+    top = search._top_postings(postings, ["scan", "table"], None, 20)
+    t = tree_of(top)
+    assert "TakeOrderedAndProject" in t, "top-k must not be a global sort"
+    for node in ("Exchange", "Join", "Aggregate"):
+        assert node not in t, node
+    assert "PushedFilters: [In(term, [scan,table])]" in plan_of(top)
+
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+
+    def work(query: str, gid: str) -> tuple[int, int]:
+        sc.setJobGroup(gid, "one stored search")
+        try:
+            search.search(spark, postings, query).collect()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        jobs = tracker.getJobIdsForGroup(gid)
+        return len(jobs), sum(len(tracker.getJobInfo(j).stageIds) for j in jobs)
+
+    assert work("table scan", "plans-search-terms") == (1, 1)
+    assert work("the of and", "plans-search-stopwords") == (0, 0)
 
 
 def test_custom_joins_avoid_nested_loop(spark):

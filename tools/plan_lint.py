@@ -1,8 +1,8 @@
 """Physical-plan lint over the product's query and build plans.
 
-For each plan the jobs run — the top-k matcher behind ``search``
-(``serve`` answers from a driver-side index and plans no query), the
-postings build over the arrow and columnar extraction paths, one
+For each plan the jobs run — the term-filtered top-n scan behind
+``search`` (``serve`` answers from a driver-side index and plans no
+query), the postings build over the arrow and columnar extraction paths, one
 ``merge_doc_batch`` of the streaming maintenance path, and the postings,
 membership and file library frames one ``sync_once`` poll commits — it
 builds the DataFrame over a small synthetic corpus and inspects the
@@ -26,6 +26,9 @@ corpus-squared work at scale:
   Anything that reaches a file/table scan un-aggregated (or via a
   collect_*) is a real violation: that broadcast ships O(corpus) bytes
   to every task.
+
+The query plan must also carry no shuffle ``Exchange``: a stored search
+is one scan and one top-n.
 
 It also prints the shuffle-exchange count per plan so plan growth shows.
 
@@ -52,6 +55,8 @@ _NODE_RE = re.compile(r"^\(\d+\) (\w+)", re.M)
 _SCALAR_ONLY_AGG = re.compile(r"keys=\[\]")
 _GROWING_AGG = re.compile(r"collect_list|collect_set")
 _RANGE_ROWS = re.compile(r"Range \((-?\d+), (-?\d+)")
+
+_SHUFFLE_FREE = {"match_terms"}  # plans that must not shuffle
 
 
 def plan_string(df) -> str:
@@ -134,14 +139,26 @@ def audit(df, plan: str) -> dict:
     }
 
 
+def violation(name: str, info: dict) -> str | None:
+    """The verdict for a plan that fails the lint, else None."""
+    if info["cartesian"]:
+        return "CARTESIAN"
+    if info["bnlj_bad"]:
+        return "BNLJ-UNBOUNDED"
+    if name in _SHUFFLE_FREE and info["shuffles"]:
+        return "SHUFFLE"
+    return None
+
+
 def product_plans(spark, work_dir: str) -> dict:
     """name -> DataFrame for every product plan the lint covers. The
-    query plan reads a stored postings table, as ``jobs.py search``
-    does; the merge plan is the one ``merge_doc_batch`` commits."""
+    query plan is the frame ``match_terms`` collects, over a stored
+    postings table as ``jobs.py search`` reads it; the merge plan is the
+    one ``merge_doc_batch`` commits."""
     from ocr_search_spark import corpus
     from ocr_search_spark.operators.extract import extract_spans
     from ocr_search_spark.operators.maintenance import doc_catalog
-    from ocr_search_spark.operators.search import match_terms
+    from ocr_search_spark.operators.search import _top_postings
     from ocr_search_spark.operators.tokenize import term_postings
     from ocr_search_spark.streaming.index_maintain import (
         merge_doc_batch,
@@ -160,7 +177,7 @@ def product_plans(spark, work_dir: str) -> dict:
     doc_catalog(docs).write.parquet(f"{work_dir}/docs")
     postings = spark.read.parquet(f"{work_dir}/postings")
     catalog = spark.read.parquet(f"{work_dir}/docs")
-    plans["match_terms"] = match_terms(postings, ["table", "scan"], docs=catalog)
+    plans["match_terms"] = _top_postings(postings, ["scan", "table"], catalog, 20)
 
     # merge_doc_batch commits through BucketedTable._commit_touched; record
     # the frame it is handed, on this table instance only
@@ -234,15 +251,11 @@ def main() -> int:
                 continue
             t0 = time.time()
             info = audit(df, plan_string(df))
-            verdict = "ok"
-            if info["cartesian"]:
-                verdict = "CARTESIAN"
+            verdict = violation(name, info)
+            if verdict:
                 violations.append(name)
-            elif info["bnlj_bad"]:
-                verdict = "BNLJ-UNBOUNDED"
-                violations.append(name)
-            elif info["bnlj_ok"]:
-                verdict = "bnlj-bounded"
+            else:
+                verdict = "bnlj-bounded" if info["bnlj_ok"] else "ok"
             print(
                 f"{verdict:>18}  {name}: shuffles={info['shuffles']} "
                 f"bhj={info['bhj']} smj={info['smj']} "
